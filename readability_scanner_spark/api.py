@@ -13,22 +13,20 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from readability_scanner_spark.extraction.readability import extract_main_content
 from readability_scanner_spark.functions.formulas import all_scores
 from readability_scanner_spark.functions.textstats import calculate_text_statistics
 from readability_scanner_spark.operators.analytics import word_topk
-from readability_scanner_spark.operators.io_ops import export_csv, export_ml_dataset
+from readability_scanner_spark.operators.io_ops import export_csv
 from readability_scanner_spark.operators.reports import (
     compat_view,
     daily_report_windows,
     readability_report,
 )
 from readability_scanner_spark.operators.search import text_search
-from readability_scanner_spark.plans.pipeline import extract_and_score, run_pipeline
-from readability_scanner_spark.plans.topics import build_daily_topics
+from readability_scanner_spark.plans.pipeline import extract_and_score
 
 
 def scan_document(html: str) -> dict:
@@ -64,13 +62,6 @@ def scan_table(transcripts: DataFrame, repartition_to: Optional[int] = None) -> 
     return extract_and_score(transcripts, repartition_to)
 
 
-def scan_table_resumable(
-    spark: SparkSession, transcripts: DataFrame, output_path: str, n_buckets: int = 8
-) -> dict:
-    """Batch scan with checkpoint/resume + _meta lineage."""
-    return run_pipeline(spark, transcripts, output_path, n_buckets)
-
-
 def daily_report(scored: DataFrame, group_col: str = "conv_id", start=None, end=None, min_docs: int = 1) -> DataFrame:
     """/daily (daily.py:19-51): readability-by-group over a window."""
     return readability_report(scored, group_col, start, end, min_docs)
@@ -94,16 +85,6 @@ def search_documents(docs: DataFrame, query: str, text_col: str = "cleaned_data"
 def word_cloud(docs: DataFrame, text_col: str = "cleaned_data", k: int = 5) -> DataFrame:
     """Word-cloud analytics (hug/api.py:250-287)."""
     return word_topk(docs, text_col, k)
-
-
-def ml_dataset(docs: DataFrame, path: str, label_col: str, text_col: str = "cleaned_data") -> None:
-    """ML dataset export (hug/api.py:95-221)."""
-    export_ml_dataset(docs, path, label_col, text_col)
-
-
-def generate_daily_topics(docs: DataFrame, id_col: str, vec_col: str, ts_col: str, article_cols: list[str], **kwargs) -> DataFrame:
-    """Daily topics (§3.3)."""
-    return build_daily_topics(docs, id_col, vec_col, ts_col, article_cols, **kwargs)
 
 
 def legacy_field_view(scored: DataFrame) -> DataFrame:

@@ -19,7 +19,7 @@ defect.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from readability_scanner_spark.functions.wordchars import WORD_RUN, WS_CLASS, WS_RUN
@@ -97,15 +97,3 @@ def preview_col(text: Column, max_chars: int = 200) -> Column:
         F.concat(word_bounded, F.lit("..."))
     )
 
-
-def with_sql_text_stats(df: DataFrame, text: str = "text") -> DataFrame:
-    """Append T1–T4 as JVM columns."""
-    t = F.col(text)
-    return df.withColumns(
-        {
-            "words": words_col(t),
-            "sentences": sentences_col(t),
-            "paragraphs": paragraphs_col(t),
-            "characters": characters_col(t),
-        }
-    )

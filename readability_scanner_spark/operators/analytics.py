@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 from readability_scanner_spark.functions.columns import (
     characters_col,
     paragraphs_col,
-    preview_col,
     sentences_col,
     words_col,
 )
@@ -270,18 +269,6 @@ def array_membership(df: DataFrame, group_col: str, item_col: str, needle) -> Da
 
 # --- O3/O4: argmax + pagination --------------------------------------------------------
 
-def latest_per_group(df: DataFrame, group_col: str, order_cols: list[str], project: list[str]) -> DataFrame:
-    """O3 find_one+sort = argmax (articles.py:237-250), deterministic via
-    full tie-break ordering."""
-    w = Window.partitionBy(group_col).orderBy(*[F.desc(c) for c in order_cols])
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select(group_col, *project)
-        .orderBy(group_col)
-    )
-
-
 def paginate(df: DataFrame, order_cols: list[str], page: int, page_size: int) -> DataFrame:
     """O4 skip/limit pagination (articles.py:398-402) as a row_number
     window. NOTE: a global ordering window funnels all rows through one
@@ -340,12 +327,6 @@ def daily_buckets(df: DataFrame, ts_col: str, value_col: str) -> DataFrame:
         .agg(F.count("*").alias("cnt"), F.round(F.avg(value_col), 4).alias("avg_value"))
         .orderBy("day")
     )
-
-
-# --- E6: preview -----------------------------------------------------------------------
-
-def with_preview(df: DataFrame, text_col: str, max_chars: int = 200) -> DataFrame:
-    return df.withColumn("preview", preview_col(F.col(text_col), max_chars))
 
 
 def sql_text_stats(docs: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:

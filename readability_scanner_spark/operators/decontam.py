@@ -54,10 +54,6 @@ def ws_tokens_col(text_col: Column) -> Column:
     return F.filter(F.split(F.coalesce(text_col, F.lit("")), " "), lambda t: t != "")
 
 
-# kept for compatibility with earlier imports
-_tokens_col = ws_tokens_col
-
-
 def ngrams_from_tokens(toks: Column, n: int) -> Column:
     """All n-token shingles of a token-array column as space-joined
     strings; empty array when the doc has fewer than n tokens.
@@ -76,13 +72,6 @@ def ngrams_from_tokens(toks: Column, n: int) -> Column:
     return F.when(F.size(toks) >= n, grams).otherwise(
         F.array().cast("array<string>")
     )
-
-
-def ngrams_col(text_col: Column, n: int) -> Column:
-    """Convenience for short/bounded text (tests, probes): builds the
-    token expression inline, which is quadratic per doc — hot paths
-    must project ws_tokens_col first and call ngrams_from_tokens."""
-    return ngrams_from_tokens(ws_tokens_col(text_col), n)
 
 
 def gram_hashes_from_tokens(toks: Column, n: int) -> Column:

@@ -515,12 +515,6 @@ def _grams_from_toks(toks, shingle_n: int):
     )
 
 
-def _grams_col(text_col: str, shingle_n: int):
-    # compat column form (tests); hot paths project _dedup_toks_col
-    # first and call _grams_from_toks on the bound alias
-    return _grams_from_toks(_dedup_toks_col(text_col), shingle_n)
-
-
 def ngram_jaccard_verify(
     candidates: DataFrame,
     docs: DataFrame,

@@ -31,12 +31,6 @@ def upsert_by_key(existing: DataFrame, incoming: DataFrame, key: str, order_col:
     )
 
 
-def overwrite_table(df: DataFrame, path: str) -> None:
-    """S5 full-refresh (delete_many({}) + insert_many,
-    daily_topics_jobs.py:157-162) = INSERT OVERWRITE."""
-    df.write.mode("overwrite").parquet(path)
-
-
 def table_file_stats(path: str) -> dict:
     """Parquet-file census for a table directory: {files, bytes,
     avg_bytes} over data files (skips _SUCCESS/_meta). The small-files
@@ -127,11 +121,6 @@ def compact_pipeline_output(
 def export_csv(df: DataFrame, path: str) -> None:
     """S6 CSV export (api/routes/export.py:19-72)."""
     df.write.mode("overwrite").option("header", True).csv(path)
-
-
-def export_json(df: DataFrame, path: str) -> None:
-    """S6 JSON export."""
-    df.write.mode("overwrite").json(path)
 
 
 def export_ml_dataset(

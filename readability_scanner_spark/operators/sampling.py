@@ -12,16 +12,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def deterministic_sample(df: DataFrame, key: Column, fraction: float, salt: int = 0) -> DataFrame:
-    """Keep rows where hash(key, salt) mod 10000 < fraction*10000.
-    Content-addressed: stable across runs, partitionings, and engines
-    that share the hash. Different salts give independent samples."""
-    bucket = F.pmod(F.xxhash64(key, F.lit(salt)), F.lit(10_000))
-    # round, not int(): float truncation (0.29*10000 = 2899.999...) would
-    # silently keep one bucket too few
-    return df.where(bucket < round(fraction * 10_000))
-
-
 def modulo_sample(df: DataFrame, id_col: str, keep_every: int, offset: int = 0) -> DataFrame:
     """Systematic sampling on a numeric id (oracle-friendly: any SQL
     engine reproduces it)."""

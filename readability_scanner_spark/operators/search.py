@@ -44,97 +44,109 @@ def _term_pattern(t: str) -> str:
     return rf"(?<![{WORD_CHARS}]){re.escape(t)}(?![{WORD_CHARS}])"
 
 
-def relevance_col(text: Column, query: str) -> Column:
-    """Sum of per-term occurrence counts (case-insensitive, word-bounded)
-    — the textScore analog; 0 when any... no: $text ORs terms, so score
-    is the plain sum over terms."""
+def _ranked(
+    df: DataFrame,
+    fields: dict[str, float],
+    query: str,
+    id_col: str,
+    limit: int,
+    contrib,
+    value_col: str = "score",
+    require_all: bool = False,
+) -> DataFrame:
+    """THE core of the regexp search family. Binds lower(field) once
+    per field and each (field, term) lookaround count once (r6: the
+    formulas reference every count 2-3x and CollapseProject re-evaluates
+    non-bound subtrees per reference — measured ~5x the necessary regex
+    passes for the mongo score). ``contrib(cnt, weight, n_tokens)`` is a
+    scorer's per-term contribution, folded fields outer / terms inner —
+    the oracles' CASE order, so double sums match them bit for bit.
+    ``value_col`` "relevance" keeps the long sum exact; "score" starts
+    from 0.0 and rounds to 4 places. ``n_tokens`` is the field's
+    word-run count on the RAW text (column pruning drops it for scorers
+    that ignore it); ``require_all`` keeps only rows where every term
+    matched. The rank tail keeps value > 0 and orders value desc, id
+    asc, top-``limit``."""
     terms = _terms(query)
-    if not terms:
-        return F.lit(0).cast("long")
-    score = F.lit(0).cast("long")
-    for t in terms:
-        score = score + F.regexp_count(F.lower(text), F.lit(_term_pattern(t))).cast("long")
-    return score
-
-
-def weighted_text_score(fields: dict[str, float], query: str) -> Column:
-    """Mongo-$text-style relevance: per indexed FIELD with weight w, per
-    query term with tf occurrences in that field, the contribution is
-    w * (0.5 + 0.5 * tf / (tf + 1)) when tf > 0 — a saturating
-    term-frequency curve with field weighting, the shape Mongo documents
-    for textScore (exact constants are not a public contract; this is
-    the documented approximation). Deliberately transcendental-free:
-    only small-int arithmetic and one IEEE division per term, so the
-    DuckDB oracle reproduces it bit-for-bit."""
-    score = F.lit(0.0)
-    for col_name, weight in fields.items():
-        low = F.lower(F.col(col_name))
-        for t in _terms(query):
-            tf = F.regexp_count(low, F.lit(_term_pattern(t))).cast("double")
-            score = score + F.when(
-                tf > 0, F.lit(float(weight)) * (0.5 + 0.5 * tf / (tf + 1))
-            ).otherwise(0.0)
-    return score
-
-
-def _bound_term_counts(
-    df: DataFrame, fields: dict[str, float], query: str, with_ntokens: bool
-):
-    """Project lower(field) once per field and the per-(field, term)
-    match counts once each (r6): the scoring formulas reference every
-    count 2-3x and lower(field) once per term, and CollapseProject
-    re-evaluates non-bound subtrees per reference — measured ~5x the
-    necessary regex passes for the mongo-score query. Returns
-    (projected df, terms, cnt-name fn, ntok-name fn)."""
-    terms = _terms(query)
-    step1 = df.withColumns(
+    base = df.withColumns(
         {f"_ts_low_{i}": F.lower(F.col(c)) for i, c in enumerate(fields)}
     )
     counts = {}
     for i, col_name in enumerate(fields):
-        if with_ntokens:
-            counts[f"_ts_nt_{i}"] = F.size(
-                F.regexp_extract_all(F.col(col_name), F.lit(WORD_RUN), 0)
-            ).cast("double")
+        counts[f"_ts_nt_{i}"] = F.size(
+            F.regexp_extract_all(F.col(col_name), F.lit(WORD_RUN), 0)
+        ).cast("double")
         for j, t in enumerate(terms):
             counts[f"_ts_c_{i}_{j}"] = F.regexp_count(
                 F.col(f"_ts_low_{i}"), F.lit(_term_pattern(t))
             )
-    step2 = step1.withColumns(counts)
-    return step2, terms, (lambda i, j: F.col(f"_ts_c_{i}_{j}")), (
-        lambda i: F.col(f"_ts_nt_{i}")
+    base = base.withColumns(counts)
+    exact = value_col == "relevance"
+    score = F.lit(0).cast("long") if exact else F.lit(0.0)
+    for i, weight in enumerate(fields.values()):
+        for j in range(len(terms)):
+            cnt = F.col(f"_ts_c_{i}_{j}")
+            if require_all:
+                base = base.where(cnt > 0)
+            score = score + contrib(cnt, float(weight), F.col(f"_ts_nt_{i}"))
+    return (
+        base.withColumn(value_col, score if exact else F.round(score, 4))
+        .where(F.col(value_col) > 0)
+        .select(id_col, value_col)
+        .orderBy(F.desc(value_col), F.asc(id_col))
+        .limit(limit)
+    )
+
+
+def text_search(
+    df: DataFrame, text_col: str, query: str, id_col: str, limit: int = 20, require_all: bool = False
+) -> DataFrame:
+    """Search: ``relevance`` = sum of per-term occurrence counts
+    (case-insensitive, word-bounded) — the textScore analog; $text ORs
+    terms, so it is the plain sum. Relevance desc, id asc tie-break,
+    top-k. ``require_all`` switches OR semantics ($text default) to AND
+    (phrase-ish)."""
+    return _ranked(
+        df,
+        {text_col: 1.0},
+        query,
+        id_col,
+        limit,
+        lambda cnt, _w, _nt: cnt.cast("long"),
+        value_col="relevance",
+        require_all=require_all,
     )
 
 
 def text_search_weighted(
     df: DataFrame, fields: dict[str, float], query: str, id_col: str, limit: int = 20
 ) -> DataFrame:
-    """P9 with field weights + TF scaling (the textScore upgrade over the
-    raw match-count form below). r6: per-(field, term) counts bound once
-    (identical arithmetic on top — same values, ~3x fewer regex passes)."""
-    base, terms, cnt_of, _ = _bound_term_counts(df, fields, query, with_ntokens=False)
-    score = F.lit(0.0)
-    for i, (col_name, weight) in enumerate(fields.items()):
-        for j, t in enumerate(terms):
-            tf = cnt_of(i, j).cast("double")
-            score = score + F.when(
-                tf > 0, F.lit(float(weight)) * (0.5 + 0.5 * tf / (tf + 1))
-            ).otherwise(0.0)
-    return (
-        base.withColumn("score", F.round(score, 4))
-        .where(F.col("score") > 0)
-        .select(id_col, "score")
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(limit)
-    )
+    """P9 with field weights + TF scaling (the textScore upgrade over
+    text_search's raw match count). Mongo-$text-style relevance: per
+    indexed FIELD with weight w, per query term with tf occurrences in
+    that field, the contribution is w * (0.5 + 0.5 * tf / (tf + 1)) when
+    tf > 0 — a saturating term-frequency curve with field weighting, the
+    shape Mongo documents for textScore (exact constants are not a
+    public contract; this is the documented approximation). Deliberately
+    transcendental-free: only small-int arithmetic and one IEEE division
+    per term, so the DuckDB oracle reproduces it bit-for-bit."""
+
+    def contrib(cnt: Column, weight: float, _nt: Column) -> Column:
+        tf = cnt.cast("double")
+        return F.when(tf > 0, F.lit(weight) * (0.5 + 0.5 * tf / (tf + 1))).otherwise(0.0)
+
+    return _ranked(df, fields, query, id_col, limit, contrib)
 
 
-def mongo_text_score(fields: dict[str, float], query: str) -> Column:
-    """MongoDB's EXACT textScore formula (open-source: mongo/src/mongo/
-    db/fts/fts_spec.cpp, ``FTSSpec::_scoreStringV2``), not the
-    saturating approximation above. Per (field with weight w, query
-    term with ``count`` occurrences among the field's ``numTokens``
-    word tokens):
+def text_search_mongo(
+    df: DataFrame, fields: dict[str, float], query: str, id_col: str, limit: int = 20
+) -> DataFrame:
+    """P9 relevance ranking under MongoDB's EXACT textScore formula
+    (article_search_routes.py:52-81 sorts on {$meta: "textScore"};
+    open-source: mongo/src/mongo/db/fts/fts_spec.cpp,
+    ``FTSSpec::_scoreStringV2``), not text_search_weighted's saturating
+    approximation. Per (field with weight w, query term with ``count``
+    occurrences among the field's ``numTokens`` word tokens):
 
         freq  = sum_{k=1..count} 1/2^(k-1)  =  2 - 2^(1-count)
         coeff = 0.5 * count / numTokens + 0.5
@@ -147,80 +159,23 @@ def mongo_text_score(fields: dict[str, float], query: str) -> Column:
     processing Mongo also skips for 'none'); for stemmed languages the
     scores would diverge on inflected terms only. Expression shape is
     kept identical in the DuckDB oracle (same association order, one
-    pow + one division per term) so the driver hash matches bit-exact."""
-    score = F.lit(0.0)
-    for col_name, weight in fields.items():
-        low = F.lower(F.col(col_name))
-        # numTokens over the RAW text: full-string case folding can mint
-        # or merge word runs differently per engine (İ U+0130 lowers to
-        # 'i'+combining-mark in Java — TWO runs — but plain 'i' in
-        # DuckDB); run counts on the unfolded text agree everywhere
-        n_tokens = F.size(
-            F.regexp_extract_all(F.col(col_name), F.lit(WORD_RUN), 0)
-        ).cast("double")
-        for t in _terms(query):
-            cnt = F.regexp_count(low, F.lit(_term_pattern(t))).cast("double")
-            freq = F.lit(2.0) - F.pow(F.lit(2.0), F.lit(1.0) - cnt)
-            coeff = F.lit(0.5) * cnt / n_tokens + F.lit(0.5)
-            # cnt > 0 implies n_tokens > 0, so the division in the taken
-            # branch can never hit ANSI divide-by-zero
-            score = score + F.when(
-                cnt > 0, F.lit(float(weight)) * freq * coeff
-            ).otherwise(0.0)
-    return score
+    pow + one division per term) so the two engines agree bit-exact.
 
+    numTokens counts runs on the RAW text: full-string case folding can
+    mint or merge word runs differently per engine (İ U+0130 lowers to
+    'i'+combining-mark in Java — TWO runs — but plain 'i' in DuckDB;
+    the Kelvin sign U+212A folds to ASCII 'k'); run counts on the
+    unfolded text agree everywhere."""
 
-def text_search_mongo(
-    df: DataFrame, fields: dict[str, float], query: str, id_col: str, limit: int = 20
-) -> DataFrame:
-    """P9 relevance ranking under Mongo's exact textScore constants
-    (article_search_routes.py:52-81 sorts on {$meta: "textScore"}).
-    r6: per-(field, term) counts and per-field numTokens bound once;
-    the score arithmetic on top is shape-identical to mongo_text_score
-    (same association order, one pow + one division per term), so the
-    values — and the driver hash — are unchanged."""
-    base, terms, cnt_of, nt_of = _bound_term_counts(df, fields, query, with_ntokens=True)
-    score = F.lit(0.0)
-    for i, (col_name, weight) in enumerate(fields.items()):
-        n_tokens = nt_of(i)
-        for j, t in enumerate(terms):
-            cnt = cnt_of(i, j).cast("double")
-            freq = F.lit(2.0) - F.pow(F.lit(2.0), F.lit(1.0) - cnt)
-            coeff = F.lit(0.5) * cnt / n_tokens + F.lit(0.5)
-            score = score + F.when(
-                cnt > 0, F.lit(float(weight)) * freq * coeff
-            ).otherwise(0.0)
-    return (
-        base.withColumn("score", F.round(score, 4))
-        .where(F.col("score") > 0)
-        .select(id_col, "score")
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(limit)
-    )
+    def contrib(cnt: Column, weight: float, n_tokens: Column) -> Column:
+        cnt = cnt.cast("double")
+        freq = F.lit(2.0) - F.pow(F.lit(2.0), F.lit(1.0) - cnt)
+        coeff = F.lit(0.5) * cnt / n_tokens + F.lit(0.5)
+        # cnt > 0 implies n_tokens > 0, so the division in the taken
+        # branch can never hit ANSI divide-by-zero
+        return F.when(cnt > 0, F.lit(weight) * freq * coeff).otherwise(0.0)
 
-
-def text_search(
-    df: DataFrame, text_col: str, query: str, id_col: str, limit: int = 20, require_all: bool = False
-) -> DataFrame:
-    """Search: relevance desc, id asc tie-break, top-k. ``require_all``
-    switches OR semantics ($text default) to AND (phrase-ish)."""
-    terms = _terms(query)
-    # r6: lower(text) bound once — the per-term counts (and require_all
-    # rlikes) each re-lowered the document otherwise. Same values.
-    base = df.withColumn("_ts_low", F.lower(F.col(text_col)))
-    rel = F.lit(0).cast("long")
-    for t in terms:
-        rel = rel + F.regexp_count(F.col("_ts_low"), F.lit(_term_pattern(t))).cast("long")
-    out = base.withColumn("relevance", rel)
-    if require_all and terms:
-        for t in terms:
-            out = out.where(F.col("_ts_low").rlike(_term_pattern(t)))
-    return (
-        out.where(F.col("relevance") > 0)
-        .select(id_col, "relevance")
-        .orderBy(F.desc("relevance"), F.asc(id_col))
-        .limit(limit)
-    )
+    return _ranked(df, fields, query, id_col, limit, contrib)
 
 
 def _token_array(text_col: str, extract_then_lower: bool):

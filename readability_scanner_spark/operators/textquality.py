@@ -444,6 +444,3 @@ def with_lang_quality_cols(
         out_cols["fingerprint"] = fingerprint_col(t, toks_col=F.col("_ql_toks"))
     return base.withColumns(out_cols).drop(*tmp)
 
-
-def with_text_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return with_lang_quality_cols(df, text_col, include_fingerprint=True)

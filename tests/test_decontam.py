@@ -12,7 +12,8 @@ from readability_scanner_spark.operators.decontam import (
     benchmark_gram_set,
     decontaminate,
     doc_ngrams,
-    ngrams_col,
+    ngrams_from_tokens,
+    ws_tokens_col,
 )
 
 
@@ -30,9 +31,14 @@ def test_ngrams_match_bruteforce(spark):
         "repeat repeat repeat repeat",
     ]
     df = spark.createDataFrame([(t,) for t in texts], "text string")
-    rows = df.select(
-        "text", F.array_sort(F.array_distinct(ngrams_col(F.col("text"), 3))).alias("g")
-    ).collect()
+    rows = (
+        df.select("text", ws_tokens_col(F.col("text")).alias("toks"))
+        .select(
+            "text",
+            F.array_sort(F.array_distinct(ngrams_from_tokens(F.col("toks"), 3))).alias("g"),
+        )
+        .collect()
+    )
     for r in rows:
         assert sorted(set(r["g"])) == sorted(_py_grams(r["text"], 3)), r["text"]
 
@@ -41,7 +47,11 @@ def test_short_doc_yields_empty_not_descending_sequence(spark):
     # sequence(1, m) with m < 1 descends in Spark; the when-guard must
     # turn "two tokens, n=8" into ZERO grams, not fabricated ones
     df = spark.createDataFrame([("a b",), ("",), ("   ",)], "text string")
-    rows = df.select(F.size(ngrams_col(F.col("text"), 8)).alias("n")).collect()
+    rows = (
+        df.select(ws_tokens_col(F.col("text")).alias("toks"))
+        .select(F.size(ngrams_from_tokens(F.col("toks"), 8)).alias("n"))
+        .collect()
+    )
     assert [r["n"] for r in rows] == [0, 0, 0]
 
 

@@ -20,7 +20,8 @@ from readability_scanner_spark.functions.wordchars import (
     DEDUP_TOKEN_RE2,
 )
 from readability_scanner_spark.operators.dedup import (
-    _grams_col,
+    _dedup_toks_col,
+    _grams_from_toks,
     _shingles,
     ngram_jaccard_pairs,
     simhash,
@@ -82,7 +83,8 @@ def test_jvm_grams_match_python_shingles(spark):
         [(i, t) for i, t in enumerate(ADV)], "doc_id long, text string"
     )
     rows = (
-        df.select("doc_id", _grams_col("text", 3).alias("g"))
+        df.select("doc_id", _dedup_toks_col("text").alias("toks"))
+        .select("doc_id", _grams_from_toks(F.col("toks"), 3).alias("g"))
         .orderBy("doc_id")
         .collect()
     )

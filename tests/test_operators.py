@@ -964,12 +964,12 @@ def test_search_lookaround_equals_duckdb_token_oracle(spark):
         "",
     ]
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "id long, text string")
-    got = {
-        r.id: r.n
-        for r in df.select(
-            "id", search.relevance_col(F.col("text"), "data").alias("n")
-        ).collect()
+    # text_search leaves rows without a hit out of its ranking: read them as 0
+    ranked = {
+        r.id: r.relevance
+        for r in search.text_search(df, "text", "data", "id", limit=len(texts)).collect()
     }
+    got = {i: ranked.get(i, 0) for i in range(len(texts))}
     con = duckdb.connect()
     for i, t in enumerate(texts):
         (want,) = con.execute(

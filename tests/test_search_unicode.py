@@ -21,9 +21,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from readability_scanner_spark.operators.search import (
-    relevance_col,
     text_search,
-    weighted_text_score,
+    text_search_mongo,
+    text_search_weighted,
 )
 
 # every way 'data' can abut something: real matches (punctuation/space
@@ -54,6 +54,17 @@ def corpus_df(spark):
     return spark.createDataFrame(CORPUS, "doc_id long, text string")
 
 
+def _relevance(df, term: str) -> dict[int, int]:
+    """Per-row lookaround match counts read off text_search's ranking;
+    a row the ranking leaves out (no hit) reads as 0."""
+    ids = [r["doc_id"] for r in df.select("doc_id").collect()]
+    got = {
+        r["doc_id"]: r["relevance"]
+        for r in text_search(df, "text", term, "doc_id", limit=len(ids)).collect()
+    }
+    return {i: got.get(i, 0) for i in ids}
+
+
 def _duck_counts(term: str) -> dict[int, int]:
     rows = duckdb.sql(
         "SELECT doc_id, " + _TOKEN_COUNT.format(t=term) + " AS c FROM corpus",
@@ -79,26 +90,14 @@ def test_lookaround_equals_token_runs_per_term(spark, corpus_df):
     """Spark lookaround counts == DuckDB token-run counts, row by row,
     for every term — on the corpus built to expose \\b-style divergence."""
     for term in TERMS:
-        got = {
-            r["doc_id"]: r["c"]
-            for r in corpus_df.select(
-                "doc_id", relevance_col(F.col("text"), term).alias("c")
-            ).collect()
-        }
-        assert got == _duck_counts(term), term
+        assert _relevance(corpus_df, term) == _duck_counts(term), term
 
 
 def test_expected_hit_pattern_hand_checked(spark, corpus_df):
     """Pin the hand-derived per-row 'data' counts so BOTH engines are
     checked against human intent, not just each other."""
     expected = {0: 1, 1: 0, 2: 2, 3: 2, 4: 3, 5: 0, 6: 1, 7: 1, 8: 1, 9: 0}
-    got = {
-        r["doc_id"]: r["c"]
-        for r in corpus_df.select(
-            "doc_id", relevance_col(F.col("text"), "data").alias("c")
-        ).collect()
-    }
-    assert got == expected
+    assert _relevance(corpus_df, "data") == expected
 
 
 def test_engine_boundary_semantics_pinned(spark, corpus_df):
@@ -113,12 +112,7 @@ def test_engine_boundary_semantics_pinned(spark, corpus_df):
             F.regexp_count(F.lower(F.col("text")), F.lit(r"\bdata\b")).alias("c"),
         ).collect()
     }
-    look = {
-        r["doc_id"]: r["c"]
-        for r in corpus_df.select(
-            "doc_id", relevance_col(F.col("text"), "data").alias("c")
-        ).collect()
-    }
+    look = _relevance(corpus_df, "data")
     assert java_b == look  # agreement holds for LETTER adjacency...
     assert look[1] == 0  # 'data表'/'表data' are joins, not matches
     re2_b = {
@@ -148,12 +142,7 @@ def test_java_b_diverges_on_no_category_and_combining_marks(spark):
             "doc_id", F.regexp_count("text", F.lit(r"\bdata\b")).alias("c")
         ).collect()
     }
-    look = {
-        r["doc_id"]: r["c"]
-        for r in df.select(
-            "doc_id", relevance_col(F.col("text"), "data").alias("c")
-        ).collect()
-    }
+    look = _relevance(df, "data")
     # Java \b: ①/² are not word chars to it -> false boundary matches;
     # combining mark U+0301 IS word-continuation to it -> missed match
     assert java_b == {0: 1, 1: 1, 2: 0, 3: 1}
@@ -196,53 +185,70 @@ def test_text_search_end_to_end_vs_duckdb(spark, corpus_df):
     assert got == [(d, c) for d, c in want]
 
 
-def test_weighted_score_unicode_corpus(spark):
-    """text_search_scored's scoring expression on a two-field frame with
-    CJK-adjacent terms: Spark vs the oracle's CASE/token-run recompute."""
+# contrib_sql: a scorer's per-(field, term) contribution written the
+# way its DuckDB oracle writes it: w = field weight, c = term count,
+# n = the field's word-run count on the RAW text
+@pytest.mark.parametrize(
+    "scorer, contrib_sql",
+    [
+        (
+            text_search_weighted,
+            "CASE WHEN {c} > 0 THEN {w} * (0.5 + 0.5 * {c} / ({c} + 1)) ELSE 0 END",
+        ),
+        (
+            text_search_mongo,
+            "CASE WHEN {c} > 0 THEN ({w} * (2.0 - power(2.0, 1.0 - {c})))"
+            " * (0.5 * {c} / {n} + 0.5) ELSE 0 END",
+        ),
+    ],
+    ids=["weighted", "mongo"],
+)
+def test_weighted_score_unicode_corpus(spark, scorer, contrib_sql):
+    """text_search_scored's and text_search_mongo_score's rankings on a
+    two-field frame with CJK-adjacent terms: Spark vs the oracles'
+    CASE/token-run recompute (same fold order: fields outer, terms
+    inner). Row 3 carries İ (U+0130) and the Kelvin sign (U+212A), whose
+    case folds mint word runs differently per engine — numTokens must
+    count runs on the raw text to agree."""
     rows = [
         (0, "data表 query", "data query data"),
         (1, "query data", "表data"),
         (2, "nothing here", "метаdata"),
+        (3, "İstanbul data", "\u212aelvin query data query"),
     ]
+    fields = {"source": 5.0, "text": 1.0}
+    terms = ["data", "query"]
     df = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    got = {
-        r["doc_id"]: r["s"]
-        for r in df.select(
-            "doc_id",
-            F.round(
-                weighted_text_score({"source": 5.0, "text": 1.0}, "data query"), 4
-            ).alias("s"),
-        ).collect()
-    }
+    got = [
+        (r["doc_id"], r["score"])
+        for r in scorer(df, fields, "data query", "doc_id", limit=10).collect()
+    ]
     conn = duckdb.connect()
     conn.execute("CREATE TABLE d (doc_id BIGINT, source VARCHAR, text VARCHAR)")
     conn.executemany("INSERT INTO d VALUES (?, ?, ?)", rows)
-    tok = (
-        "len(list_filter(regexp_extract_all(lower({col}), '[\\p{{L}}\\p{{N}}_]+'),"
-        " x -> x = '{t}'))::DOUBLE"
+    runs = "regexp_extract_all({col}, '[\\p{{L}}\\p{{N}}_]+')"
+    tf = [f"len({runs.format(col=col)})::DOUBLE AS {col}_n" for col in fields] + [
+        f"len(list_filter({runs.format(col=f'lower({col})')}, x -> x = '{t}'))"
+        f"::DOUBLE AS {col}_{t}"
+        for col in fields
+        for t in terms
+    ]
+    score = " + ".join(
+        f"({contrib_sql.format(w=w, c=f'{col}_{t}', n=f'{col}_n')})"
+        for col, w in fields.items()
+        for t in terms
     )
-    want = {
-        r[0]: r[1]
-        for r in conn.execute(
-            f"""
-        SELECT doc_id, round(
-            (CASE WHEN {tok.format(col='source', t='data')} > 0
-              THEN 5.0 * (0.5 + 0.5 * {tok.format(col='source', t='data')}
-                   / ({tok.format(col='source', t='data')} + 1)) ELSE 0 END)
-          + (CASE WHEN {tok.format(col='source', t='query')} > 0
-              THEN 5.0 * (0.5 + 0.5 * {tok.format(col='source', t='query')}
-                   / ({tok.format(col='source', t='query')} + 1)) ELSE 0 END)
-          + (CASE WHEN {tok.format(col='text', t='data')} > 0
-              THEN 1.0 * (0.5 + 0.5 * {tok.format(col='text', t='data')}
-                   / ({tok.format(col='text', t='data')} + 1)) ELSE 0 END)
-          + (CASE WHEN {tok.format(col='text', t='query')} > 0
-              THEN 1.0 * (0.5 + 0.5 * {tok.format(col='text', t='query')}
-                   / ({tok.format(col='text', t='query')} + 1)) ELSE 0 END), 4)
-        FROM d
+    want = conn.execute(
+        f"""
+        WITH tf AS (SELECT doc_id, {', '.join(tf)} FROM d)
+        SELECT doc_id, score FROM (
+          SELECT doc_id, round({score}, 4) AS score FROM tf
+        ) WHERE score > 0
+        ORDER BY score DESC, doc_id ASC
         """
-        ).fetchall()
-    }
+    ).fetchall()
     assert got == want
+    assert {d for d, _ in got} == {0, 1, 3}
 
 
 def test_token_index_equals_regexp_search(spark, corpus_df):
