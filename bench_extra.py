@@ -6,8 +6,9 @@ Usage:
     python bench_extra.py [query ...]            # time with noop sink
     PLAN_DIR=plans/r06 PLAN_SUFFIX=_before python bench_extra.py ...
                                                  # also dump plans
-Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf1.0),
-     SPARK_GRAFT_CPUS (default 32), EXTRA_REPEATS (default 3).
+Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
+     SPARK_GRAFT_CPUS (default: the CPUs this process may run on),
+     EXTRA_REPEATS (default 3).
 """
 
 from __future__ import annotations
@@ -39,8 +40,8 @@ DEFAULT_SET = [
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     repeats = int(os.environ.get("EXTRA_REPEATS", "3"))
     plan_dir = os.environ.get("PLAN_DIR")
     plan_suffix = os.environ.get("PLAN_SUFFIX", "")

@@ -54,9 +54,11 @@ def ws_tokens_col(text_col: Column) -> Column:
     return F.filter(F.split(F.coalesce(text_col, F.lit("")), " "), lambda t: t != "")
 
 
-def ngrams_from_tokens(toks: Column, n: int) -> Column:
+def ngrams_from_tokens(toks: Column, n: int | Column) -> Column:
     """All n-token shingles of a token-array column as space-joined
-    strings; empty array when the doc has fewer than n tokens.
+    strings; empty array when the doc has fewer than n tokens. ``n`` may
+    be a per-row Column (dedup._grams_from_toks caps it at the doc's
+    token count).
 
     ``toks`` MUST be a bound column (a projected alias), not a raw
     tokenize expression tree: Spark re-evaluates a lambda-captured

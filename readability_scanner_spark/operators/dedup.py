@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from readability_scanner_spark.functions.wordchars import CJK_CHARS, DEDUP_TOKEN_PY
+from readability_scanner_spark.operators.decontam import ngrams_from_tokens
 
 # Dedup token stream: ASCII word runs + one token per CJK char (Lucene
 # CJK-analyzer convention — CJK has no spaces to split on; without the
@@ -48,6 +49,47 @@ def _md5_64(s: str) -> int:
     """Low 64 bits of md5 as the cross-engine token hash: equals DuckDB's
     md5_number_lower(s) (little-endian of digest bytes 8..15). Unsigned."""
     return int.from_bytes(hashlib.md5(s.encode("utf-8", "ignore")).digest()[8:], "little")
+
+
+def _capped_memo(fn, cap: int = 200_000):
+    """Per-task memo for a pure str -> int hash. Near-dup corpora repeat
+    tokens and shingles heavily (Zipf vocabulary: high hit rate), but
+    unique keys dominate overall, so the memo is CAPPED — a long-lived
+    partition task (or an adversarial vocabulary) must not accrete one
+    entry per key ever seen. Build it inside the mapInPandas function so
+    each task owns its own."""
+    memo: dict[str, int] = {}
+
+    def cached(s: str) -> int:
+        h = memo.get(s)
+        if h is None:
+            h = fn(s)
+            if len(memo) < cap:
+                memo[s] = h
+        return h
+
+    return cached
+
+
+def _checkpoint_sized(df: DataFrame, fanout: int, cap: int) -> tuple[DataFrame, bool]:
+    """Materialize ``df`` once and size the join built from it: returns
+    the checkpointed frame and whether ``count * fanout`` build rows fit
+    under ``cap``.
+
+    The near-dup operators self-join a small proxy table (signatures,
+    candidate pairs); without the checkpoint every join side rebuilds
+    the whole upstream lineage, tokenizing and hashing each document
+    once per side. The count both materializes the checkpoint and sizes
+    the broadcast decision from real rows: the planner's estimate for a
+    checkpoint is carried over from its origin plan (compressed source
+    bytes scaled through projections) and says nothing about the rows an
+    exploded build side holds. Below the cap the caller broadcasts the
+    build side, which keeps skewed bucket keys off one task (the stream
+    side stays evenly partitioned whatever the key); above it the
+    planner and AQE choose the join."""
+    df = df.localCheckpoint(eager=False)
+    return df, df.count() * fanout <= cap
+
 
 # --- exact dedup -----------------------------------------------------------------
 
@@ -129,21 +171,7 @@ def minhash_signatures(
     p = MINHASH_P
 
     def sign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # shingle → md5%p memo. Near-dup corpora repeat shingles heavily
-        # (that is what the operator detects) but unique shingles dominate
-        # overall, so CAP the memo — a long-lived partition task must not
-        # accrete one entry per shingle ever seen.
-        memo: dict[str, int] = {}
-        memo_cap = 200_000
-
-        def base_of(s: str) -> int:
-            h = memo.get(s)
-            if h is None:
-                h = _md5_64(s) % p
-                if len(memo) < memo_cap:
-                    memo[s] = h
-            return h
-
+        base_of = _capped_memo(lambda s: _md5_64(s) % p)  # shingle → md5 % p
         for pdf in batches:
             sigs = []
             for text in pdf[text_col]:
@@ -174,18 +202,24 @@ def minhash_lsh_candidates(
     """Near-dup candidate pairs via banding: split the signature into
     `bands` bands of n_hashes/bands rows; docs sharing any full band
     bucket are candidates. Shuffle is by (band, bucket-hash) — each
-    bucket is tiny, so the pair join never goes quadratic globally."""
+    bucket is tiny, so the pair join never goes quadratic globally.
+
+    ``bands`` must divide ``n_hashes``: with more bands than hashes every
+    band is the same empty slice, so all documents share one bucket and
+    the join emits every pair; a remainder would leave trailing hashes
+    silently unused."""
+    if not 1 <= bands <= n_hashes or n_hashes % bands:
+        raise ValueError(
+            f"bands={bands} must divide n_hashes={n_hashes} (1 <= bands <= n_hashes)"
+        )
     rows = n_hashes // bands
-    # r6: materialize the signatures once (localCheckpoint — the small
-    # proxy table, n_docs x n_hashes longs): the self-join otherwise
-    # rebuilds the whole signature MapInPandas lineage for its second
-    # side, tokenizing and hashing every document twice. The count both
-    # materializes the checkpoint and sizes the broadcast decision (a
-    # checkpointed relation has no size estimate for the planner).
-    sigs = minhash_signatures(df, id_col, text_col, n_hashes, shingle_n, seed).localCheckpoint(
-        eager=False
+    # the signatures are the small proxy table (n_docs x n_hashes longs);
+    # the build side is the banded table, bands rows per doc
+    sigs, small = _checkpoint_sized(
+        minhash_signatures(df, id_col, text_col, n_hashes, shingle_n, seed),
+        bands,
+        KEYED_BROADCAST_MAX_ROWS,
     )
-    n_banded = sigs.count() * bands
     banded = sigs.select(
         id_col,
         F.explode(
@@ -204,11 +238,10 @@ def minhash_lsh_candidates(
     ).select(id_col, "bb.band", "bb.bucket")
     a = banded.select(F.col(id_col).alias("id_a"), "band", "bucket")
     b = banded.select(F.col(id_col).alias("id_b"), "band", "bucket")
-    # broadcast below the wide-id row cap, planner-shuffled join above
-    # it; the distinct stays — banding duplicates cannot be filtered
-    # from bucket hashes alone, and candidate volume is bounded by the
-    # tiny bucket sizes
-    build = F.broadcast(b) if n_banded <= KEYED_BROADCAST_MAX_ROWS else b
+    # the distinct stays — banding duplicates cannot be filtered from
+    # bucket hashes alone, and candidate volume is bounded by the tiny
+    # bucket sizes
+    build = F.broadcast(b) if small else b
     return (
         a.join(build, ["band", "bucket"])
         .where(F.col("id_a") < F.col("id_b"))
@@ -245,17 +278,7 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 64) -> DataFr
     def sim(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from collections import Counter
 
-        memo: dict[str, int] = {}  # token → md5; Zipf vocab = high hit rate
-        memo_cap = 200_000  # but still capped for adversarial vocabularies
-
-        def hash_of(t: str) -> int:
-            h = memo.get(t)
-            if h is None:
-                h = _md5_64(t)
-                if len(memo) < memo_cap:
-                    memo[t] = h
-            return h
-
+        hash_of = _capped_memo(_md5_64)  # token → md5
         for pdf in batches:
             out = []
             for text in pdf[text_col]:
@@ -376,12 +399,10 @@ def simhash_near_dups(df: DataFrame, id_col: str, text_col: str, max_hamming: in
       The hamming filter precedes it, so the when-chain only runs on
       verified pairs.
     """
-    hashed = simhash(df, id_col, text_col).localCheckpoint(eager=False)
-    # materializes the checkpoint (one job over the tiny signature
-    # table) and sizes the join: a checkpointed relation has no size
-    # estimate, so the planner would never auto-broadcast it
     groups = _simhash_groups(max_hamming)
-    n_blocked = hashed.count() * len(groups)
+    hashed, small = _checkpoint_sized(
+        simhash(df, id_col, text_col), len(groups), SIMHASH_BROADCAST_MAX_ROWS
+    )
     # group keys are packed into ONE long — slices compacted, group index
     # in the low bits — so the join key is a single LongType column and
     # the broadcast build becomes a LongHashedRelation (direct long-keyed
@@ -429,10 +450,7 @@ def simhash_near_dups(df: DataFrame, id_col: str, text_col: str, max_hamming: in
     group_idx = (
         F.col("bk").bitwiseAND(F.lit((1 << gbits) - 1)) if gbits else F.lit(0)
     )
-    # broadcast while the blocked build side is small (~40 B/row; 10M
-    # rows ~ 400 MB hashed relation); beyond that fall back to the
-    # planner's shuffled join, where AQE skew handling applies
-    build = F.broadcast(b) if n_blocked <= SIMHASH_BROADCAST_MAX_ROWS else b
+    build = F.broadcast(b) if small else b
     return (
         a.join(build, ["bk"])
         .where(F.col("id_a") < F.col("id_b"))
@@ -464,14 +482,20 @@ def ngram_jaccard_pairs(
     ).select(F.col("doc_id"), _grams_from_toks(F.col("_dt"), shingle_n).alias("grams"))
     a = docs.select(F.col("doc_id").alias("id_a"), F.col("grams").alias("ga"))
     b = docs.select(F.col("doc_id").alias("id_b"), F.col("grams").alias("gb"))
+    return _jaccard_at_least(a.join(b, F.col("id_a") < F.col("id_b")), threshold)
+
+
+def _jaccard_at_least(pairs: DataFrame, threshold: float) -> DataFrame:
+    """Shared tail of the Jaccard operators: (id_a, id_b, ga, gb) gram-set
+    pairs → (id_a, id_b, jaccard) at or above ``threshold``, rounded to 4
+    places, ordered by ids."""
     inter = F.size(F.array_intersect(F.col("ga"), F.col("gb")))
     union = F.size(F.array_union(F.col("ga"), F.col("gb")))
     return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
         # try_divide: ANSI mode makes bare / THROW when both gram sets
         # are empty (token-less docs); NULL falls out of the >= filter,
         # matching the DuckDB oracle's NULL-division semantics
-        .select("id_a", "id_b", F.try_divide(inter, union).alias("jaccard"))
+        pairs.select("id_a", "id_b", F.try_divide(inter, union).alias("jaccard"))
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
         .orderBy("id_a", "id_b")
@@ -490,29 +514,15 @@ def _dedup_toks_col(text_col: str):
 
 
 def _grams_from_toks(toks, shingle_n: int):
-    """Shingle set over a BOUND token-array column. ``toks`` must be a
-    projected alias, never the raw tokenize expression: the transform
-    lambda captures it and a captured subexpression re-evaluates PER
-    ELEMENT — re-tokenizing the document once per gram, the repo's
-    measured O(n^2) trap (this exact site cost dedup_pipeline 219 s at
-    sf1.0 before r6)."""
-    n_tok = F.size(toks)
-    return (
-        F.when(
-            n_tok >= shingle_n,
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(0), n_tok - shingle_n),
-                    lambda i: F.concat_ws(" ", F.slice(toks, i + 1, shingle_n)),
-                )
-            ),
-        )
-        .when(n_tok > 0, F.array(F.concat_ws(" ", toks)))
-        # zero tokens -> EMPTY set, not [""]: two token-less docs must
-        # not score jaccard 1.0 against each other (and the oracle's
-        # ELSE [] branch + NULL-division filter agree)
-        .otherwise(F.array().cast("array<string>"))
-    )
+    """Shingle set over a BOUND token-array column (a projected alias —
+    see decontam.ngrams_from_tokens for the per-element re-tokenize trap
+    a raw tokenize expression falls into). A doc with fewer than
+    ``shingle_n`` tokens is one shingle, the doc itself, as in
+    _shingles; a token-less doc is the EMPTY set, never [""]: two
+    token-less docs must not score jaccard 1.0 against each other (the
+    oracle's ELSE [] branch + NULL-division filter agree)."""
+    width = F.least(F.lit(shingle_n), F.greatest(F.size(toks), F.lit(1)))
+    return F.array_distinct(ngrams_from_tokens(toks, width))
 
 
 def ngram_jaccard_verify(
@@ -536,13 +546,11 @@ def ngram_jaccard_verify(
     pairs are checkpointed too — they now feed three consumers (the id
     set and both joins). Same pairs out: the joins are inner on
     candidate ids, so grams of non-candidate docs were never used."""
-    cand = candidates.select("id_a", "id_b").localCheckpoint(eager=False)
-    # count materializes the checkpoint and sizes the joins (a
-    # checkpointed relation has no planner size estimate): while the
-    # pair set is small, broadcast it — the gram side then streams with
-    # no shuffle; past the cap, planner-shuffled joins + AQE take over
-    # (wide-id cap: pair rows carry caller-supplied id values)
-    small = cand.count() <= KEYED_BROADCAST_MAX_ROWS
+    # while the pair set is small, broadcast it — the gram side then
+    # streams with no shuffle
+    cand, small = _checkpoint_sized(
+        candidates.select("id_a", "id_b"), 1, KEYED_BROADCAST_MAX_ROWS
+    )
     ids = (
         cand.select(F.col("id_a").alias("_gid"))
         .union(cand.select(F.col("id_b").alias("_gid")))
@@ -562,14 +570,7 @@ def ngram_jaccard_verify(
         .join(grams.withColumnRenamed("_g", "gb"), F.col("id_b") == F.col("_gid"))
         .drop("_gid")
     )
-    inter = F.size(F.array_intersect(F.col("ga"), F.col("gb")))
-    union = F.size(F.array_union(F.col("ga"), F.col("gb")))
-    return (
-        joined.select("id_a", "id_b", F.try_divide(inter, union).alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
-        .orderBy("id_a", "id_b")
-    )
+    return _jaccard_at_least(joined, threshold)
 
 
 # --- content-defined chunking ------------------------------------------------------------
@@ -640,53 +641,6 @@ def cdc_overlap_pairs(
     )
 
 
-# --- embedding near-dup ----------------------------------------------------------------------
-
-def embedding_near_dups(
-    vectors: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float = 0.98,
-    n_planes: int = 8,
-    seed: int = 42,
-    dim: int | None = None,
-    exact_max_rows: int | None = None,
-) -> DataFrame:
-    """Embedding-cosine near-dup. DEFAULT is the scale path: LSH
-    hyperplane bucketing + exact cosine verification inside buckets
-    (lsh_bucketed_pairs) — shuffle by bucket, never a global O(n²)
-    nested-loop join. Recall < 1 vs brute force is the documented LSH
-    tradeoff; at threshold ~0.98 near-identical vectors land in the same
-    bucket with overwhelming probability.
-
-    The exact all-pairs join is only reachable by passing
-    ``exact_max_rows`` explicitly, and refuses inputs larger than the
-    cap — a deliberate guard rail against the quadratic plan at scale."""
-    from readability_scanner_spark.operators.similarity import (
-        lsh_bucketed_pairs,
-        similarity_pairs,
-    )
-
-    if exact_max_rows is not None:
-        n = vectors.count()
-        if n > exact_max_rows:
-            raise ValueError(
-                f"exact all-pairs near-dup refused: {n} rows > cap {exact_max_rows}; "
-                "use the default LSH path at scale"
-            )
-        # max_rows=None: the cap was just enforced above — don't pay a
-        # second count() action inside similarity_pairs
-        return similarity_pairs(vectors, id_col, vec_col, threshold, max_rows=None)
-
-    if dim is None:
-        row = vectors.select(vec_col).where(F.col(vec_col).isNotNull()).first()
-        if row is None:  # empty / all-null input: no pairs, don't crash
-            dim = 1
-        else:
-            dim = len(row[0])  # one bounded driver row
-    return lsh_bucketed_pairs(vectors, id_col, vec_col, dim, threshold, n_planes, seed)
-
-
 # --- cluster resolution ---------------------------------------------------------------------
 
 def connected_components(
@@ -708,9 +662,10 @@ def connected_components(
     quasi-cliques), so this is 2-4 shuffles in practice; each round is
     one equi-join + one groupBy on the node key, never a pair product.
     localCheckpoint truncates the growing lineage every few rounds
-    (plan-size blowup, not data volume, is the iteration risk). For
-    adversarial long-chain graphs swap in large-star/small-star; for
-    dedup workloads min-propagation is the right cost shape.
+    (plan-size blowup, not data volume, is the iteration risk). A graph
+    whose diameter exceeds ``max_iterations`` raises rather than return
+    intermediate labels; for dedup workloads min-propagation is the
+    right cost shape.
     """
     sym = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     sym = sym.union(sym.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
@@ -783,120 +738,6 @@ def connected_components(
     return result
 
 
-def connected_components_star(
-    pairs: DataFrame,
-    src: str,
-    dst: str,
-    max_iterations: int = 50,
-    checkpoint_every: int = 3,
-) -> DataFrame:
-    """Connected components by alternating LARGE-STAR / SMALL-STAR
-    rounds (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC 2014) — O(log^2 n) rounds INDEPENDENT of graph
-    diameter, vs min-label propagation's O(diameter). The opt-in
-    strategy for adversarial long-chain graphs; for near-dup
-    quasi-cliques min-label's 2-4 cheap rounds win (see
-    connected_components). Same contract: (node, component) with
-    component = min reachable id.
-
-    Per round, both operations are one groupBy + one equi-join on the
-    node key — never a pair product:
-      large-star: every neighbor v > u links to m = min(N(u) ∪ {u})
-      small-star: every neighbor v ≤ u (edges pointed high→low) links
-                  to m = min of that down-neighborhood
-    Fixpoint = the directed high→low edge set stops changing; at that
-    point edges form stars rooted at each component's minimum."""
-    nodes = (
-        pairs.select(F.col(src).alias("node"))
-        .union(pairs.select(F.col(dst).alias("node")))
-        .distinct()
-        .persist()
-    )
-    # directed high→low, self-loops dropped
-    edges = (
-        pairs.select(
-            F.greatest(F.col(src), F.col(dst)).alias("u"),
-            F.least(F.col(src), F.col(dst)).alias("v"),
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .persist()
-    )
-    converged = False
-    prev = edges
-    for it in range(max_iterations):
-        sym = prev.union(prev.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        # large-star: m(u) = min over N(u)∪{u}; rewire strictly-larger
-        # neighbors to m
-        mins = sym.groupBy("u").agg(
-            F.min(F.least(F.col("v"), F.col("u"))).alias("m")
-        )
-        large = (
-            sym.where(F.col("v") > F.col("u"))
-            .join(mins, "u")
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-        )
-        e1 = (
-            large.select(
-                F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v")
-            )
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # small-star over the high→low set: m(u) = min(down-nbrs); every
-        # down-neighbor AND u itself link to m
-        mins2 = e1.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
-            e1.join(mins2, "u")
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-            .union(mins2.select(F.col("u").alias("a"), F.col("m").alias("b")))
-        )
-        new_edges = (
-            small.select(
-                F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v")
-            )
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        if checkpoint_every and (it + 1) % checkpoint_every == 0:
-            new_edges = new_edges.localCheckpoint()
-        else:
-            new_edges = new_edges.persist()
-        # exact fixpoint test: the high→low edge set is canonical, so
-        # equal-count + empty-difference == set equality (two small jobs
-        # per round; the O(log^2 n) round count keeps the total low)
-        same_size = new_edges.count() == prev.count()
-        stable = same_size and new_edges.exceptAll(prev).limit(1).count() == 0
-        if prev is not edges:
-            prev.unpersist()
-        prev = new_edges
-        if stable:
-            converged = True
-            break
-    if not converged:
-        if prev is not edges:
-            prev.unpersist()
-        edges.unpersist()
-        nodes.unpersist()
-        raise RuntimeError(
-            f"connected_components_star did not converge within "
-            f"{max_iterations} iterations"
-        )
-    # at fixpoint every non-root points straight at its component root;
-    # roots (and singletons, if any) label themselves
-    result = (
-        nodes.join(prev.withColumnRenamed("u", "node"), "node", "left")
-        .groupBy("node")
-        .agg(F.min(F.coalesce(F.col("v"), F.col("node"))).alias("component"))
-        .localCheckpoint()
-    )
-    if prev is not edges:
-        prev.unpersist()
-    edges.unpersist()
-    nodes.unpersist()
-    return result
-
-
 def resolve_duplicate_clusters(
     pairs: DataFrame,
     docs: DataFrame,
@@ -904,7 +745,6 @@ def resolve_duplicate_clusters(
     text_col: str,
     src: str = "id_a",
     dst: str = "id_b",
-    strategy: str = "min_label",
 ) -> DataFrame:
     """Pairs → clusters → canonical winner per cluster: the longest text
     wins, ties broken by smallest id (deterministic across partitionings
@@ -913,8 +753,7 @@ def resolve_duplicate_clusters(
     doc; singletons are not duplicates and are left out. Downstream
     "keep one per cluster" is `where(is_canonical)` + anti-join.
     """
-    cc = connected_components if strategy == "min_label" else connected_components_star
-    comps = cc(pairs, src, dst)
+    comps = connected_components(pairs, src, dst)
     scored = comps.join(
         docs.select(
             F.col(id_col).alias("node"), F.length(F.col(text_col)).alias("_tl")

@@ -56,10 +56,10 @@ def similarity_pairs(
 
     The non-equi join plans as a nested-loop PRODUCT — the reference's
     own algorithm, which it caps at 500 documents (ml-service/main.py:418).
-    Same contract here (r4, mirrors embedding_near_dups): inputs above
-    ``max_rows`` are refused so the quadratic plan can never run at
-    scale; pass ``max_rows=None`` only when the caller already bounded
-    the input. The scale path is lsh_bucketed_pairs/embedding_near_dups."""
+    Same contract here (r4): inputs above ``max_rows`` are refused so
+    the quadratic plan can never run at scale; pass ``max_rows=None``
+    only when the caller already bounded the input. The scale path is
+    lsh_bucketed_pairs."""
     if max_rows is not None:
         # limit(cap+1).count(): the probe job stops materializing the
         # input lineage after cap+1 rows instead of scanning it all
@@ -68,8 +68,8 @@ def similarity_pairs(
         if n > max_rows:
             raise ValueError(
                 f"all-pairs similarity refused: > cap {max_rows} rows "
-                "(quadratic nested-loop plan); use lsh_bucketed_pairs / "
-                "embedding_near_dups at scale, or raise max_rows explicitly"
+                "(quadratic nested-loop plan); use lsh_bucketed_pairs "
+                "at scale, or raise max_rows explicitly"
             )
     a = vectors.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
     b = vectors.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))

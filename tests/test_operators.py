@@ -1,6 +1,8 @@
 """Unit tests for the operator modules (SURVEY.md §5.2 test model):
 known-answer checks computed independently in Python/numpy."""
 
+import random
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -149,6 +151,21 @@ def test_minhash_candidates_find_near_dups(spark, doc_df):
     assert (4, 5) not in out
 
 
+def test_minhash_bands_must_divide_hashes(spark):
+    """With more bands than hashes every band was the same empty slice:
+    all documents shared one bucket and the join emitted every pair
+    (five unrelated docs gave all 10). A band layout that does not
+    divide the signature is refused; a valid one pairs none of them."""
+    docs = spark.createDataFrame(
+        [(i, " ".join(f"w{i}x{j}" for j in range(20))) for i in range(5)],
+        "doc_id long, text string",
+    )
+    for n_hashes, bands in ((64, 128), (64, 0), (64, 24)):
+        with pytest.raises(ValueError, match="must divide"):
+            dedup.minhash_lsh_candidates(docs, "doc_id", "text", n_hashes=n_hashes, bands=bands)
+    assert dedup.minhash_lsh_candidates(docs, "doc_id", "text", n_hashes=64, bands=16).collect() == []
+
+
 def test_simhash_near_dups(spark, doc_df):
     out = {(r.id_a, r.id_b): r.hamming for r in dedup.simhash_near_dups(doc_df, "doc_id", "text", max_hamming=10).collect()}
     assert out.get((1, 2)) == 0
@@ -191,12 +208,15 @@ def test_simhash_block_layout_covers_all_bits():
         assert offs == sorted(offs) and offs[0] == 0
 
 
-def test_embedding_near_dups_default_is_lsh(spark, vec_df):
-    """Default path must be the bucket join (no nested-loop/cartesian in
-    the plan) and still find near-identical vectors; the exact quadratic
-    path must refuse inputs over its explicit cap."""
+def test_embedding_near_dups_lsh_is_bucket_join(spark, vec_df):
+    """The embedding near-dup scale path must be the bucket join (no
+    nested-loop/cartesian in the plan) and still find near-identical
+    vectors; the exact quadratic path must refuse inputs over its
+    explicit cap."""
     df, rows = vec_df
-    out = dedup.embedding_near_dups(df, "vec_id", "embedding", threshold=0.95, n_planes=4)
+    out = similarity.lsh_bucketed_pairs(
+        df, "vec_id", "embedding", len(rows[0][1]), threshold=0.95, n_planes=4
+    )
     plan = out._sc._jvm.PythonSQLUtils.explainString(out._jdf.queryExecution(), "formatted")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -208,7 +228,7 @@ def test_embedding_near_dups_default_is_lsh(spark, vec_df):
     assert pairs <= brute and pairs
 
     with pytest.raises(ValueError, match="refused"):
-        dedup.embedding_near_dups(df, "vec_id", "embedding", exact_max_rows=3)
+        similarity.similarity_pairs(df, "vec_id", "embedding", 0.98, max_rows=3)
 
 
 def test_dedup_by_key_keeps_newest(spark):
@@ -217,6 +237,24 @@ def test_dedup_by_key_keeps_newest(spark):
     )
     out = {r.k: (r.ver, r.v) for r in dedup.dedup_by_key(df, "k", "ver").collect()}
     assert out == {"a": (2, 20), "b": (1, 30)}
+
+
+def _union_find_components(pairs):
+    """Stdlib oracle: node -> min node id of its connected component."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
 
 
 def test_connected_components_shapes(spark):
@@ -236,6 +274,18 @@ def test_connected_components_shapes(spark):
         for r in dedup.connected_components(edges.repartition(7), "id_a", "id_b").collect()
     }
     assert got2 == got
+    rng = random.Random(7)
+    chain = [(i, i + 1) for i in range(1, 41)]  # diameter 40
+    rand = [(rng.randrange(50), rng.randrange(50)) for _ in range(60)]
+    for pairs in (chain, [(a, b) for a, b in rand if a != b]):
+        edges = spark.createDataFrame(pairs, "id_a long, id_b long")
+        got = {
+            r.node: r.component
+            for r in dedup.connected_components(edges, "id_a", "id_b").collect()
+        }
+        assert got == _union_find_components(pairs)
+        if pairs is chain:  # the default max_iterations converges on it
+            assert set(got.values()) == {1}
 
 
 def test_connected_components_nonconvergence_raises(spark):
@@ -247,68 +297,6 @@ def test_connected_components_nonconvergence_raises(spark):
     )
     with pytest.raises(RuntimeError, match="did not converge"):
         dedup.connected_components(chain, "id_a", "id_b", max_iterations=2)
-
-
-def test_connected_components_star_matches_min_label(spark):
-    """The large-star/small-star strategy (O(log^2 n) rounds, diameter-
-    independent) must produce EXACTLY min-label's components on every
-    graph shape — including the long chain where min-label needs O(n)
-    rounds and a shuffled node order."""
-    import random
-
-    cases = [
-        # long chain: diameter 40 — the adversarial case the strategy is for
-        [(i, i + 1) for i in range(1, 41)],
-        # chain + cycle + pair (the shapes test's graph)
-        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (11, 12), (12, 10), (20, 21)],
-        # random graph, seeded
-        [(random.Random(7).randrange(50), random.Random(7 + i).randrange(50))
-         for i in range(60)],
-    ]
-    for pairs in cases:
-        pairs = [(a, b) for a, b in pairs if a != b]
-        edges = spark.createDataFrame(pairs, "id_a long, id_b long")
-        star = {
-            r.node: r.component
-            for r in dedup.connected_components_star(edges, "id_a", "id_b").collect()
-        }
-        label = {
-            r.node: r.component
-            for r in dedup.connected_components(edges, "id_a", "id_b").collect()
-        }
-        assert star == label
-    # on the 40-chain, min-label at 8 rounds fails while star converges
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 41)], "id_a long, id_b long"
-    )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components(chain, "id_a", "id_b", max_iterations=8)
-    got = dedup.connected_components_star(chain, "id_a", "id_b", max_iterations=8)
-    assert {r.component for r in got.collect()} == {1}
-
-
-def test_resolve_clusters_strategy_param(spark):
-    """resolve_duplicate_clusters(strategy='star') must pick identical
-    canonical winners."""
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
-    )
-    docs = spark.createDataFrame(
-        [(i, "x" * (10 + i)) for i in (1, 2, 3, 10, 11, 99)],
-        "doc_id long, text string",
-    )
-    a = sorted(
-        map(tuple, dedup.resolve_duplicate_clusters(pairs, docs, "doc_id", "text").collect())
-    )
-    b = sorted(
-        map(
-            tuple,
-            dedup.resolve_duplicate_clusters(
-                pairs, docs, "doc_id", "text", strategy="star"
-            ).collect(),
-        )
-    )
-    assert a == b and len(a) == 5
 
 
 def test_resolve_duplicate_clusters_canonical(spark):

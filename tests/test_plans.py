@@ -119,10 +119,11 @@ def test_status_claim_is_broadcast(spark):
 
 
 def test_embedding_near_dups_no_nested_loop(spark):
-    from readability_scanner_spark.operators.dedup import embedding_near_dups
+    from readability_scanner_spark.operators.similarity import lsh_bucketed_pairs
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    plan = _plan(embedding_near_dups(emb, "vec_id", "embedding", threshold=0.95, n_planes=4))
+    dim = len(emb.select("embedding").first()[0])
+    plan = _plan(lsh_bucketed_pairs(emb, "vec_id", "embedding", dim, threshold=0.95, n_planes=4))
     assert "CartesianProduct" not in plan
 
 
@@ -163,6 +164,54 @@ def test_simhash_plan_shape(spark):
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
     # a repartition exchange sits between the join and the sort
     assert plan.index("Sort ") < plan.index("BroadcastHashJoin")
+
+
+def test_minhash_plan_shape(spark):
+    """The banded self-join reads ONE materialized signature table on
+    both sides (no second MapInPandas lineage) and broadcasts its build
+    side while under the cap."""
+    from readability_scanner_spark.operators.dedup import minhash_lsh_candidates
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    plan = _plan(minhash_lsh_candidates(docs, "doc_id", "text"))
+    assert "MapInPandas" not in plan  # signatures pre-materialized once
+    assert "BroadcastHashJoin" in plan
+
+
+@pytest.mark.parametrize("op", ["minhash", "simhash", "jaccard_verify"])
+def test_over_cap_falls_back_to_shuffled_join(spark, monkeypatch, op):
+    """Past its broadcast cap each near-dup join must plan without a
+    broadcast build side and still return the broadcast path's pairs.
+    The planner's own auto-broadcast is switched off for the capped run:
+    its estimate of a checkpoint comes from the origin plan's compressed
+    source bytes, which sit under the threshold on these tiny inputs."""
+    from readability_scanner_spark.operators import dedup
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    if op == "minhash":
+        cap = "KEYED_BROADCAST_MAX_ROWS"
+        build = lambda: dedup.minhash_lsh_candidates(docs, "doc_id", "text")
+    elif op == "simhash":
+        cap = "SIMHASH_BROADCAST_MAX_ROWS"
+        build = lambda: dedup.simhash_near_dups(docs, "doc_id", "text", max_hamming=6)
+    else:
+        cap = "KEYED_BROADCAST_MAX_ROWS"
+        cand = dedup.minhash_lsh_candidates(docs, "doc_id", "text").localCheckpoint()
+        build = lambda: dedup.ngram_jaccard_verify(cand, docs, "doc_id", "text", 0.5)
+    broadcast = build()
+    assert "BroadcastHashJoin" in _plan(broadcast)
+    expected = broadcast.collect()
+    monkeypatch.setattr(dedup, cap, 0)
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        shuffled = build()
+        plan = _plan(shuffled)
+        got = shuffled.collect()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    assert "BroadcastHashJoin" not in plan and "SortMergeJoin" in plan
+    assert got == expected and got
 
 
 def test_repetition_signals_df_form_binds_tokens(spark):
