@@ -1,5 +1,5 @@
 """Text-analysis operators for training-data pipelines: language ID,
-quality scoring, token counting, document fingerprinting.
+quality scoring, token counting, repetition signals, PII redaction.
 
 All JVM-side Column expressions (regexp_count / length arithmetic) so
 they compose with the extraction pipeline at 100 TB without Python.
@@ -36,87 +36,12 @@ _LANG_MARKERS = {
 # cheaper NFAs than the 40-word union.
 
 
-def lang_scores(text: Column) -> dict[str, Column]:
-    words = F.greatest(F.regexp_count(text, F.lit(WORD_RUN)), F.lit(1))
-    return {
-        lang: F.regexp_count(F.lower(text), F.lit(pattern)) / words
-        for lang, pattern in _LANG_MARKERS.items()
-    }
-
-
 # CJK script classes (shared with the DuckDB oracle — identical literal
 # ranges in Java regex and RE2)
 _KANA = r"[ぁ-ゟ゠-ヿ]"  # hiragana + katakana
 _HANGUL = r"[가-힣]"
 _HAN = r"[一-鿿]"
 _KANA_MIN = 0.05  # japanese mixes kanji+kana: any real kana share → ja
-
-
-def _cjk_densities(text: Column) -> tuple[Column, Column, Column]:
-    n_chars = F.greatest(F.length(text), F.lit(1))
-    return (
-        F.regexp_count(text, F.lit(_KANA)) / n_chars,
-        F.regexp_count(text, F.lit(_HANGUL)) / n_chars,
-        F.regexp_count(text, F.lit(_HAN)) / n_chars,
-    )
-
-
-def lang_id_col(text: Column, min_ratio: float = 0.01, cjk_ratio: float = 0.2) -> Column:
-    """Pick the language with max stopword density; CJK by codepoint
-    density (no whitespace-delimited stopwords there): kana presence
-    discriminates ja from zh (Japanese prose always carries kana),
-    hangul → ko, han-only → zh. 'und' if nothing clears its floor.
-    Deterministic tie-break by language code order."""
-    scores = lang_scores(text)
-    pairs = F.array(
-        *[
-            F.struct(scores[lang].alias("score"), F.lit(lang).alias("lang"))
-            for lang in sorted(_LANG_MARKERS)
-        ]
-    )
-    best = F.array_max(pairs)
-    kana, hangul, han = _cjk_densities(text)
-    return (
-        F.when(kana >= _KANA_MIN, F.lit("ja"))
-        .when(hangul >= cjk_ratio, F.lit("ko"))
-        .when(han >= cjk_ratio, F.lit("zh"))
-        .when(best["score"] >= min_ratio, best["lang"])
-        .otherwise(F.lit("und"))
-    )
-
-
-def quality_score_col(text: Column, cjk_ratio: float = 0.2) -> Column:
-    """Composite quality heuristic in [0,1]: length band + punctuation
-    ratio + stopword ratio + mean word length band (the classic C4-style
-    filters folded into one score). The stopword term follows the
-    DETECTED language (max marker density across marker sets, not
-    English-only); CJK documents — which have no whitespace-delimited
-    stopwords — pass that term instead of flooring at 0.5."""
-    n_chars = F.length(text)
-    words = F.greatest(F.regexp_count(text, F.lit(WORD_RUN)), F.lit(1))
-    sentences = F.greatest(F.regexp_count(text, F.lit(r"[.!?]")), F.lit(1))
-    punct_ratio = F.regexp_count(text, F.lit(r"[.,;:!?]")) / words
-    best_marker = F.greatest(*lang_scores(text).values())
-    kana, hangul, han = _cjk_densities(text)
-    is_cjk = (kana >= _KANA_MIN) | (hangul >= cjk_ratio) | (han >= cjk_ratio)
-    mean_word_len = n_chars / words
-    length_ok = F.when((n_chars >= 100) & (n_chars <= 50000), 1.0).otherwise(0.3)
-    punct_ok = F.when((punct_ratio >= 0.02) & (punct_ratio <= 0.4), 1.0).otherwise(0.4)
-    stop_ok = F.when(is_cjk | (best_marker >= 0.05), 1.0).otherwise(0.5)
-    wordlen_ok = F.when((mean_word_len >= 3) & (mean_word_len <= 12), 1.0).otherwise(0.4)
-    asl_ok = F.when(words / sentences <= 60, 1.0).otherwise(0.5)
-    score = (length_ok + punct_ok + stop_ok + wordlen_ok + asl_ok) / F.lit(5.0)
-    # content-free rows score hard zero: the word/sentence floors would
-    # otherwise give empty/null text 0.52 — ABOVE a 0.5 quality cut.
-    # Emptiness = nothing left after removing the UNICODE ws class (r5
-    # review find: F.trim strips only ASCII space, so '\n\n' or U+3000
-    # scored 0.64 on Spark while the oracle's WS_CLASS removal scored
-    # 0.0 — divergent on the first whitespace-only document)
-    empty = (
-        F.coalesce(F.length(F.regexp_replace(text, F.lit(WS_CLASS), F.lit(""))), F.lit(0))
-        == 0
-    )
-    return F.when(empty, F.lit(0.0)).otherwise(score)
 
 
 # PII patterns as (java_pattern, re2_pattern, replacement) triples.
@@ -166,81 +91,33 @@ def pii_hits_col(text: Column) -> Column:
     return total.cast("long")
 
 
-def repetition_signals(text: Column, max_bigrams: int = 500) -> dict[str, Column]:
-    """Gopher-style repetition filters as JVM expressions:
+def with_repetition_signals(
+    df: DataFrame, text_col: str = "text", max_bigrams: int = 500
+) -> DataFrame:
+    """Gopher-style repetition filters:
 
     - dup_word_frac: 1 - distinct/total words — boilerplate and keyword
       stuffing push this up.
     - top_bigram_frac: share of the most frequent word bigram among the
       first ``max_bigrams`` bigrams.
 
-    PERFORMANCE WARNING (r6): this Column form captures the raw
-    split+filter token expression inside the bigram transform's lambda,
-    which re-evaluates PER ELEMENT — re-tokenizing the document once
-    per bigram, O(n_tokens x cap) full-string splits per row (measured
-    292 s for a 50k-doc corpus query). Use
-    :func:`with_repetition_signals` on any real data path; this form is
-    kept only for expression-level composition and small inputs.
-    """
+    The token and bigram arrays are projected as BOUND columns (r6): a
+    bigram transform that captures the split+filter token expression in
+    its lambda re-evaluates it PER ELEMENT — re-tokenizing the document
+    once per bigram, O(n_tokens x cap) string splits per row (the repo's
+    measured O(n^2) lambda-capture trap; this was the dominant term of
+    the 292 s text_quality_filters measurement at sf1.0)."""
     # WS_RUN, not Java \s: Java's class contains U+000B and misses
     # U+3000 — both present in real corpora, both cross-engine traps
     # (r5 review/corpus find). The unicode class splits identically in
     # Java and RE2 and matches Python's \s.
-    toks = F.filter(F.split(F.lower(text), WS_RUN), lambda x: x != "")
-    n = F.size(toks)
-    dup_word = F.when(
-        n > 0, 1.0 - F.size(F.array_distinct(toks)) / n.cast("double")
-    ).otherwise(0.0)
-    # only the first max_bigrams bigrams are ever examined — build just
-    # those (r6; previously ALL n-1 bigrams were built then sliced)
-    bi = F.when(
-        n >= 2,
-        F.transform(
-            F.sequence(F.lit(0), F.least(n - 2, F.lit(max_bigrams - 1))),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 2)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    nb = F.size(bi)
-    # mode count via sort + longest equal-adjacent run (r6): the
-    # previous distinct x occurrences form cost O(cap^2) lambda evals
-    # per document (measured 292 s for the corpus query at sf1.0);
-    # the run-length fold over the sorted array is O(cap log cap) and
-    # yields the identical maximum count
-    top = F.aggregate(
-        F.array_sort(bi),
-        F.struct(
-            F.lit("\x00").alias("prev"), F.lit(0).alias("run"), F.lit(0).alias("mx")
-        ),
-        lambda acc, x: F.struct(
-            x.alias("prev"),
-            F.when(x == acc["prev"], acc["run"] + 1).otherwise(F.lit(1)).alias("run"),
-            F.greatest(
-                acc["mx"],
-                F.when(x == acc["prev"], acc["run"] + 1).otherwise(F.lit(1)),
-            ).alias("mx"),
-        ),
-        lambda acc: acc["mx"],
-    )
-    top_frac = F.when(nb > 0, top / nb.cast("double")).otherwise(0.0)
-    return {"dup_word_frac": dup_word, "top_bigram_frac": top_frac}
-
-
-def with_repetition_signals(
-    df: DataFrame, text_col: str = "text", max_bigrams: int = 500
-) -> DataFrame:
-    """DataFrame form of :func:`repetition_signals` with the token and
-    bigram arrays projected as BOUND columns (r6). The column form's
-    bigram transform captures the split+filter token expression in a
-    lambda, which re-evaluates PER ELEMENT — re-tokenizing the document
-    once per bigram, O(n_tokens x cap) string splits per row (the repo's
-    measured O(n^2) lambda-capture trap; this was the dominant term of
-    the 292 s text_quality_filters measurement at sf1.0). Values are
-    identical: same token stream, same bigram strings, same fold."""
     step1 = df.withColumn(
         "_rs_toks", F.filter(F.split(F.lower(F.col(text_col)), WS_RUN), lambda x: x != "")
     )
     toks = F.col("_rs_toks")
     n = F.size(toks)
+    # only the first max_bigrams bigrams are ever examined — build just
+    # those, not all n-1
     bi = F.when(
         n >= 2,
         F.transform(
@@ -258,6 +135,10 @@ def with_repetition_signals(
     dup_word = F.when(
         n > 0, 1.0 - F.size(F.array_distinct(toks)) / n.cast("double")
     ).otherwise(0.0)
+    # mode count via sort + longest equal-adjacent run (r6): a distinct x
+    # occurrences form costs O(cap^2) lambda evals per document (measured
+    # 292 s for the corpus query at sf1.0); the run-length fold over the
+    # sorted array is O(cap log cap) and yields the identical maximum
     top = F.aggregate(
         F.array_sort(bib),
         F.struct(
@@ -295,43 +176,19 @@ def token_count_col(text: Column) -> Column:
     return F.regexp_count(text, F.lit(r"\w+|[^\w \t\n\x0B\f\r]")).cast("long")
 
 
-def fingerprint_col(text: Column, k: int = 8, toks_col: Column | None = None) -> Column:
-    """Rolling-hash document fingerprint: xxhash64 of each k-word window,
-    min value wins (winnowing-lite, stable under small edits at the
-    document tail).
-
-    Pass ``toks_col`` as a BOUND column (projected alias) on hot paths:
-    the window lambda references the token array per element, and a
-    lambda-captured split+filter expression re-tokenizes the document
-    for every window (the repo's measured O(n^2) trap)."""
-    toks = toks_col if toks_col is not None else F.filter(
-        F.split(F.lower(text), WS_RUN), lambda x: x != ""
-    )
-    n = F.size(toks)
-    windows = F.when(
-        n >= k,
-        F.transform(
-            F.sequence(F.lit(0), n - k),
-            lambda i: F.xxhash64(F.concat_ws(" ", F.slice(toks, i + 1, k))),
-        ),
-    ).otherwise(F.array(F.xxhash64(F.concat_ws(" ", toks))))
-    return F.array_min(windows)
-
-
-# --- fused lang+quality (optimization r6) -----------------------------------
+# --- lang + quality over bound counts (optimization r6) ---------------------
 #
-# lang_id_col and quality_score_col share their expensive subexpressions
+# Language ID and the quality score share their expensive subexpressions
 # (the word-run count, the 4 stopword-marker counts over lower(text), the
-# 3 CJK codepoint counts, the codepoint length): selecting both columns
-# in one Project evaluates every shared regex TWICE (measured: the fused
-# query below costs MORE than the sum of its isolated parts — whole-stage
-# codegen subexpression elimination does not collapse them). The fix is
-# the repo's standard bound-column trick: project each shared count once
-# under an alias in a lower Project — CollapseProject cannot re-inline a
-# non-cheap multi-referenced alias — and express both outputs over the
-# bound attributes. The arithmetic shape on top of the counts is
-# UNCHANGED (same divisions over the same integer inputs), so results
-# are bit-identical to the unfused forms and the DuckDB oracles.
+# 3 CJK codepoint counts, the codepoint length): selecting both as plain
+# Column expressions in one Project evaluates every shared regex TWICE
+# (measured: the pair cost MORE than the sum of its isolated parts —
+# whole-stage codegen subexpression elimination does not collapse them).
+# The fix is the repo's standard bound-column trick: project each shared
+# count once under an alias in a lower Project — CollapseProject cannot
+# re-inline a non-cheap multi-referenced alias — and express both outputs
+# over the bound attributes. The arithmetic on top of the counts keeps the
+# DuckDB oracles' shape (same divisions over the same integer inputs).
 
 _QL_TMP = (
     "_ql_low",
@@ -379,6 +236,11 @@ def _densities_from_counts() -> tuple[Column, Column, Column]:
 
 
 def _lang_id_from_counts(min_ratio: float = 0.01, cjk_ratio: float = 0.2) -> Column:
+    """Pick the language with max stopword density; CJK by codepoint
+    density (no whitespace-delimited stopwords there): kana presence
+    discriminates ja from zh (Japanese prose always carries kana),
+    hangul → ko, han-only → zh. 'und' if nothing clears its floor.
+    Deterministic tie-break by language code order."""
     scores = _scores_from_counts()
     pairs = F.array(
         *[
@@ -398,6 +260,12 @@ def _lang_id_from_counts(min_ratio: float = 0.01, cjk_ratio: float = 0.2) -> Col
 
 
 def _quality_from_counts(text: Column, cjk_ratio: float = 0.2) -> Column:
+    """Composite quality heuristic in [0,1]: length band + punctuation
+    ratio + stopword ratio + mean word length band (the classic C4-style
+    filters folded into one score). The stopword term follows the
+    DETECTED language (max marker density across marker sets, not
+    English-only); CJK documents — which have no whitespace-delimited
+    stopwords — pass that term instead of flooring at 0.5."""
     n_chars = F.col("_ql_len")
     words = F.greatest(F.col("_ql_words"), F.lit(1))
     sentences = F.greatest(F.regexp_count(text, F.lit(r"[.!?]")), F.lit(1))
@@ -412,6 +280,12 @@ def _quality_from_counts(text: Column, cjk_ratio: float = 0.2) -> Column:
     wordlen_ok = F.when((mean_word_len >= 3) & (mean_word_len <= 12), 1.0).otherwise(0.4)
     asl_ok = F.when(words / sentences <= 60, 1.0).otherwise(0.5)
     score = (length_ok + punct_ok + stop_ok + wordlen_ok + asl_ok) / F.lit(5.0)
+    # content-free rows score hard zero: the word/sentence floors would
+    # otherwise give empty/null text 0.52 — ABOVE a 0.5 quality cut.
+    # Emptiness = nothing left after removing the UNICODE ws class (r5
+    # review find: F.trim strips only ASCII space, so '\n\n' or U+3000
+    # scored 0.64 on Spark while the oracle's WS_CLASS removal scored
+    # 0.0 — divergent on the first whitespace-only document)
     empty = (
         F.coalesce(F.length(F.regexp_replace(text, F.lit(WS_CLASS), F.lit(""))), F.lit(0))
         == 0
@@ -419,28 +293,19 @@ def _quality_from_counts(text: Column, cjk_ratio: float = 0.2) -> Column:
     return F.when(empty, F.lit(0.0)).otherwise(score)
 
 
-def with_lang_quality_cols(
-    df: DataFrame, text_col: str = "text", include_fingerprint: bool = False
-) -> DataFrame:
-    """Add lang_guess / quality_score / n_tokens (and optionally
-    fingerprint) with every shared regex count evaluated once. Output
-    values are bit-identical to the unfused column functions."""
+def with_lang_quality_cols(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Add lang_guess / quality_score / n_tokens with every shared regex
+    count evaluated once — the package's one language/quality scorer
+    (the lang_quality query and curation's gates both read it)."""
     t = F.col(text_col)
-    out_cols = {
-        "lang_guess": _lang_id_from_counts(),
-        "quality_score": _quality_from_counts(t),
-        "n_tokens": token_count_col(t),
-    }
-    base = _shared_count_cols(df, text_col)
-    tmp = list(_QL_TMP)
-    if include_fingerprint:
-        # bind the token array: fingerprint's window lambda captures it,
-        # and a captured split expression re-evaluates per window (the
-        # O(n^2) lambda trap); reuse the bound lower(text) pass
-        base = base.withColumn(
-            "_ql_toks", F.filter(F.split(F.col("_ql_low"), WS_RUN), lambda x: x != "")
+    return (
+        _shared_count_cols(df, text_col)
+        .withColumns(
+            {
+                "lang_guess": _lang_id_from_counts(),
+                "quality_score": _quality_from_counts(t),
+                "n_tokens": token_count_col(t),
+            }
         )
-        tmp.append("_ql_toks")
-        out_cols["fingerprint"] = fingerprint_col(t, toks_col=F.col("_ql_toks"))
-    return base.withColumns(out_cols).drop(*tmp)
-
+        .drop(*_QL_TMP)
+    )

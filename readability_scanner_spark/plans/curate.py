@@ -43,9 +43,8 @@ from readability_scanner_spark.operators.decontam import decontaminate
 from readability_scanner_spark.operators.packing import pack_sequences, split_windows
 from readability_scanner_spark.operators.sampling import split_assign, split_bucket
 from readability_scanner_spark.operators.textquality import (
-    quality_score_col,
     redact_pii_col,
-    token_count_col,
+    with_lang_quality_cols,
 )
 
 DEFAULT_SPLITS = (("train", 8000), ("val", 1000), ("test", 1000))
@@ -68,6 +67,221 @@ def _fingerprint(df: DataFrame, cols: list[str]) -> list[int]:
 
 def _meta_file(output: str) -> str:
     return os.path.join(output, "_meta", "curate.json")
+
+
+def _read_meta(path: str) -> dict | None:
+    if not os.path.exists(path):
+        return None
+    with open(path) as fh:
+        return json.load(fh)
+
+
+class _Stages:
+    """Per-run stage bookkeeping shared by both entry points: the
+    stage counts, and every frame pinned at a stage boundary. As a
+    context manager it unpersists every pin on exit, even when a
+    mid-chain action throws."""
+
+    def __init__(self, stats: bool):
+        self.stats = stats
+        self.counts: dict = {}
+        self._pinned: list[DataFrame] = []
+
+    def __enter__(self) -> "_Stages":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        for df in self._pinned:
+            df.unpersist()
+
+    def pin(self, df: DataFrame) -> DataFrame:
+        df = df.persist()
+        self._pinned.append(df)
+        return df
+
+    def boundary(self, df: DataFrame, count_key: str) -> DataFrame:
+        """With stats on, persist each stage boundary so its count does
+        not re-execute the whole upstream chain (and the next stage
+        reads the persisted result); with stats off, a pass-through."""
+        if not self.stats:
+            return df
+        df = self.pin(df)
+        self.counts[count_key] = df.count()
+        return df
+
+
+def _input_docs(
+    st: _Stages, docs: DataFrame, id_col: str, n_in: int, repartition_to: int | None
+) -> DataFrame:
+    """Spread the scan when asked, then drop NULL ids: they have no
+    place in any downstream contract (dedup's min-id winner,
+    split_assign, pack_sequences each drop or mangle them differently)
+    — drop them ONCE, visibly, up front."""
+    if repartition_to:
+        docs = docs.repartition(repartition_to)
+    docs = docs.where(F.col(id_col).isNotNull())
+    if st.stats:
+        st.counts["docs_in"] = docs.count()
+        st.counts["null_ids_dropped"] = n_in - st.counts["docs_in"]
+    return docs
+
+
+def _redact(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Redact FIRST: PII must not survive into any downstream text,
+    including the dedup hashes; every later stage sees ``(id, text)``."""
+    return docs.select(
+        F.col(id_col).alias("id"),
+        redact_pii_col(F.col(text_col)).alias("text"),
+    )
+
+
+def _gate(df: DataFrame, min_tokens: int, min_quality: float) -> DataFrame:
+    """Annotate ``text`` with n_tokens / quality_score and keep the rows
+    that clear both floors."""
+    return (
+        with_lang_quality_cols(df, "text")
+        .drop("lang_guess")
+        .where(
+            (F.col("n_tokens") >= min_tokens)
+            & (F.col("quality_score") >= F.lit(min_quality))
+        )
+    )
+
+
+def _drop_contaminated(
+    st: _Stages, kept: DataFrame, benchmark: DataFrame, text_col: str, n: int
+) -> DataFrame:
+    """Drop any doc sharing an n-gram with the eval suite (hit_ratio
+    threshold left at "any hit" — the conservative published default).
+    The benchmark text is redacted with the SAME patterns as the corpus:
+    both sides must shingle the same token stream or a PII-bearing eval
+    passage could never match its redacted training-side copy."""
+    bench = benchmark.select(redact_pii_col(F.col(text_col)).alias("text"))
+    contaminated = decontaminate(kept, bench, "id", "text", n=n)
+    return st.boundary(
+        kept.join(contaminated.select("id"), "id", "left_anti"), "after_decontam"
+    )
+
+
+def _exact_dedup(kept: DataFrame) -> DataFrame:
+    """Keep the min-id representative per content hash. The survivors
+    then CARRY their hashes — the corpus's stored content identity, and
+    deliberately the hash of the PRE-span-clean redacted text: that is
+    what exact dedup itself keyed on, so an incremental batch
+    anti-joining these hashes reproduces exactly the dedup a
+    from-scratch run would have done (post-clean hashes would miss a
+    batch doc equal to a corpus doc's original text — span cleaning
+    would then collapse them into stored duplicates)."""
+    winners = exact_dedup(kept, "text", "id").select(F.col("keep_id").alias("id"))
+    h1, h2 = content_hash_cols("text")
+    return kept.join(winners, "id", "left_semi").withColumns(
+        {"content_h1": h1, "content_h2": h2}
+    )
+
+
+def _span_clean(
+    st: _Stages, kept: DataFrame, span_k: int, min_tokens: int, min_quality: float
+) -> DataFrame:
+    """Duplicated-span removal, then BOTH gates — token floor and
+    quality — re-applied to the cleaned text (the pre-clean score
+    describes text that no longer exists). content_h1/h2 ride through
+    UNCHANGED (see :func:`_exact_dedup`): recomputing them post-clean
+    would make delta dedup diverge from a from-scratch run whenever
+    span cleaning modified a corpus doc."""
+    cleaned = remove_duplicated_spans(kept, "id", "text", k=span_k)
+    if st.stats:
+        cleaned = st.pin(cleaned)
+        st.counts["tokens_removed_as_spans"] = int(
+            cleaned.agg(F.sum("tokens_removed")).first()[0] or 0
+        )
+    return st.boundary(
+        _gate(
+            kept.drop("text", "n_tokens", "quality_score")
+            .join(cleaned, "id")
+            .withColumnRenamed("clean_text", "text"),
+            min_tokens,
+            min_quality,
+        ),
+        "after_span_dedup",
+    )
+
+
+def _assign_splits(
+    kept: DataFrame, splits: list, salt: int, n_shards: int, batch: str
+) -> DataFrame:
+    """Deterministic split + shard (content-addressed: both survive any
+    repartition of the corpus), in the stored ``curated/`` layout."""
+    return kept.select(
+        "id",
+        "text",
+        "n_tokens",
+        "quality_score",
+        # stored content identity (pre-span-clean redacted text, see
+        # _exact_dedup): a later delta batch dedups against the corpus
+        # by scanning these two long columns (column pruning — never
+        # the text)
+        "content_h1",
+        "content_h2",
+        split_assign(F.col("id"), splits, salt=salt),
+        split_bucket(F.col("id"), salt=salt + 1, buckets=n_shards)
+        .cast("long")
+        .alias("shard"),
+        # ingestion batch as a partition column: the base run owns
+        # batch=base; each delta owns batch=<tag>, which makes a delta
+        # retry an idempotent dynamic-partition overwrite
+        F.lit(batch).alias("batch"),
+    )
+
+
+def _count_splits(st: _Stages, final: DataFrame) -> None:
+    if st.stats:
+        st.counts["splits"] = {
+            r["split"]: r["n"]
+            for r in final.groupBy("split").agg(F.count("*").alias("n")).collect()
+        }
+
+
+def _pack(
+    spark: SparkSession,
+    st: _Stages,
+    final: DataFrame,
+    splits: list,
+    n_shards: int,
+    seq_len: int,
+    packed_path: str,
+    windows_path: str,
+) -> None:
+    """Pack within (split, shard) so bins never mix splits, then write
+    the training-ready fan-out: one row per seq_len window (oversize
+    docs split; JVM-only explode, no extra shuffle). pack_sequences
+    wants an int64 shard, so (split_index, shard) is encoded as
+    split_idx * n_shards + shard."""
+    split_idx = F.lit(None).cast("int")
+    for i, (label, _) in enumerate(splits):
+        split_idx = F.when(F.col("split") == label, i).otherwise(split_idx)
+    packable = final.withColumn(
+        "pack_shard",
+        (split_idx.cast("long") * F.lit(n_shards) + F.col("shard")),
+    )
+    packed = pack_sequences(packable, "id", "n_tokens", "pack_shard", seq_len)
+    packed.write.mode("overwrite").parquet(packed_path)
+    split_windows(spark.read.parquet(packed_path), seq_len).write.mode(
+        "overwrite"
+    ).parquet(windows_path)
+    if st.stats:
+        st.counts["packed_docs"] = spark.read.parquet(packed_path).count()
+        st.counts["training_windows"] = spark.read.parquet(windows_path).count()
+
+
+def _write_meta(path: str, meta: dict) -> dict:
+    """Atomic meta commit: a crash mid-write never leaves a partial
+    file that a re-submission would read as a completed run."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = path + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump(meta, fh, indent=2, sort_keys=True)
+    os.replace(tmp, path)
+    return meta
 
 
 def curate_corpus(
@@ -144,9 +358,8 @@ def curate_corpus(
         "stats": stats,
     }
     deltas_dir = os.path.join(output, "_meta", "deltas")
-    if not force and os.path.exists(meta_path):
-        with open(meta_path) as fh:
-            prev = json.load(fh)
+    prev = None if force else _read_meta(meta_path)
+    if prev is not None:
         # tolerate metas written before newer param keys existed —
         # default the missing keys instead of treating a blind
         # re-submission as a changed contract (a rebuild here would
@@ -164,155 +377,26 @@ def curate_corpus(
             "their rows — pass force=True to confirm"
         )
 
-    if repartition_to:
-        docs = docs.repartition(repartition_to)
-
-    counts: dict[str, int] = {}
-    # every stage-boundary persist registers here; the single finally
-    # below unpersists them even when a mid-chain action throws
-    pinned: list[DataFrame] = []
-
-    def _boundary(df: DataFrame, count_key: str | None) -> DataFrame:
-        """With stats on, persist each stage boundary so its count does
-        not re-execute the whole upstream chain (and the next stage
-        reads the persisted result); with stats off, a pass-through."""
-        if not stats:
-            return df
-        df = df.persist()
-        pinned.append(df)
-        if count_key is not None:
-            counts[count_key] = df.count()
-        return df
-
-    try:
-        # NULL ids have no place in any downstream contract (dedup's min-id
-        # winner, split_assign, pack_sequences each drop or mangle them
-        # differently) — drop them ONCE, visibly, up front
-        docs = docs.where(F.col(id_col).isNotNull())
-        if stats:
-            counts["docs_in"] = docs.count()
-            counts["null_ids_dropped"] = fp[1] - counts["docs_in"]
-
-        # 1. redact FIRST (PII must not survive into any downstream text,
-        #    including the dedup hashes), then annotate on the redacted text
-        redacted = docs.select(
-            F.col(id_col).alias("id"),
-            redact_pii_col(F.col(text_col)).alias("text"),
-        )
-        annotated = redacted.withColumns(
-            {
-                "n_tokens": token_count_col(F.col("text")),
-                "quality_score": quality_score_col(F.col("text")),
-            }
-        )
-
-        # 2. quality gate
-        kept = _boundary(
-            annotated.where(
-                (F.col("n_tokens") >= min_tokens)
-                & (F.col("quality_score") >= F.lit(min_quality))
-            ),
+    with _Stages(stats) as st:
+        docs = _input_docs(st, docs, id_col, fp[1], repartition_to)
+        # 1-2. redact, then the quality gate on the redacted text
+        kept = st.boundary(
+            _gate(_redact(docs, id_col, text_col), min_tokens, min_quality),
             "after_quality",
         )
-
-        # 3. benchmark decontamination: drop any doc sharing an n-gram with
-        #    the eval suite (hit_ratio threshold left at "any hit" — the
-        #    conservative published default). The benchmark text is redacted
-        #    with the SAME patterns as the corpus: both sides must shingle
-        #    the same token stream or a PII-bearing eval passage could never
-        #    match its redacted training-side copy
+        # 3. benchmark decontamination
         if benchmark is not None:
-            bench = benchmark.select(
-                redact_pii_col(F.col(text_col)).alias("text")
-            )
-            contaminated = decontaminate(kept, bench, "id", "text", n=decontam_n)
-            kept = _boundary(
-                kept.join(contaminated.select("id"), "id", "left_anti"),
-                "after_decontam",
-            )
-
-        # 4. exact dedup: survivors are the min-id representative per
-        #    content hash. The surviving rows then CARRY their hashes —
-        #    this is the corpus's stored content identity, and it is
-        #    deliberately the hash of the PRE-span-clean redacted text:
-        #    that is what exact dedup itself keyed on, so an incremental
-        #    batch anti-joining these hashes reproduces exactly the
-        #    dedup a from-scratch run would have done (post-clean hashes
-        #    would miss a batch doc equal to a corpus doc's original
-        #    text — span cleaning would then collapse them into stored
-        #    duplicates)
-        winners = exact_dedup(kept, "text", "id").select(
-            F.col("keep_id").alias("id")
-        )
-        h1, h2 = content_hash_cols("text")
-        kept = _boundary(
-            kept.join(winners, "id", "left_semi").withColumns(
-                {"content_h1": h1, "content_h2": h2}
-            ),
-            "after_exact_dedup",
-        )
-
-        # 5. duplicated-span removal (optional), then re-apply BOTH gates —
-        #    token floor and quality — on the cleaned text (the pre-clean
-        #    score describes text that no longer exists). content_h1/h2
-        #    ride through unchanged (see stage 4).
+            kept = _drop_contaminated(st, kept, benchmark, text_col, decontam_n)
+        # 4. exact dedup
+        kept = st.boundary(_exact_dedup(kept), "after_exact_dedup")
+        # 5. duplicated-span removal (optional) + re-gate
         if span_k is not None:
-            cleaned = remove_duplicated_spans(kept, "id", "text", k=span_k)
-            if stats:
-                cleaned = cleaned.persist()
-                pinned.append(cleaned)
-                counts["tokens_removed_as_spans"] = int(
-                    cleaned.agg(F.sum("tokens_removed")).first()[0] or 0
-                )
-            kept = _boundary(
-                kept.drop("text", "n_tokens", "quality_score")
-                .join(cleaned, "id")
-                .withColumnRenamed("clean_text", "text")
-                .withColumns(
-                    {
-                        "n_tokens": token_count_col(F.col("text")),
-                        "quality_score": quality_score_col(F.col("text")),
-                    }
-                )
-                .where(
-                    (F.col("n_tokens") >= min_tokens)
-                    & (F.col("quality_score") >= F.lit(min_quality))
-                ),
-                "after_span_dedup",
-            )
-
-        # 6. deterministic split + shard (content-addressed: both survive
-        #    any repartition of the corpus)
-        final = kept.select(
-            "id",
-            "text",
-            "n_tokens",
-            "quality_score",
-            # stored content identity (pre-span-clean redacted text, see
-            # stage 4): a later delta batch dedups against the corpus by
-            # scanning these two long columns (column pruning — never
-            # the text)
-            "content_h1",
-            "content_h2",
-            split_assign(F.col("id"), list(splits), salt=salt),
-            split_bucket(F.col("id"), salt=salt + 1, buckets=n_shards)
-            .cast("long")
-            .alias("shard"),
-            # ingestion batch as a partition column: the base run owns
-            # batch=base; each delta owns batch=<tag>, which makes a
-            # delta retry an idempotent dynamic-partition overwrite
-            F.lit("base").alias("batch"),
-        )
-        # four consumers from here (split stats, write, packing, pack write)
-        final = final.persist()
-        pinned.append(final)
-        if stats:
-            counts["splits"] = {
-                r["split"]: r["n"]
-                for r in final.groupBy("split")
-                .agg(F.count("*").alias("n"))
-                .collect()
-            }
+            kept = _span_clean(st, kept, span_k, min_tokens, min_quality)
+        # 6. split + shard; four consumers from here (split stats, write,
+        #    packing, pack write)
+        splits = list(splits)
+        final = st.pin(_assign_splits(kept, splits, salt, n_shards, "base"))
+        _count_splits(st, final)
 
         # a rebuilt corpus invalidates every previously ingested delta:
         # their rows are about to vanish from curated/ (full overwrite)
@@ -335,46 +419,20 @@ def curate_corpus(
             os.path.join(output, "curated")
         )
 
-        # 7. pack within (split, shard) so bins never mix splits;
-        #    pack_sequences wants an int64 shard, so encode
-        #    (split_index, shard) as split_idx * n_shards + shard
-        split_idx = F.lit(None).cast("int")
-        for i, (label, _) in enumerate(splits):
-            split_idx = F.when(F.col("split") == label, i).otherwise(split_idx)
-        packable = final.withColumn(
-            "pack_shard",
-            (split_idx.cast("long") * F.lit(n_shards) + F.col("shard")),
+        # 7. pack + windows
+        _pack(
+            spark, st, final, splits, n_shards, seq_len,
+            os.path.join(output, "packed"), os.path.join(output, "windows"),
         )
-        packed = pack_sequences(packable, "id", "n_tokens", "pack_shard", seq_len)
-        packed.write.mode("overwrite").parquet(os.path.join(output, "packed"))
-        # the training-ready fan-out: one row per seq_len window
-        # (oversize docs split; JVM-only explode, no extra shuffle)
-        split_windows(
-            spark.read.parquet(os.path.join(output, "packed")), seq_len
-        ).write.mode("overwrite").parquet(os.path.join(output, "windows"))
-        if stats:
-            counts["packed_docs"] = spark.read.parquet(
-                os.path.join(output, "packed")
-            ).count()
-            counts["training_windows"] = spark.read.parquet(
-                os.path.join(output, "windows")
-            ).count()
-
-        meta = {
-            "input_fingerprint": fp,
-            "params": params,
-            "counts": counts,
-            "skipped": False,
-        }
-        os.makedirs(os.path.dirname(meta_path), exist_ok=True)
-        tmp = meta_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh, indent=2, sort_keys=True)
-        os.replace(tmp, meta_path)
-        return meta
-    finally:
-        for df in pinned:
-            df.unpersist()
+        return _write_meta(
+            meta_path,
+            {
+                "input_fingerprint": fp,
+                "params": params,
+                "counts": st.counts,
+                "skipped": False,
+            },
+        )
 
 
 def committed_batches(output: str) -> list[str]:
@@ -481,13 +539,12 @@ def curate_delta(
     from-scratch run by construction (pinned in tests).
     """
     base_meta_path = _meta_file(output)
-    if not os.path.exists(base_meta_path):
+    base = _read_meta(base_meta_path)
+    if base is None:
         raise FileNotFoundError(
             f"no base curate run at {output} (missing {base_meta_path}); "
             "run curate_corpus first"
         )
-    with open(base_meta_path) as fh:
-        base = json.load(fh)
     p = base["params"]
     if p["decontam"] and "benchmark_fingerprint" not in p:
         raise ValueError(
@@ -504,19 +561,25 @@ def curate_delta(
         raise ValueError(
             "base run decontaminated; pass the same benchmark DataFrame"
         )
+    if benchmark is not None and not p["decontam"]:
+        # the converse: the batch follows the corpus's contract (no
+        # decontamination), so a supplied eval suite would be silently
+        # ignored and the caller would get its contaminated rows
+        raise ValueError(
+            "base run did not decontaminate; a benchmark here would be "
+            "ignored — drop it, or rebuild the base with it (force=True)"
+        )
 
     fp = _fingerprint(new_docs, [id_col, text_col])
     batch_tag = f"{fp[0] & 0xFFFFFFFFFFFFFFFF:016x}-{fp[1]}"
     delta_meta_path = os.path.join(output, "_meta", "deltas", batch_tag + ".json")
-    if not force and os.path.exists(delta_meta_path):
-        with open(delta_meta_path) as fh:
-            prev = json.load(fh)
-        # the per-batch meta satisfies a re-submission only under the
-        # SAME contract (base params incl. the stats flag) — mirrors
-        # curate_corpus's own skip rule
-        if prev.get("base_params") == p and prev.get("stats") == stats:
-            prev["skipped"] = True
-            return prev
+    prev = None if force else _read_meta(delta_meta_path)
+    # the per-batch meta satisfies a re-submission only under the SAME
+    # contract (base params incl. the stats flag) — mirrors
+    # curate_corpus's own skip rule
+    if prev and prev.get("base_params") == p and prev.get("stats") == stats:
+        prev["skipped"] = True
+        return prev
 
     # benchmark validation runs AFTER the skip check — a redundant
     # re-submission (the common scheduler case) never pays the scan
@@ -528,9 +591,6 @@ def curate_delta(
                 f"different eval suite (base {p.get('benchmark_fingerprint')}, "
                 f"got {bfp}) — batches must apply the corpus's contract"
             )
-
-    if repartition_to:
-        new_docs = new_docs.repartition(repartition_to)
 
     existing = spark.read.parquet(os.path.join(output, "curated"))
     required = {"id", "content_h1", "content_h2", "batch"}
@@ -550,125 +610,39 @@ def curate_delta(
         & (F.col("batch") != batch_tag)
     )
 
-    counts: dict[str, int] = {}
-    pinned: list[DataFrame] = []
-
-    def _boundary(df: DataFrame, count_key: str | None) -> DataFrame:
-        if not stats:
-            return df
-        df = df.persist()
-        pinned.append(df)
-        if count_key is not None:
-            counts[count_key] = df.count()
-        return df
-
-    try:
-        docs = new_docs.where(F.col(id_col).isNotNull())
-        if stats:
-            counts["docs_in"] = docs.count()
-            counts["null_ids_dropped"] = fp[1] - counts["docs_in"]
-
+    with _Stages(stats) as st:
+        docs = _input_docs(st, new_docs, id_col, fp[1], repartition_to)
         # ids already in the corpus are not new documents — drop them
         # before paying for redaction (column-pruned id scan)
-        docs = _boundary(
+        docs = st.boundary(
             docs.join(
                 existing.select(F.col("id").alias(id_col)), id_col, "left_anti"
             ),
             "after_existing_ids",
         )
-
-        redacted = docs.select(
-            F.col(id_col).alias("id"),
-            redact_pii_col(F.col(text_col)).alias("text"),
-        )
-        annotated = redacted.withColumns(
-            {
-                "n_tokens": token_count_col(F.col("text")),
-                "quality_score": quality_score_col(F.col("text")),
-            }
-        )
-        kept = _boundary(
-            annotated.where(
-                (F.col("n_tokens") >= p["min_tokens"])
-                & (F.col("quality_score") >= F.lit(p["min_quality"]))
-            ),
+        kept = st.boundary(
+            _gate(_redact(docs, id_col, text_col), p["min_tokens"], p["min_quality"]),
             "after_quality",
         )
-
         if p["decontam"]:
-            bench = benchmark.select(
-                redact_pii_col(F.col(text_col)).alias("text")
-            )
-            contaminated = decontaminate(
-                kept, bench, "id", "text", n=p["decontam_n"]
-            )
-            kept = _boundary(
-                kept.join(contaminated.select("id"), "id", "left_anti"),
-                "after_decontam",
-            )
-
+            kept = _drop_contaminated(st, kept, benchmark, text_col, p["decontam_n"])
         # dedup within the batch, then against the corpus: the corpus
         # side scans ONLY (content_h1, content_h2)
-        winners = exact_dedup(kept, "text", "id").select(
-            F.col("keep_id").alias("id")
-        )
-        kept = kept.join(winners, "id", "left_semi")
-        h1, h2 = content_hash_cols("text")
-        kept = kept.withColumns({"content_h1": h1, "content_h2": h2})
-        kept = _boundary(
-            kept.join(
+        kept = st.boundary(
+            _exact_dedup(kept).join(
                 existing.select("content_h1", "content_h2"),
                 ["content_h1", "content_h2"],
                 "left_anti",
             ),
             "after_exact_dedup",
         )
-
         if p["span_k"] is not None:
-            # content_h1/h2 ride through UNCHANGED: the stored identity
-            # is the pre-span-clean hash (what exact_dedup keyed on) in
-            # the base run too — recomputing post-clean here would make
-            # delta dedup diverge from a from-scratch run whenever span
-            # cleaning modified a corpus doc
-            cleaned = remove_duplicated_spans(kept, "id", "text", k=p["span_k"])
-            if stats:
-                cleaned = cleaned.persist()
-                pinned.append(cleaned)
-                counts["tokens_removed_as_spans"] = int(
-                    cleaned.agg(F.sum("tokens_removed")).first()[0] or 0
-                )
-            kept = _boundary(
-                kept.drop("text", "n_tokens", "quality_score")
-                .join(cleaned, "id")
-                .withColumnRenamed("clean_text", "text")
-                .withColumns(
-                    {
-                        "n_tokens": token_count_col(F.col("text")),
-                        "quality_score": quality_score_col(F.col("text")),
-                    }
-                )
-                .where(
-                    (F.col("n_tokens") >= p["min_tokens"])
-                    & (F.col("quality_score") >= F.lit(p["min_quality"]))
-                ),
-                "after_span_dedup",
+            kept = _span_clean(
+                st, kept, p["span_k"], p["min_tokens"], p["min_quality"]
             )
 
         splits = [tuple(s) for s in p["splits"]]
-        salt, n_shards, seq_len = p["salt"], p["n_shards"], p["seq_len"]
-        final = kept.select(
-            "id",
-            "text",
-            "n_tokens",
-            "quality_score",
-            "content_h1",
-            "content_h2",
-            split_assign(F.col("id"), list(splits), salt=salt),
-            split_bucket(F.col("id"), salt=salt + 1, buckets=n_shards)
-            .cast("long")
-            .alias("shard"),
-            F.lit(batch_tag).alias("batch"),
-        )
+        final = _assign_splits(kept, splits, p["salt"], p["n_shards"], batch_tag)
         # CUT the lineage before the self-referential append: final's
         # plan reads curated/ (the id/content anti-joins), and Spark
         # refreshes every cached plan over a path it writes — a plain
@@ -679,14 +653,7 @@ def curate_delta(
         # the batch (bounded by the delta, never the corpus) with no
         # dependency on the path being appended.
         final = final.localCheckpoint(eager=True)
-
-        if stats:
-            counts["splits"] = {
-                r["split"]: r["n"]
-                for r in final.groupBy("split")
-                .agg(F.count("*").alias("n"))
-                .collect()
-            }
+        _count_splits(st, final)
 
         # dynamic-partition overwrite: only this batch's
         # (split, batch=<tag>) partitions are replaced — a crashed
@@ -697,38 +664,19 @@ def curate_delta(
             "partitionOverwriteMode", "dynamic"
         ).partitionBy("split", "batch").parquet(os.path.join(output, "curated"))
 
-        split_idx = F.lit(None).cast("int")
-        for i, (label, _) in enumerate(splits):
-            split_idx = F.when(F.col("split") == label, i).otherwise(split_idx)
-        packable = final.withColumn(
-            "pack_shard",
-            (split_idx.cast("long") * F.lit(n_shards) + F.col("shard")),
+        _pack(
+            spark, st, final, splits, p["n_shards"], p["seq_len"],
+            os.path.join(output, "packed_delta", f"batch={batch_tag}"),
+            os.path.join(output, "windows_delta", f"batch={batch_tag}"),
         )
-        packed = pack_sequences(packable, "id", "n_tokens", "pack_shard", seq_len)
-        packed_path = os.path.join(output, "packed_delta", f"batch={batch_tag}")
-        packed.write.mode("overwrite").parquet(packed_path)
-        windows_path = os.path.join(output, "windows_delta", f"batch={batch_tag}")
-        split_windows(spark.read.parquet(packed_path), seq_len).write.mode(
-            "overwrite"
-        ).parquet(windows_path)
-        if stats:
-            counts["packed_docs"] = spark.read.parquet(packed_path).count()
-            counts["training_windows"] = spark.read.parquet(windows_path).count()
-
-        meta = {
-            "batch": batch_tag,
-            "input_fingerprint": fp,
-            "base_params": p,
-            "stats": stats,
-            "counts": counts,
-            "skipped": False,
-        }
-        os.makedirs(os.path.dirname(delta_meta_path), exist_ok=True)
-        tmp = delta_meta_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh, indent=2, sort_keys=True)
-        os.replace(tmp, delta_meta_path)
-        return meta
-    finally:
-        for df in pinned:
-            df.unpersist()
+        return _write_meta(
+            delta_meta_path,
+            {
+                "batch": batch_tag,
+                "input_fingerprint": fp,
+                "base_params": p,
+                "stats": stats,
+                "counts": st.counts,
+                "skipped": False,
+            },
+        )

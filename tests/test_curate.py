@@ -7,6 +7,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
+from readability_scanner_spark.operators.textquality import with_lang_quality_cols
 from readability_scanner_spark.plans.curate import curate_corpus
 
 # Corpus exercising every stage:
@@ -198,18 +199,72 @@ def test_span_clean_reapplies_quality_gate(spark, tmp_path):
     ids = sorted(r.id for r in spark.read.parquet(str(tmp_path / "o/curated")).collect())
     assert 1 not in ids and 2 in ids and 3 in ids
     # and the shipped quality_score describes the CLEANED text
-    rows = {r.id: r for r in spark.read.parquet(str(tmp_path / "o/curated")).collect()}
+    curated = spark.read.parquet(str(tmp_path / "o/curated"))
+    rows = {r.id: r for r in curated.collect()}
     assert rows[2].text == "distinct tail words here now also"
+    # every stored score / token count is the scorer's value for the
+    # stored text (doc 2's pre-clean text had 8 more tokens)
+    recomputed = {
+        r.id: (r.quality_score, r.n_tokens)
+        for r in with_lang_quality_cols(curated.select("id", "text")).collect()
+    }
+    assert recomputed == {i: (r.quality_score, r.n_tokens) for i, r in rows.items()}
 
 
 # --- incremental (delta) ingestion ------------------------------------------------
 
-from readability_scanner_spark.plans.curate import curate_delta
+from readability_scanner_spark.plans.curate import curate_delta, read_curated
 
 
 def test_delta_requires_base_run(spark, corpus, tmp_path):
     with pytest.raises(FileNotFoundError):
         curate_delta(spark, corpus, str(tmp_path / "missing"))
+
+
+def test_delta_rejects_benchmark_when_base_did_not_decontaminate(
+    spark, corpus, bench, tmp_path
+):
+    # the batch follows the corpus's contract (no decontamination): a
+    # supplied eval suite would be silently ignored and its contaminated
+    # rows ingested — fail before any scan instead
+    out = tmp_path / "o"
+    _run(spark, corpus, None, out)
+    batch = spark.createDataFrame(
+        [(40, "a new leak gram one two three four right here")], ["doc_id", "text"]
+    )
+    with pytest.raises(ValueError, match="did not decontaminate"):
+        curate_delta(spark, batch, str(out), benchmark=bench)
+    assert not (out / "_meta" / "deltas").exists()
+
+
+def test_delta_applies_base_min_quality_at_both_gates(spark, tmp_path):
+    # min_tokens=0 isolates the quality floor: every doc below clears the
+    # token floor at both gates, so only min_quality can drop it
+    out = tmp_path / "o"
+    curate_corpus(
+        spark,
+        spark.createDataFrame([(1, _DOCS[-1][1])], ["doc_id", "text"]),
+        str(out),
+        min_tokens=0, min_quality=0.5, span_k=4, seq_len=16, n_shards=2,
+    )
+    repeated = "the quick brown fox jumps over the lazy dog, and the cat naps."
+    batch = spark.createDataFrame(
+        [
+            # whitespace only: quality 0.0 at the first gate
+            (50, " \n\u3000 "),
+            # passes the first gate (quality 1.0); every token sits in a
+            # 4-gram seen twice, so span cleaning leaves '' -> quality
+            # 0.0 at the re-gate
+            (51, repeated + " " + repeated),
+            (52, "a fresh control document arriving in the new batch"),
+        ],
+        ["doc_id", "text"],
+    )
+    c = curate_delta(spark, batch, str(out))["counts"]
+    assert c["after_quality"] == 2       # 50 dropped
+    assert c["after_span_dedup"] == 1    # 51 dropped
+    ids = [r.id for r in read_curated(spark, str(out)).where("batch != 'base'").collect()]
+    assert ids == [52]
 
 
 def test_delta_dedups_against_existing_corpus(spark, corpus, bench, tmp_path):

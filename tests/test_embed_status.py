@@ -167,7 +167,7 @@ def test_pii_redaction_and_hits(spark):
 
 
 def test_repetition_signals(spark):
-    from readability_scanner_spark.operators.textquality import repetition_signals
+    from readability_scanner_spark.operators.textquality import with_repetition_signals
 
     df = spark.createDataFrame(
         [
@@ -176,12 +176,9 @@ def test_repetition_signals(spark):
         ],
         "id long, text string",
     )
-    sig = repetition_signals(F.col("text"))
     out = {
-        r.id: (r.dw, r.tb)
-        for r in df.select(
-            "id", sig["dup_word_frac"].alias("dw"), sig["top_bigram_frac"].alias("tb")
-        ).collect()
+        r.id: (r.dup_word_frac, r.top_bigram_frac)
+        for r in with_repetition_signals(df, "text").collect()
     }
     assert out[1][0] > 0.9 and out[1][1] > 0.4   # "now buy"/"buy now" dominate
     assert out[2][0] == 0.0 and out[2][1] < 0.2

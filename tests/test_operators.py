@@ -326,7 +326,7 @@ def test_lang_id(spark):
         (5, "数据处理系统在大规模集群上运行良好并且性能稳定"),
     ]
     df = spark.createDataFrame(rows, "id long, text string")
-    out = {r.id: r.lang for r in df.select("id", textquality.lang_id_col(F.col("text")).alias("lang")).collect()}
+    out = {r.id: r.lang_guess for r in textquality.with_lang_quality_cols(df).collect()}
     assert out[1] == "en" and out[2] == "de" and out[3] == "fr" and out[4] == "und"
     assert out[5] == "zh"
 
@@ -341,7 +341,7 @@ def test_lang_id_cjk_branches(spark):
         (3, "数据处理系统在大规模集群上运行良好并且性能稳定"),
     ]
     df = spark.createDataFrame(rows, "id long, text string")
-    out = {r.id: r.lang for r in df.select("id", textquality.lang_id_col(F.col("text")).alias("lang")).collect()}
+    out = {r.id: r.lang_guess for r in textquality.with_lang_quality_cols(df).collect()}
     assert out == {1: "ja", 2: "ko", 3: "zh"}
 
 
@@ -361,9 +361,7 @@ def test_quality_stopword_term_follows_language(spark):
     ) * 2
     zh = "数据处理系统在大规模集群上运行良好，并且性能稳定。数据的质量与吞吐率都满足要求，系统每天处理大量文本。" * 3
     df = spark.createDataFrame([(1, de), (2, en), (3, zh)], "id long, text string")
-    out = {r.id: r.q for r in df.select(
-        "id", textquality.quality_score_col(F.col("text")).alias("q")
-    ).collect()}
+    out = {r.id: r.quality_score for r in textquality.with_lang_quality_cols(df).collect()}
     assert out[1] == out[2]  # same structure, different language: same score
     assert out[3] >= 0.7  # stopword + punct terms pass; word-length band may not
 
@@ -371,22 +369,9 @@ def test_quality_stopword_term_follows_language(spark):
 def test_quality_and_tokens(spark):
     good = "This is a well formed sentence, with punctuation. It has the usual structure of the readable text. " * 3
     df = spark.createDataFrame([(1, good), (2, "x y z")], "id long, text string")
-    out = {r.id: (r.q, r.t) for r in df.select(
-        "id",
-        textquality.quality_score_col(F.col("text")).alias("q"),
-        textquality.token_count_col(F.col("text")).alias("t"),
-    ).collect()}
+    out = {r.id: (r.quality_score, r.n_tokens) for r in textquality.with_lang_quality_cols(df).collect()}
     assert out[1][0] > out[2][0]
     assert out[1][1] > 50 and out[2][1] == 3
-
-
-def test_fingerprint_stable_and_discriminative(spark):
-    df = spark.createDataFrame(
-        [(1, "a b c d e f g h i j k l"), (2, "a b c d e f g h i j k l"), (3, "z y x w v u t s r q p o")],
-        "id long, text string",
-    )
-    out = {r.id: r.fp for r in df.select("id", textquality.fingerprint_col(F.col("text")).alias("fp")).collect()}
-    assert out[1] == out[2] != out[3]
 
 
 # --- io_ops -----------------------------------------------------------------------
@@ -918,9 +903,7 @@ def test_range_join_self_join_column_collision(spark):
 
 def test_quality_score_empty_text_is_zero(spark):
     df = spark.createDataFrame([(1, ""), (2, None), (3, "   ")], "id long, text string")
-    out = {r.id: r.q for r in df.select(
-        "id", textquality.quality_score_col(F.col("text")).alias("q")
-    ).collect()}
+    out = {r.id: r.quality_score for r in textquality.with_lang_quality_cols(df).collect()}
     assert out == {1: 0.0, 2: 0.0, 3: 0.0}
 
 

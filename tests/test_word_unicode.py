@@ -23,7 +23,7 @@ from readability_scanner_spark.functions.wordchars import PY_WORD_RUN, WORD_RUN
 from readability_scanner_spark.operators.textquality import (
     _LANG_WORDS,
     PII_PATTERNS,
-    lang_scores,
+    _shared_count_cols,
     pii_hits_col,
     redact_pii_col,
 )
@@ -68,10 +68,8 @@ def test_words_three_engines_agree(spark, adv_df):
 def test_marker_hits_three_engines_agree(spark, adv_df):
     """Spark lookaround-bounded marker count == DuckDB token-run
     membership count == a pure-Python token-run membership count."""
-    scores = lang_scores(F.col("text"))
-    words = F.greatest(F.regexp_count(F.col("text"), F.lit(WORD_RUN)), F.lit(1))
-    sel = adv_df.select(
-        "id", *[(scores[lang] * words).cast("long").alias(f"hit_{lang}") for lang in sorted(_LANG_WORDS)]
+    sel = _shared_count_cols(adv_df, "text").select(
+        "id", *[F.col(f"_ql_mk_{lang}").alias(f"hit_{lang}") for lang in sorted(_LANG_WORDS)]
     ).collect()
     con = duckdb.connect()
     for r in sel:
