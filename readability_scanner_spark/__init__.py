@@ -14,7 +14,6 @@ Layout:
     sources/                synthetic transcripts generator, table loaders
     plans/                  the flagship extraction pipeline (resumable)
     operators/              analytics / dedup / similarity / text-quality
-    streaming/              structured-streaming variant of the pipeline
 """
 
 __version__ = "0.1.0"

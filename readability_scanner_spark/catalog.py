@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from readability_scanner_spark.operators.dedup import dedup_by_key
-from readability_scanner_spark.operators.io_ops import upsert_by_key
+from readability_scanner_spark.operators.io_ops import delete_where, upsert_by_key
 
 _ICEBERG_CLASS = "org.apache.iceberg.spark.SparkCatalog"
 
@@ -274,10 +274,11 @@ def _parquet_upsert(
 
 def delete_rows(spark: SparkSession, target: str, predicate_sql: str) -> None:
     """M4 delete-by-predicate. Iceberg: DELETE FROM (row-level, ACID).
-    Parquet: rewrite the complement through the staging swap."""
+    Parquet: rewrite the complement through the staging swap, with the
+    same NULL-keeps-the-row rule as the SQL DELETE."""
     if _is_path(target):
         recover_swap(target)
-        kept = spark.read.parquet(target).where(f"NOT ({predicate_sql})")
+        kept = delete_where(spark.read.parquet(target), F.expr(predicate_sql))
         _swap_in(kept, target)
         return
     if not iceberg_available(spark):

@@ -164,18 +164,6 @@ def describe_metrics(df: DataFrame, col: str) -> DataFrame:
     )
 
 
-def approx_describe(df: DataFrame, col: str, key_col: str) -> DataFrame:
-    """Sketch-based profile for 100 TB-scale data exploration:
-    approx_count_distinct (HLL++) + approx_percentile (t-digest-style) —
-    one pass, bounded memory, no exact sort. Accuracy bounds are
-    asserted in tests against the exact forms."""
-    return df.agg(
-        F.count(col).alias("cnt"),
-        F.approx_count_distinct(key_col, rsd=0.02).alias("approx_distinct_keys"),
-        F.percentile_approx(col, [0.25, 0.5, 0.75], 10_000).alias("approx_quartiles"),
-    )
-
-
 # --- A11: derived ratios -----------------------------------------------------------
 
 def derived_ratios(df: DataFrame, success_pred: F.Column) -> DataFrame:
@@ -272,8 +260,7 @@ def array_membership(df: DataFrame, group_col: str, item_col: str, needle) -> Da
 def paginate(df: DataFrame, order_cols: list[str], page: int, page_size: int) -> DataFrame:
     """O4 skip/limit pagination (articles.py:398-402) as a row_number
     window. NOTE: a global ordering window funnels all rows through one
-    task — correct but inherently sequential, fine for UI-sized results.
-    At corpus scale use :func:`keyset_paginate` instead."""
+    task — correct but inherently sequential, fine for UI-sized results."""
     w = Window.orderBy(*[F.asc(c) for c in order_cols])
     start, end = (page - 1) * page_size + 1, page * page_size
     return (
@@ -281,16 +268,6 @@ def paginate(df: DataFrame, order_cols: list[str], page: int, page_size: int) ->
         .where(F.col("_rn").between(start, end))
         .drop("_rn")
     )
-
-
-def keyset_paginate(df: DataFrame, key_col: str, after, page_size: int) -> DataFrame:
-    """Keyset (cursor) pagination: WHERE key > last_seen ORDER BY key
-    LIMIT n. Unlike offset pagination this pushes the predicate into the
-    scan (partition/file pruning on the sort key) and plans as
-    TakeOrderedAndProject — O(page) work regardless of offset depth.
-    `after=None` fetches the first page."""
-    out = df if after is None else df.where(F.col(key_col) > F.lit(after))
-    return out.orderBy(F.asc(key_col)).limit(page_size)
 
 
 def top_k(df: DataFrame, order_col: str, k: int, tie_break: str) -> DataFrame:

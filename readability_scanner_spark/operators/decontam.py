@@ -90,12 +90,13 @@ def gram_hashes_from_tokens(toks: Column, n: int) -> Column:
     )
 
 
-def doc_ngrams(
-    df: DataFrame, id_col: str, text_col: str, n: int = 8
+def benchmark_gram_set(
+    benchmark: DataFrame, text_col: str, n: int = 8
 ) -> DataFrame:
-    """``(id, gram_hash)`` — one row per distinct gram hash per
-    document. array_distinct runs BEFORE explode, so the fan-out never
-    materializes a doc's repeated grams.
+    """The distinct gram-hash set of the eval corpus — the broadcast
+    side. One column ``gram_hash``; size is bounded by the benchmark,
+    never by the training corpus. array_distinct runs BEFORE explode,
+    so the fan-out never materializes a doc's repeated grams.
 
     explode_OUTER, not explode: plain explode makes Catalyst's
     InferFiltersFromGenerate clone the entire gram-hash expression into
@@ -113,29 +114,8 @@ def doc_ngrams(
     is referenced several times and split+filter is not 'cheap' by
     Catalyst's rule."""
     return (
-        df.select(F.col(id_col), ws_tokens_col(F.col(text_col)).alias("_ts"))
-        .select(
-            F.col(id_col),
-            F.explode_outer(gram_hashes_from_tokens(F.col("_ts"), n)).alias(
-                "gram_hash"
-            ),
-        )
-        .where(F.col("gram_hash").isNotNull())
-    )
-
-
-def benchmark_gram_set(
-    benchmark: DataFrame, text_col: str, n: int = 8
-) -> DataFrame:
-    """The distinct gram-hash set of the eval corpus — the broadcast
-    side. One column ``gram_hash``; size is bounded by the benchmark,
-    never by the training corpus."""
-    return (
         benchmark.select(ws_tokens_col(F.col(text_col)).alias("_ts"))
         .select(
-            # explode_outer for the same InferFiltersFromGenerate reason
-            # as doc_ngrams; the NULL row from gram-less docs is dropped
-            # by the post-generate filter
             F.explode_outer(gram_hashes_from_tokens(F.col("_ts"), n)).alias(
                 "gram_hash"
             )
@@ -164,10 +144,11 @@ def decontaminate(
     count. hit_ratio is the unrounded double quotient
     (expression-shape identical to the oracle's)."""
     bench = benchmark_gram_set(benchmark, text_col, n)
-    # explode_outer: see doc_ngrams — plain explode would let Catalyst
-    # clone the gram-hash expression into a pushed-down size()>0 filter,
-    # computing it twice (once below the spread repartition). The NULL
-    # row a gram-less doc emits can never match the inner join.
+    # explode_outer: see benchmark_gram_set — plain explode would let
+    # Catalyst clone the gram-hash expression into a pushed-down
+    # size()>0 filter, computing it twice (once below the spread
+    # repartition). The NULL row a gram-less doc emits can never match
+    # the inner join.
     grams = docs.select(
         F.col(id_col), ws_tokens_col(F.col(text_col)).alias("_ts")
     ).select(

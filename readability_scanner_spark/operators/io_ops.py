@@ -11,11 +11,8 @@ from __future__ import annotations
 import math
 import os
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 
 def upsert_by_key(existing: DataFrame, incoming: DataFrame, key: str, order_col: str) -> DataFrame:
@@ -139,8 +136,10 @@ def export_ml_dataset(
 
 def delete_where(df: DataFrame, predicate) -> DataFrame:
     """M4 delete-by-predicate (articles.py:373-381) = keep the complement;
-    Iceberg: DELETE FROM ... WHERE."""
-    return df.where(~predicate)
+    Iceberg: DELETE FROM ... WHERE. Like SQL DELETE, only rows where the
+    predicate is TRUE go: a NULL predicate keeps its row (a bare
+    ``~predicate`` is NULL there too, and ``where`` would drop it)."""
+    return df.where(~F.coalesce(predicate, F.lit(False)))
 
 
 def set_columns_where(df: DataFrame, predicate, assignments: dict) -> DataFrame:
@@ -163,136 +162,3 @@ def migrate_legacy_columns(df: DataFrame, target: str, legacy_priority: list[str
     ]
     out = df.withColumn(target, F.coalesce(*cols)) if cols else df
     return out.drop(*[c for c in present if c != target])
-
-
-_MIX1 = np.uint64(0xFF51AFD7ED558CCD)
-_MIX2 = np.uint64(0xC4CEB9FE1A85EC53)
-_SEED2 = np.uint64(0x9E3779B97F4A7C15)
-
-
-def _mix64(x: np.ndarray) -> np.ndarray:
-    """splitmix64 finalizer, vectorized (uint64 in/out)."""
-    x = x.astype(np.uint64, copy=True)
-    x ^= x >> np.uint64(33)
-    x *= _MIX1
-    x ^= x >> np.uint64(33)
-    x *= _MIX2
-    x ^= x >> np.uint64(33)
-    return x
-
-
-def _bloom_positions(keys: np.ndarray, n_bits: int, n_hashes: int) -> list[np.ndarray]:
-    """k bit positions per key via double hashing (h1 + i*h2)."""
-    u = keys.astype(np.int64).view(np.uint64)
-    h1 = _mix64(u)
-    h2 = _mix64(u ^ _SEED2) | np.uint64(1)
-    nb = np.uint64(n_bits)
-    return [(h1 + np.uint64(i) * h2) % nb for i in range(n_hashes)]
-
-
-def key_bloom(
-    keys_df: DataFrame, key: str, n_bits: int = 1 << 23, n_hashes: int = 4
-) -> bytes:
-    """Distributed bloom-filter build over an integer key column: each
-    partition folds its keys into one packed bitmap (n_bits/8 bytes);
-    the driver ORs the per-partition bitmaps. Driver traffic is
-    partitions x bitmap-size (1 MiB at the default), independent of key
-    count — the bounded-collect pattern, not a key collect."""
-
-    def build(batches):
-        bm = np.zeros(n_bits // 8, dtype=np.uint8)
-        for pdf in batches:
-            vals = pdf[key].to_numpy()
-            # nulls are filtered Spark-side below, so Arrow→pandas keeps
-            # int64 exactly; a float dtype here would mean keys above 2^53
-            # were silently rounded (build/probe divergence → bloom false
-            # NEGATIVES, breaking the identical-to-anti-join contract)
-            if not np.issubdtype(vals.dtype, np.integer):
-                raise TypeError(
-                    f"bloom key column {key!r} must reach the worker as an "
-                    f"integer dtype, got {vals.dtype} (nulls not filtered?)"
-                )
-            if len(vals):
-                for pos in _bloom_positions(vals, n_bits, n_hashes):
-                    np.bitwise_or.at(bm, pos >> np.uint64(3), np.left_shift(
-                        np.uint8(1), (pos & np.uint64(7)).astype(np.uint8)
-                    ))
-        yield pd.DataFrame({"bm": [bm.tobytes()]})
-
-    # drop nulls BEFORE the Arrow transfer: an int64 batch containing any
-    # null surfaces in pandas as float64 (null keys never match a join
-    # anyway)
-    parts = (
-        keys_df.select(key)
-        .where(F.col(key).isNotNull())
-        .mapInPandas(build, schema="bm binary")
-        .collect()
-    )
-    out = np.zeros(n_bits // 8, dtype=np.uint8)
-    for row in parts:
-        out |= np.frombuffer(row.bm, dtype=np.uint8)
-    return out.tobytes()
-
-
-def backfill_remaining(
-    full: DataFrame,
-    processed_keys: DataFrame,
-    key: str,
-    bloom_bits: int = 0,
-    n_hashes: int = 4,
-) -> DataFrame:
-    """M3 resumable backfill (backfill_jobs.py:20-133): the work queue is
-    an anti-join against already-processed keys — the set-oriented form
-    of the reference's 'rows matching predicate' batch loop.
-
-    With ``bloom_bits`` > 0, a bloom pre-join prunes the shuffle: rows
-    whose key is definitely NOT in the processed set (no false negatives)
-    skip the anti-join entirely and only the "maybe processed" remainder
-    shuffles. At a resume where most keys are unprocessed this removes
-    almost the whole exchange; result is identical to the plain anti-join
-    because bloom false POSITIVES still go through the exact join."""
-    work = processed_keys.select(key).distinct()
-    if not bloom_bits:
-        return full.join(work, key, "left_anti")
-
-    bm_bytes = key_bloom(processed_keys, key, bloom_bits, n_hashes)
-    bc = full.sparkSession.sparkContext.broadcast(bm_bytes)
-    n_bits, k = bloom_bits, n_hashes
-
-    @pandas_udf("boolean")
-    def maybe_processed(filled: pd.Series, is_null: pd.Series) -> pd.Series:
-        # the key arrives null-COALESCED (plus a null flag) so the Arrow
-        # batch is always pure int64 — a batch with any null would surface
-        # as float64 and round keys above 2^53, producing bloom false
-        # negatives against the exact int64 build side
-        bm = np.frombuffer(bc.value, dtype=np.uint8)
-        if not len(filled):
-            return pd.Series([], dtype=bool)
-        vals = filled.to_numpy()
-        if not np.issubdtype(vals.dtype, np.integer):
-            raise TypeError(
-                f"bloom probe expected integer dtype, got {vals.dtype}"
-            )
-        hit = np.ones(len(vals), dtype=bool)
-        for pos in _bloom_positions(vals, n_bits, k):
-            hit &= (bm[(pos >> np.uint64(3)).astype(np.int64)] &
-                    np.left_shift(np.uint8(1), (pos & np.uint64(7)).astype(np.uint8))) != 0
-        # NULL keys never equal anything in SQL join semantics → a plain
-        # anti-join keeps them; mark them definitely-new here too
-        hit[is_null.to_numpy(dtype=bool)] = False
-        return pd.Series(hit)
-
-    # NOTE: the two union branches re-evaluate the base scan + bloom probe
-    # (no persist — caching a 100 TB table costs more than two columnar
-    # scans). The win being bought is the removal of the full-table
-    # SHUFFLE: only the small "maybe processed" slice exchanges.
-    flagged = full.withColumn(
-        "_maybe",
-        maybe_processed(
-            F.coalesce(F.col(key), F.lit(0).cast("bigint")),
-            F.col(key).isNull(),
-        ),
-    )
-    definitely_new = flagged.where(~F.col("_maybe")).drop("_maybe")
-    needs_check = flagged.where(F.col("_maybe")).drop("_maybe")
-    return definitely_new.unionByName(needs_check.join(work, key, "left_anti"))

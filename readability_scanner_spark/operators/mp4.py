@@ -173,12 +173,9 @@ def _box(typ: bytes, payload: bytes) -> bytes:
     return struct.pack(">I", len(payload) + 8) + typ + payload
 
 
-def make_mp4(width: int, height: int, duration_ms: int, seed: int = 0) -> bytes:
-    """Minimal valid MP4: ftyp + moov(mvhd + trak(tkhd)) + mdat with
-    deterministic filler bytes. Timescale 1000 so duration_ms is exact."""
-    if width <= 0 or height <= 0 or duration_ms < 0:
-        raise ValueError("degenerate video parameters")
-    ftyp = _box(b"ftyp", b"isom" + struct.pack(">I", 512) + b"isomiso2mp41")
+def _mvhd_tkhd(width: int, height: int, duration_ms: int) -> tuple[bytes, bytes]:
+    """The version-0 ``mvhd`` and one-track ``tkhd`` boxes every writer
+    here emits. Timescale 1000 so duration_ms is exact."""
     mvhd = _box(
         b"mvhd",
         struct.pack(">B3x", 0)  # version 0
@@ -196,30 +193,19 @@ def make_mp4(width: int, height: int, duration_ms: int, seed: int = 0) -> bytes:
         + struct.pack(">9I", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000)
         + struct.pack(">II", width << 16, height << 16),
     )
+    return mvhd, tkhd
+
+
+def make_mp4(width: int, height: int, duration_ms: int, seed: int = 0) -> bytes:
+    """Minimal valid MP4: ftyp + moov(mvhd + trak(tkhd)) + mdat with
+    deterministic filler bytes."""
+    if width <= 0 or height <= 0 or duration_ms < 0:
+        raise ValueError("degenerate video parameters")
+    ftyp = _box(b"ftyp", b"isom" + struct.pack(">I", 512) + b"isomiso2mp41")
+    mvhd, tkhd = _mvhd_tkhd(width, height, duration_ms)
     moov = _box(b"moov", mvhd + _box(b"trak", tkhd))
     filler = bytes((seed * 31 + j * 7) % 256 for j in range(64))
     return ftyp + moov + _box(b"mdat", filler)
-
-
-def _mvhd_tkhd(width: int, height: int, duration_ms: int) -> tuple[bytes, bytes]:
-    mvhd = _box(
-        b"mvhd",
-        struct.pack(">B3x", 0)
-        + struct.pack(">IIII", 0, 0, 1000, duration_ms)
-        + struct.pack(">IH2x8x", 0x00010000, 0x0100)
-        + struct.pack(">9I", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000)
-        + struct.pack(">6I", 0, 0, 0, 0, 0, 0)
-        + struct.pack(">I", 2),
-    )
-    tkhd = _box(
-        b"tkhd",
-        struct.pack(">B3B", 0, 0, 0, 7)
-        + struct.pack(">IIIII", 0, 0, 1, 0, duration_ms)
-        + struct.pack(">8x hh h 2x", 0, 0, 0)
-        + struct.pack(">9I", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000)
-        + struct.pack(">II", width << 16, height << 16),
-    )
-    return mvhd, tkhd
 
 
 def make_mjpeg_mp4(

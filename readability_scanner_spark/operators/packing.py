@@ -147,29 +147,3 @@ def split_windows(packed: DataFrame, seq_len: int) -> DataFrame:
             F.lit(0).cast("long"),
         ),
     )
-
-
-def packing_stats(packed: DataFrame, seq_len: int) -> DataFrame:
-    """Audit table over :func:`pack_sequences` output: per shard, the
-    bin count, document count, token total, and utilization (token
-    total over bin capacity, the padding-waste complement). Oversize
-    documents push utilization above 1 for their bins; the per-shard
-    figure stays an honest ratio."""
-    return (
-        packed.groupBy("shard")
-        .agg(
-            (F.max("bin_id") + 1).alias("n_bins"),
-            F.count("*").alias("n_docs"),
-            F.sum("n_tokens").alias("total_tokens"),
-        )
-        .select(
-            "shard",
-            "n_bins",
-            "n_docs",
-            "total_tokens",
-            F.round(
-                F.col("total_tokens") / (F.col("n_bins") * F.lit(seq_len)), 4
-            ).alias("utilization"),
-        )
-        .orderBy("shard")
-    )

@@ -181,8 +181,7 @@ def text_search_mongo(
 def _token_array(text_col: str, extract_then_lower: bool):
     """THE tokenizer expression shared by every index builder — two
     builders with drifted copies would silently tokenize one corpus two
-    ways (the exact failure append_to_token_index's docstring warns
-    about). Lower-first matches the regexp search family; extract-then-
+    ways. Lower-first matches the regexp search family; extract-then-
     lower keeps 1:N case folds (İ) from splitting runs on one engine
     only (see build_token_index)."""
     if extract_then_lower:
@@ -223,7 +222,10 @@ def build_token_index(
     At scale: write with `.write.bucketBy(N, "token")` (or partition by
     a token hash prefix) so each query's term lookups prune to a few
     buckets; the index build is one explode + one aggregation, both
-    map-side combinable.
+    map-side combinable. Pruning a bucketed read also needs
+    ``spark.sql.sources.bucketing.autoBucketedScan.enabled=false``:
+    at its default the planner drops the bucketed scan (and its
+    pruning) when the query's aggregation shuffles on doc_id anyway.
 
     ``extract_then_lower`` tokenizes the RAW text and lowercases each
     token afterwards. Lower-FIRST (the default, matching the regexp
@@ -245,82 +247,13 @@ def build_token_index(
     )
 
 
-def write_token_index(
-    index: DataFrame, table: str, n_buckets: int = 64, mode: str = "overwrite"
-) -> None:
-    """Materialize the inverted index as a BUCKETED table: hash-bucketed
-    and sorted by token, so a term lookup prunes to its bucket(s)
-    (plan shows ``SelectedBucketsCount: k out of n_buckets``) instead of
-    scanning all postings — the 100 TB layout the build docstring
-    promises, demonstrated rather than described. Bucketing also makes
-    (token, token) self/maintenance joins shuffle-free."""
-    (
-        index.write.bucketBy(n_buckets, "token")
-        .sortBy("token")
-        .mode(mode)
-        .format("parquet")
-        .saveAsTable(table)
-    )
-
-
-def append_to_token_index(
-    spark,
-    table: str,
-    new_docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    extract_then_lower: bool = False,
-) -> None:
-    """Incremental index maintenance for APPEND-ONLY corpora: tokenize
-    only the new documents and insert their postings into the bucketed
-    table. (token, doc_id) stays unique because new doc_ids are disjoint
-    from indexed ones; insertInto preserves the table's bucket spec, so
-    queries keep pruning. For updated/deleted docs, rebuild the affected
-    doc_ids' postings via an anti-join first — not needed for the
-    append-only transcript corpus this engine targets.
-
-    ``extract_then_lower`` MUST match the flag the index was built with
-    (review find: appending lower-first postings into an
-    extract-then-lower index silently mixes two tokenizers — dl/tf
-    become inconsistent within one table and BM25 scores go quietly
-    wrong on multilingual text)."""
-    build_token_index(
-        new_docs, id_col, text_col, extract_then_lower=extract_then_lower
-    ).write.insertInto(table)
-
-
-def search_bucketed_index(spark, table: str, query: str, limit: int = 20) -> DataFrame:
-    """search_token_index against the bucketed on-disk table, with the
-    term filter expressed as an IN list on the bucket column so Spark's
-    bucket pruning applies before any IO.
-
-    Planner caveat (tests/test_bucketed_index.py pins it): with
-    ``spark.sql.sources.bucketing.autoBucketedScan.enabled`` at its
-    default ``true``, Spark keeps the bucketed scan only when it saves a
-    later shuffle — this aggregation shuffles on doc_id, not token, so
-    the planner silently downgrades to a plain scan and bucket PRUNING
-    is lost with it. Set that conf ``false`` (or aggregate by token) for
-    the pruned ``SelectedBucketsCount: k out of n`` read."""
-    terms = _terms(query)
-    index = spark.table(table)
-    if not terms:
-        return search_token_index(index, query, limit)
-    pruned = index.where(F.col("token").isin(terms))
-    return (
-        pruned.groupBy("doc_id")
-        .agg(F.sum("tf").cast("long").alias("relevance"))
-        .orderBy(F.desc("relevance"), F.asc("doc_id"))
-        .limit(limit)
-    )
-
-
 def search_token_index(index: DataFrame, query: str, limit: int = 20) -> DataFrame:
     """Query the inverted index: broadcast the (tiny) term list against
     the postings, sum tf per doc, top-k. Shuffles only the matching
     postings' partial sums — independent of corpus size."""
-    # dedup repeated terms: the bucketed path's isin() matches each
-    # posting once, and Mongo's $text dedups terms too — without this a
-    # query like "data data" double-counts through the join (r5 review)
+    # dedup repeated terms: Mongo's $text dedups terms too — without
+    # this a query like "data data" double-counts through the join
+    # (r5 review)
     terms = list(dict.fromkeys(_terms(query)))
     spark = index.sparkSession
     if not terms:
@@ -413,81 +346,10 @@ def phrase_search(index_pos: DataFrame, phrase: str, limit: int = 20) -> DataFra
     return _span_ends_result(per_doc, cand, limit)
 
 
-def doc_lengths(index: DataFrame) -> DataFrame:
-    """``(doc_id, dl)`` — per-document token totals from the inverted
-    index (every token occurrence sits in exactly one posting, so
-    sum(tf) IS the document length). The precomputed sidecar
-    :func:`bm25_search_indexed` needs; build it once per index build
-    and co-bucket it on doc_id next to the index."""
-    return index.groupBy("doc_id").agg(F.sum("tf").cast("long").alias("dl"))
-
-
-def bm25_search_indexed(
-    index: DataFrame,
-    doc_lens: DataFrame,
-    query: str,
-    k1: float = 1.2,
-    b: float = 0.75,
-    limit: int = 20,
-) -> DataFrame:
-    """The interactive-scale BM25 path: :func:`bm25_search` pivots the
-    WHOLE index per query (one pass — right for batch scoring, wrong
-    for per-query latency at 100 TB). Here the postings scan is
-    filtered to the query's terms (IN literal — prunes a
-    bucketBy(token) layout to the terms' buckets) and dl comes from the
-    precomputed :func:`doc_lengths` sidecar: per query this touches
-    O(matching postings) + one broadcast-sized stats pass over the
-    2-column sidecar, and the one real join (matched ⋈ doc_lens on
-    doc_id) is shuffle-free when the sidecar is co-bucketed. The score
-    expression is SHAPE-IDENTICAL to bm25_search (same pivot columns,
-    same fixed-order term sum), so the two paths return equal score_q
-    (pinned in tests)."""
-    terms = list(dict.fromkeys(_terms(query)))
-    if not terms:
-        return _empty_result(index, "score_q")
-    matched = index.where(F.col("token").isin(*terms))
-    per_doc_tf = matched.groupBy("doc_id").agg(
-        *[
-            F.sum(F.when(F.col("token") == t, F.col("tf")).otherwise(0))
-            .cast("long")
-            .alias(f"tf_{i}")
-            for i, t in enumerate(terms)
-        ]
-    )
-    stats = doc_lens.agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.sum("dl").cast("long").alias("total_tokens"),
-    )
-    dfs = matched.groupBy().agg(
-        *[
-            F.count_distinct(F.when(F.col("token") == t, F.col("doc_id")))
-            .cast("long")
-            .alias(f"df_{i}")
-            for i, t in enumerate(terms)
-        ]
-    )
-    scored = (
-        per_doc_tf.join(doc_lens, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .crossJoin(F.broadcast(dfs))
-    )
-    score = _bm25_score_expr(len(terms), k1, b)
-    return (
-        scored.select(
-            "doc_id",
-            F.floor(score * F.lit(1e6) + F.lit(0.5)).cast("long").alias("score_q"),
-        )
-        .orderBy(F.desc("score_q"), F.asc("doc_id"))
-        .limit(limit)
-    )
-
-
 def _bm25_score_expr(n_terms: int, k1: float, b: float) -> Column:
     """The Okapi score as a fixed-order expression over pivot columns
-    ``tf_i``/``df_i`` + ``dl``/``n_docs``/``total_tokens`` — ONE
-    definition shared by bm25_search and bm25_search_indexed so the two
-    paths (and the DuckDB oracle mirroring this shape) can never
-    drift."""
+    ``tf_i``/``df_i`` + ``dl``/``n_docs``/``total_tokens`` for
+    bm25_search — the term-by-term shape the DuckDB oracle mirrors."""
     n = F.col("n_docs").cast("double")
     dl = F.col("dl").cast("double")
     avgdl = F.col("total_tokens").cast("double") / F.col("n_docs").cast("double")

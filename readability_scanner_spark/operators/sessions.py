@@ -83,7 +83,7 @@ def session_window_stats(
     EXACTLY the threshold splits here (half-open window) but merges
     there (`> gap` test); with microsecond timestamps exact-equality
     gaps are measure-zero. Same expression works under Structured
-    Streaming with a watermark (streaming/sessions.py)."""
+    Streaming with a watermark."""
     return (
         df.groupBy(
             F.col(user_col),

@@ -17,10 +17,9 @@ Two operators a 100 TB training-data pipeline runs constantly:
 - :func:`cms_sketch` / :func:`cms_estimate` — count-min sketch
   (Cormode & Muthukrishnan 2005) for token/heavy-hitter frequency
   estimation in constant space: depth×width counters, point estimate =
-  min over rows. Merges element-wise (:func:`cms_merge`). Same
-  determinism argument as KMV: md5-low64 bucket hashes make the sketch
-  itself a pure function of the data, so the DuckDB oracle recomputes
-  identical estimates.
+  min over rows. Same determinism argument as KMV: md5-low64 bucket
+  hashes make the sketch itself a pure function of the data, so the
+  DuckDB oracle recomputes identical estimates.
 
 - :func:`weighted_priority_sample` — deterministic weighted sampling:
   per stratum keep the n rows with the smallest integer priority
@@ -93,7 +92,7 @@ _PRUNE_SALTS = 64
 
 
 def _k_smallest(hashed: DataFrame, group_cols: list[str], k: int) -> DataFrame:
-    """Shared tail of every KMV entry point: from distinct
+    """KMV's top-k tail: from distinct
     ``(*group_cols, h)`` rows, keep the k smallest hashes per group
     (row_number over the hash order).
 
@@ -122,58 +121,6 @@ def _k_smallest(hashed: DataFrame, group_cols: list[str], k: int) -> DataFrame:
     )
     w = Window.partitionBy(*group_cols).orderBy("h")
     return local.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") <= k)
-
-
-def _agg_sketch(kept: DataFrame, group_cols: list[str]) -> DataFrame:
-    return kept.groupBy(*group_cols).agg(
-        F.sort_array(F.collect_list("h")).alias("kmv")
-    )
-
-
-def kmv_sketch(
-    df: DataFrame, group_cols: list[str], value: Column, k: int = 64
-) -> DataFrame:
-    """Per-group KMV sketch: ``*group_cols, kmv (array<decimal(20,0)>)``
-    — the sorted k smallest distinct hashes. The sketch is MERGEABLE
-    (:func:`kmv_merge`): KMV(A ∪ B) == re-top-k of KMV(A) ∪ KMV(B)
-    exactly, which is what lets a 100 TB pipeline keep one small sketch
-    per partition/day and combine them for any rollup without
-    re-scanning data. Same two-stage scale shape as
-    :func:`kmv_distinct`; the collect_list is bounded by k."""
-    hashed = (
-        df.select(*group_cols, md5_low64(value).alias("h"))
-        .where(F.col("h").isNotNull())
-        .distinct()
-    )
-    return _agg_sketch(_k_smallest(hashed, group_cols, k), group_cols)
-
-
-def kmv_merge(sketches: DataFrame, group_cols: list[str], k: int = 64) -> DataFrame:
-    """Combine sketch rows sharing a group key (e.g. one sketch per day,
-    rolled up monthly): explode, dedup, re-take the k smallest. Exactly
-    equals the sketch of the unioned raw data."""
-    exploded = sketches.select(*group_cols, F.explode("kmv").alias("h")).distinct()
-    return _agg_sketch(_k_smallest(exploded, group_cols, k), group_cols)
-
-
-def kmv_estimate(sketch: DataFrame, group_cols: list[str], k: int = 64) -> DataFrame:
-    """Distinct-count estimate from a sketch row — identical output
-    contract to :func:`kmv_distinct` (n_kept, est_distinct)."""
-    return sketch.select(
-        *group_cols,
-        F.size("kmv").cast("long").alias("n_kept"),
-        F.when(F.size("kmv") < k, F.size("kmv").cast("double"))
-        .otherwise(
-            F.round(
-                # try_element_at: ANSI element_at THROWS when size < k,
-                # and the unexercised when-branch must stay safe
-                F.lit(kmv_estimate_const(k))
-                / F.try_element_at("kmv", F.lit(k)).cast("double"),
-                4,
-            )
-        )
-        .alias("est_distinct"),
-    )
 
 
 def kmv_distinct(
@@ -220,7 +167,7 @@ def cms_sketch(
     """Count-min sketch (Cormode & Muthukrishnan 2005) of token
     frequencies: ``r (int), bucket (int), cnt (bigint)`` — ``depth``
     rows of ``width`` counters, ``cnt[r][h_r(t)] = Σ count(t)``.
-    Like :func:`kmv_sketch`, every step is a deterministic function of
+    Like :func:`kmv_distinct`, every step is a deterministic function of
     the data (md5-low64 bucket hashes), so a DuckDB oracle recomputes
     the IDENTICAL sketch and estimates — unlike engine-private
     ``count_min_sketch``, the approximate answer is hash-verifiable.
@@ -233,7 +180,7 @@ def cms_sketch(
     broadcasts while an exact frequency table would not.
 
     NULL tokens are dropped (COUNT-DISTINCT-style, same contract as
-    :func:`kmv_sketch`) — without the filter, concat_ws would silently
+    :func:`kmv_distinct`) — without the filter, concat_ws would silently
     fold every NULL onto the md5("r") bucket while the NULL-propagating
     oracle expression drops them, a cross-engine divergence."""
     tc = (
@@ -258,13 +205,6 @@ def _cms_bucket(r: Column, token: Column, width: int) -> Column:
     return F.pmod(
         md5_low64(F.concat_ws(":", r.cast("string"), token)), F.lit(width)
     ).cast("int")
-
-
-def cms_merge(sketches: DataFrame) -> DataFrame:
-    """Combine sketch tables built over disjoint corpus slices (one per
-    partition/day): CMS cells add element-wise, so the merge is a
-    union + sum — exactly equals the sketch of the unioned corpus."""
-    return sketches.groupBy("r", "bucket").agg(F.sum("cnt").cast("long").alias("cnt"))
 
 
 def cms_estimate(

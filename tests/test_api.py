@@ -3,6 +3,16 @@
 import pytest
 
 from readability_scanner_spark import api
+from readability_scanner_spark.operators.analytics import word_topk
+from readability_scanner_spark.operators.io_ops import export_csv
+from readability_scanner_spark.operators.reports import (
+    compat_view,
+    daily_report_windows,
+    readability_report,
+)
+from readability_scanner_spark.operators.search import text_search
+from readability_scanner_spark.operators.summarize import summarize_docs
+from readability_scanner_spark.plans.pipeline import extract_and_score
 from readability_scanner_spark.sources.fixtures import make_fixture
 from readability_scanner_spark.sources.transcripts import transcripts_df
 
@@ -22,63 +32,31 @@ def test_scan_document_failure_path():
 
 @pytest.fixture(scope="module")
 def scored(spark):
-    df = api.scan_table(transcripts_df(spark, 6, seed=42), repartition_to=4).cache()
+    df = extract_and_score(transcripts_df(spark, 6, seed=42), repartition_to=4).cache()
     df.count()
     yield df
     df.unpersist()
 
 
 def test_report_search_wordcloud(spark, scored, tmp_path):
-    report = api.daily_report(scored, "conv_id")
+    report = readability_report(scored, "conv_id")
     assert report.count() > 0
-    trend = api.daily_trend(scored)
+    trend = daily_report_windows(scored)
     assert trend.count() > 0
-    api.export_report_csv(report.drop("spans") if "spans" in report.columns else report, str(tmp_path / "csv"))
+    export_csv(report.drop("spans") if "spans" in report.columns else report, str(tmp_path / "csv"))
     assert spark.read.option("header", True).csv(str(tmp_path / "csv")).count() == report.count()
 
-    hits = api.search_documents(scored.where("not parse_failed"), "the")
+    hits = text_search(scored.where("not parse_failed"), "cleaned_data", "the", "conv_id")
     assert hits.count() > 0
-    words = api.word_cloud(scored.where("not parse_failed"))
+    words = word_topk(scored.where("not parse_failed"), "cleaned_data")
     assert words.count() == 5
 
-    view = api.legacy_field_view(scored)
+    view = compat_view(scored)
     assert "Flesch Kincaid" in view.columns
 
 
-def test_sql_registration(spark):
-    from readability_scanner_spark.sql import register_all
-    from readability_scanner_spark.sources.fixtures import make_fixture
-
-    register_all(spark)
-    spark.createDataFrame(
-        [(make_fixture("plain_article", 2),)], "text string"
-    ).createOrReplaceTempView("t_sql")
-    row = spark.sql(
-        """
-        SELECT extract_text(text) AS body,
-               text_stats(clean_html(text)).words AS words,
-               estimate_syllables('university') AS syl,
-               extract_content(text).parse_failed AS failed
-        FROM t_sql
-        """
-    ).first()
-    assert not row.failed and row.words > 50 and row.syl == 5 and len(row.body) > 100
-
-
-def test_keyset_pagination(spark):
-    from readability_scanner_spark.operators.analytics import keyset_paginate
-
-    df = spark.range(100).withColumnRenamed("id", "k")
-    p1 = [r.k for r in keyset_paginate(df, "k", None, 10).collect()]
-    assert p1 == list(range(10))
-    p2 = [r.k for r in keyset_paginate(df, "k", p1[-1], 10).collect()]
-    assert p2 == list(range(10, 20))
-
-
 def test_summarize_facade(spark, scored):
-    from readability_scanner_spark import api
-
-    out = api.summarize(scored.limit(20))
+    out = summarize_docs(scored.limit(20), "conv_id", "cleaned_data")
     rows = out.collect()
     assert set(out.columns) == {"conv_id", "headline", "summary"}
     assert len(rows) == 20

@@ -52,12 +52,15 @@ def test_parquet_upsert_newest_wins_and_was_new(spark, tmp_path):
 
 def test_parquet_delete_and_overwrite(spark, tmp_path):
     path = str(tmp_path / "tbl2")
-    df = spark.range(10).withColumn("flag", F.col("id") % 2 == 0)
+    df = spark.range(11).withColumn(
+        "flag", F.when(F.col("id") < 10, F.col("id") % 2 == 0)
+    )
     catalog.overwrite_all(spark, path, df)
-    assert spark.read.parquet(path).count() == 10
+    assert spark.read.parquet(path).count() == 11
     catalog.delete_rows(spark, path, "flag")
     kept = [r.id for r in spark.read.parquet(path).collect()]
-    assert sorted(kept) == [1, 3, 5, 7, 9]
+    # id 10's flag is NULL: SQL DELETE removes only TRUE rows, so it stays
+    assert sorted(kept) == [1, 3, 5, 7, 9, 10]
     catalog.overwrite_all(spark, path, spark.range(3))
     assert spark.read.parquet(path).count() == 3
 

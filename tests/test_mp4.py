@@ -3,6 +3,7 @@ box-walk parser roundtrip, version-1 boxes, hostile payloads, and the
 multimodal dimension dispatch. Frame decode is out of scope by design
 (the one remaining honest codec stub)."""
 
+import hashlib
 import struct
 
 import pytest
@@ -21,6 +22,10 @@ def test_roundtrip(w, h, dur):
 def test_deterministic():
     assert make_mp4(320, 240, 2000, seed=1) == make_mp4(320, 240, 2000, seed=1)
     assert make_mp4(320, 240, 2000, seed=1) != make_mp4(320, 240, 2000, seed=2)
+    # byte-for-byte pin: the writer's boxes must not drift
+    assert hashlib.sha256(make_mp4(320, 240, 2000, seed=1)).hexdigest() == (
+        "da1c9283603ec64081817a2701bfa9808aaaac4bf50df975b06b1d3da1fcbe4d"
+    )
 
 
 def test_version1_mvhd_parses():

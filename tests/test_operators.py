@@ -395,72 +395,13 @@ def test_migrate_legacy_columns(spark):
     assert "publishedTime" not in io_ops.migrate_legacy_columns(df, "publication_date", ["publishedTime"]).columns
 
 
-def test_backfill_remaining(spark):
-    full = spark.createDataFrame([(i,) for i in range(10)], "id long")
-    done = spark.createDataFrame([(i,) for i in (0, 3, 7)], "id long")
-    left = sorted(r.id for r in io_ops.backfill_remaining(full, done, "id").collect())
-    assert left == [1, 2, 4, 5, 6, 8, 9]
-
-
-def test_backfill_bloom_prefilter_identical_and_pruning(spark):
-    """Bloom pre-join must return exactly the plain anti-join result (no
-    false negatives by construction) while routing most unprocessed rows
-    around the shuffle."""
-    full = spark.createDataFrame([(i,) for i in range(5000)], "id long").repartition(8)
-    done = spark.createDataFrame([(i,) for i in range(0, 5000, 10)], "id long")
-    plain = sorted(r.id for r in io_ops.backfill_remaining(full, done, "id").collect())
-    bloomed = sorted(
-        r.id
-        for r in io_ops.backfill_remaining(full, done, "id", bloom_bits=1 << 16).collect()
-    )
-    assert bloomed == plain and len(plain) == 4500
-
-    # the bitmap itself: every processed key tests positive (no false negatives)
-    import numpy as np
-
-    bm = np.frombuffer(io_ops.key_bloom(done, "id", 1 << 16), dtype=np.uint8)
-    keys = np.arange(0, 5000, 10)
-    hit = np.ones(len(keys), dtype=bool)
-    for pos in io_ops._bloom_positions(keys, 1 << 16, 4):
-        hit &= (bm[(pos >> np.uint64(3)).astype(np.int64)]
-                & np.left_shift(np.uint8(1), (pos & np.uint64(7)).astype(np.uint8))) != 0
-    assert hit.all()
-    # and the false-positive rate over non-members is tiny at this sizing
-    others = np.arange(100000, 140000)
-    fp = np.ones(len(others), dtype=bool)
-    for pos in io_ops._bloom_positions(others, 1 << 16, 4):
-        fp &= (bm[(pos >> np.uint64(3)).astype(np.int64)]
-               & np.left_shift(np.uint8(1), (pos & np.uint64(7)).astype(np.uint8))) != 0
-    assert fp.mean() < 0.05
-
-
-def test_backfill_bloom_nulls_and_huge_keys(spark):
-    """The bloom path must stay bit-identical to the plain anti-join when
-    (a) the key column contains NULLs (Arrow would surface int64-with-null
-    batches as float64 — nulls are now filtered/coalesced before the
-    transfer) and (b) keys exceed 2^53 (where a float64 round-trip would
-    silently round and produce bloom false negatives)."""
-    big = 1 << 60  # not representable exactly as float64 once perturbed
-    full_rows = [(big + i,) for i in range(200)] + [(None,), (None,)]
-    done_rows = [(big + i,) for i in range(0, 200, 5)] + [(None,)]
-    full = spark.createDataFrame(full_rows, "id long").repartition(4)
-    done = spark.createDataFrame(done_rows, "id long")
-    plain = sorted(
-        (r.id if r.id is not None else -1)
-        for r in io_ops.backfill_remaining(full, done, "id").collect()
-    )
-    bloomed = sorted(
-        (r.id if r.id is not None else -1)
-        for r in io_ops.backfill_remaining(full, done, "id", bloom_bits=1 << 16).collect()
-    )
-    assert bloomed == plain
-    assert plain.count(-1) == 2  # NULL keys never match → both kept
-
-
 def test_delete_and_set(spark):
-    df = spark.createDataFrame([(1, "pending"), (2, "failed"), (3, "done")], "id long, status string")
+    df = spark.createDataFrame(
+        [(1, "pending"), (2, "failed"), (3, "done"), (4, None)], "id long, status string"
+    )
     kept = sorted(r.id for r in io_ops.delete_where(df, F.col("status") == "failed").collect())
-    assert kept == [1, 3]
+    # row 4's predicate is NULL: SQL DELETE removes only TRUE rows
+    assert kept == [1, 3, 4]
     out = {r.id: r.status for r in io_ops.set_columns_where(
         df, F.col("status") == "pending", {"status": F.lit("processing")}
     ).collect()}
@@ -735,19 +676,6 @@ def test_cdc_chunking_shift_resistant(spark):
     assert per_doc[3] == 1       # short doc is one chunk
 
 
-def test_approx_describe_error_bounds(spark):
-    """Sketches must land within their documented error of exact values."""
-    from readability_scanner_spark.operators.analytics import approx_describe
-    docs = spark.read.parquet("/root/testdata/sf0.01/events.parquet")
-    row = approx_describe(docs, "value", "user_id").first()
-    exact_distinct = docs.select("user_id").distinct().count()
-    assert abs(row.approx_distinct_keys - exact_distinct) / exact_distinct < 0.05
-    exact_q = docs.selectExpr(
-        "percentile_cont(0.5) WITHIN GROUP (ORDER BY value) AS m"
-    ).first().m
-    assert abs(row.approx_quartiles[1] - exact_q) / max(abs(exact_q), 1) < 0.05
-
-
 def test_jaccard_verify_equals_allpairs_on_candidates(spark, doc_df):
     """Verification over a candidate set must equal the quadratic form
     restricted to those pairs (same gram math, join-only plan)."""
@@ -761,14 +689,6 @@ def test_jaccard_verify_equals_allpairs_on_candidates(spark, doc_df):
         for r in dedup.ngram_jaccard_verify(cand, doc_df, "doc_id", "text", threshold=0.0).collect()
     }
     assert got == {k: allpairs[k] for k in [(1, 2), (1, 3), (4, 5)]}
-
-
-def test_backfill_bloom_handles_null_keys(spark):
-    full = spark.createDataFrame([(1,), (2,), (None,)], "id long")
-    done = spark.createDataFrame([(1,)], "id long")
-    plain = sorted((r.id if r.id is not None else -1) for r in io_ops.backfill_remaining(full, done, "id").collect())
-    bloomed = sorted((r.id if r.id is not None else -1) for r in io_ops.backfill_remaining(full, done, "id", bloom_bits=1 << 12).collect())
-    assert bloomed == plain == [-1, 2]  # null key kept, like the anti-join
 
 
 def test_cosine_zero_vector_is_zero_not_nan(spark):

@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from readability_scanner_spark.operators.packing import (
     pack_sequences,
-    packing_stats,
     split_windows,
 )
 
@@ -130,17 +129,6 @@ def test_state_survives_arrow_batch_boundaries(spark):
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
     assert tiny == base
-
-
-def test_packing_stats(spark):
-    rows = [(0, 1, 6), (0, 2, 6), (0, 3, 4), (1, 4, 10)]
-    df = spark.createDataFrame(rows, "shard long, doc_id long, n_tokens long")
-    packed = pack_sequences(df, "doc_id", "n_tokens", "shard", seq_len=10)
-    stats = {r["shard"]: r for r in packing_stats(packed, seq_len=10).collect()}
-    # shard 0: [6], [6, 4] -> 2 bins, 16 tokens, 16/20
-    assert (stats[0]["n_bins"], stats[0]["total_tokens"]) == (2, 16)
-    assert stats[0]["utilization"] == pytest.approx(0.8)
-    assert (stats[1]["n_bins"], stats[1]["n_docs"], stats[1]["utilization"]) == (1, 1, 1.0)
 
 
 def test_split_windows(spark):

@@ -313,7 +313,7 @@ def test_bm25_matches_independent_python_recompute(spark, corpus_df):
     for d, text in rows.items():
         toks = [t.lower() for t in tok.findall(text)]
         if not toks:
-            continue  # N counts docs IN THE INDEX (doc_lengths semantics)
+            continue  # N counts docs IN THE INDEX (sum(tf) per doc)
         dl[d] = len(toks)
         for t in toks:
             postings.setdefault(t, {}).setdefault(d, 0)
@@ -559,29 +559,3 @@ def test_near_search_dense_doc_stays_linear(spark):
     idx = build_positional_index(df, "doc_id", "text", extract_then_lower=True)
     got = near_search(idx, "alpha beta gamma delta", max_distance=3).collect()
     assert [(r["doc_id"], r["occurrences"]) for r in got] == [(1, 200)]
-
-
-def test_bm25_indexed_equals_one_pass(spark, corpus_df):
-    """bm25_search_indexed (pruned postings + doc_lengths sidecar) must
-    return exactly the one-pass bm25_search's score_q ranking — the two
-    paths share _bm25_score_expr, so equality pins the sidecar plumbing
-    (df via count_distinct == pivot's tf>0 count, dl join, stats)."""
-    from readability_scanner_spark.operators.search import (
-        bm25_search,
-        bm25_search_indexed,
-        build_token_index,
-        doc_lengths,
-    )
-
-    idx = build_token_index(corpus_df, "doc_id", "text", extract_then_lower=True)
-    lens = doc_lengths(idx)
-    for query in ("data query", "data table query", "表", "nothing here"):
-        one_pass = [
-            (r["doc_id"], r["score_q"]) for r in bm25_search(idx, query).collect()
-        ]
-        indexed = [
-            (r["doc_id"], r["score_q"])
-            for r in bm25_search_indexed(idx, lens, query).collect()
-        ]
-        assert indexed == one_pass, query
-    assert bm25_search_indexed(idx, lens, "!!!").count() == 0

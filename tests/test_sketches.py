@@ -150,48 +150,6 @@ def test_weighted_sample_zero_weight_floored(spark):
     assert len(out) == 2  # w<=0 treated as 1, not a crash / div-by-zero
 
 
-# --- mergeability -----------------------------------------------------------
-
-
-def test_kmv_sketch_merge_equals_union(spark):
-    # KMV(A ∪ B) == merge(KMV(A), KMV(B)) exactly — the property that
-    # lets per-day sketches roll up without rescanning raw data
-    a_vals = [f"a{i}" for i in range(400)]
-    b_vals = [f"b{i}" for i in range(300)] + a_vals[:100]  # overlap
-    k = 32
-    a = spark.createDataFrame([("g", v) for v in a_vals], "g string, v string")
-    b = spark.createDataFrame([("g", v) for v in b_vals], "g string, v string")
-    both = a.union(b)
-    from readability_scanner_spark.operators.sketches import (
-        kmv_estimate,
-        kmv_merge,
-        kmv_sketch,
-    )
-
-    direct = kmv_sketch(both, ["g"], F.col("v"), k=k).collect()[0]["kmv"]
-    merged_df = kmv_merge(
-        kmv_sketch(a, ["g"], F.col("v"), k=k).union(kmv_sketch(b, ["g"], F.col("v"), k=k)),
-        ["g"],
-        k=k,
-    )
-    merged = merged_df.collect()[0]["kmv"]
-    assert [int(x) for x in merged] == [int(x) for x in direct]
-    # and the estimate path agrees with kmv_distinct on the union
-    est_m = kmv_estimate(merged_df, ["g"], k=k).collect()[0]
-    est_d = kmv_distinct(both, ["g"], F.col("v"), k=k).collect()[0]
-    assert (est_m["n_kept"], est_m["est_distinct"]) == (est_d["n_kept"], est_d["est_distinct"])
-
-
-def test_kmv_estimate_small_sketch_no_ansi_throw(spark):
-    # sketches smaller than k must not trip ANSI element_at
-    from readability_scanner_spark.operators.sketches import kmv_estimate, kmv_sketch
-
-    df = spark.createDataFrame([("g", "only")], "g string, v string")
-    sk = kmv_sketch(df, ["g"], F.col("v"), k=64)
-    (row,) = kmv_estimate(sk, ["g"], k=64).collect()
-    assert (row["n_kept"], row["est_distinct"]) == (1, 1.0)
-
-
 def test_weighted_sample_drops_null_ids(spark):
     # a NULL id has no content hash: concat_ws would fold it onto the
     # hash-of-salt (every NULL row colliding on one priority) while a
@@ -249,20 +207,6 @@ def test_cms_overestimates_under_forced_collisions(spark, cms_tokens):
     }
     assert est["alpha"] >= 200
     assert any(est[f"rare{i}"] > 1 for i in range(120))  # collisions visible
-
-
-def test_cms_merge_equals_union_sketch(spark, cms_tokens):
-    from readability_scanner_spark.operators.sketches import cms_merge, cms_sketch
-
-    a = cms_tokens.where(F.col("tok").startswith("rare"))
-    b = cms_tokens.where(~F.col("tok").startswith("rare"))
-    direct = cms_sketch(cms_tokens, "tok", depth=4, width=256)
-    merged = cms_merge(cms_sketch(a, "tok", depth=4, width=256).union(
-        cms_sketch(b, "tok", depth=4, width=256)
-    ))
-    d = {(r["r"], r["bucket"]): r["cnt"] for r in direct.collect()}
-    m = {(r["r"], r["bucket"]): r["cnt"] for r in merged.collect()}
-    assert d == m
 
 
 def test_cms_estimate_rejects_mismatched_sketch_params(spark, cms_tokens):
