@@ -116,8 +116,8 @@ def entry(spark: SparkSession) -> DataFrame:
     # correctness SF while we have a session: the DuckDB oracle reads the
     # same file, and entry() runs before the correctness loop, so both
     # engines see one table regardless of the loop's spark-vs-oracle
-    # execution order. mtime-gated (no force): parity needs a SHARED
-    # sidecar, not a fresh one — both engines aggregate whatever is there
+    # execution order. A current sidecar is reused, not rebuilt: parity
+    # needs a SHARED table — both engines aggregate whatever is there
     if os.path.isdir("/root/testdata/sf0.01"):
         try:
             _fullreport_sidecar(spark, "/root/testdata/sf0.01")
@@ -489,15 +489,9 @@ def q_flagship_extract(spark, sf_dir):
     verifies the aggregation layer over the sidecar; this one verifies
     the sidecar's own rows."""
     from readability_scanner_spark.operators.reports import A1_METRICS
-    from readability_scanner_spark.plans.pipeline import extract_and_score
 
     _fullreport_sidecar(spark, sf_dir)  # the oracle's side of the compare
-    docs = _t(spark, sf_dir, "documents", spread=True)
-    transcripts = _docs_as_transcripts(
-        docs, F.col("source"), F.to_timestamp(F.lit("2025-06-01 00:00:00"))
-    )
-    scored = extract_and_score(transcripts, repartition_to=0)
-    return scored.select(
+    return _scored_documents(spark, sf_dir).select(
         F.col("turn_idx").alias("doc_id"), "parse_failed", *A1_METRICS
     ).orderBy("doc_id")
 
@@ -860,14 +854,9 @@ def q_full_report(spark, sf_dir):
         A1_METRICS,
         readability_report,
     )
-    from readability_scanner_spark.plans.pipeline import extract_and_score
 
     _fullreport_sidecar(spark, sf_dir)  # the oracle's side of the compare
-    docs = _t(spark, sf_dir, "documents", spread=True)
-    transcripts = _docs_as_transcripts(
-        docs, F.col("source"), F.to_timestamp(F.lit("2025-06-01 00:00:00"))
-    )
-    rep = readability_report(extract_and_score(transcripts, repartition_to=0), "conv_id")
+    rep = readability_report(_scored_documents(spark, sf_dir), "conv_id")
     return rep.select(
         "grp",
         "documents",
@@ -886,15 +875,8 @@ def q_full_report_sql(spark, sf_dir):
     sidecar oracle — syllables can't be recomputed in SQL, but the
     sidecar chain pins them anyway)."""
     from readability_scanner_spark.operators.reports import readability_report
-    from readability_scanner_spark.plans.pipeline import extract_and_score
 
-    # spread=True: single-row-group parquet would otherwise put the whole
-    # per-row extraction ladder on ONE task (CLAUDE.md gotcha)
-    docs = _t(spark, sf_dir, "documents", spread=True)
-    transcripts = _docs_as_transcripts(
-        docs, F.col("source"), F.to_timestamp(F.lit("2025-06-01 00:00:00"))
-    )
-    rep = readability_report(extract_and_score(transcripts, repartition_to=0), "conv_id")
+    rep = readability_report(_scored_documents(spark, sf_dir), "conv_id")
     return rep.select(
         "grp",
         "documents",
@@ -906,16 +888,34 @@ def q_full_report_sql(spark, sf_dir):
     )
 
 
+def _scored_documents(spark, sf_dir: str) -> DataFrame:
+    """The documents table through the whole flagship pipeline, with
+    conv_id = source — ONE definition for the sidecar builder and the live
+    flagship_extract/full_report/full_report_sql queries, so the live
+    side and the materialized side cannot drift apart."""
+    from readability_scanner_spark.plans.pipeline import extract_and_score
+
+    # spread=True: single-row-group parquet would otherwise put the whole
+    # per-row extraction ladder on ONE task
+    docs = _t(spark, sf_dir, "documents", spread=True)
+    transcripts = _docs_as_transcripts(
+        docs, F.col("source"), F.to_timestamp(F.lit("2025-06-01 00:00:00"))
+    )
+    return extract_and_score(transcripts, repartition_to=0)
+
+
 def _sidecar_version() -> str:
     """Content-derived sidecar version: the sidecar lives in /tmp across
     driver rounds and its mtime gate only tracks the SOURCE parquet, so
     a sidecar built by OLDER extraction code would fail the live-vs-
     sidecar per-doc comparison (flagship_extract/full_report) bit-
     exactly-but-wrongly. Hashing every extraction-semantics source file
-    into the path closes that class permanently — any code change that
-    could alter per-doc output changes the path and forces a rebuild
-    (r4 review: a hand-bumped constant was forgotten twice in one
-    round)."""
+    closes that class permanently — any code change that could alter
+    per-doc output changes the version, and a sidecar whose stamp
+    differs is rebuilt (r4 review: a hand-bumped constant was forgotten
+    twice in one round). The version lives in a stamp file, never in
+    the sidecar's path: the oracle SQL names that path, and its text
+    must not move when extraction code changes."""
     import hashlib
 
     pkg = os.path.join(os.path.dirname(os.path.abspath(__file__)), "readability_scanner_spark")
@@ -938,71 +938,55 @@ def _sidecar_version() -> str:
     return "v" + h.hexdigest()[:10]
 
 
-_SIDECAR_VER = _sidecar_version()
+def _sidecar_path(sf_dir: str) -> str:
+    """The stable sidecar path the oracle SQL reads, keyed by the sf dir
+    name only."""
+    return f"/tmp/rss_fullreport_stats_{os.path.basename(os.path.normpath(sf_dir))}.parquet"
 
 
-def _fullreport_sidecar(spark, sf_dir: str, force: bool = False) -> str:
+def _fullreport_sidecar(spark, sf_dir: str) -> str:
     """Materialize the per-doc python-computed stats (extraction +
     syllables — not SQL-expressible) to a parquet side table keyed by the
     sf dir name. Both q_full_report_agg AND its DuckDB oracle aggregate
     THIS table, which makes full_report's aggregation layer (avg×15 +
     HAVING + sort, news-scanner/database/articles.py:278-371) exactly
     hash-verifiable — the per-doc stats themselves stay covered by the
-    golden/pytest layer. Rebuilt when the sidecar is missing, older
-    than the source parquet, or the extraction code changed (the
-    content-derived _SIDECAR_VER in the path); entry() prebuilds
-    WITHOUT force — parity needs a SHARED table, not a fresh one."""
-    import shutil
-
+    golden/pytest layer. Rebuilt when the table is missing or older than
+    the source parquet, or when the version stamp beside it is missing
+    or differs from _sidecar_version(); otherwise returned without a
+    Spark job — parity needs a SHARED table, not a fresh one."""
+    from readability_scanner_spark.catalog import overwrite_all
     from readability_scanner_spark.operators.reports import A1_METRICS
-    from readability_scanner_spark.plans.pipeline import extract_and_score
 
     src = os.path.join(sf_dir, "documents.parquet")
-    name = os.path.basename(os.path.normpath(sf_dir))
-    final = f"/tmp/rss_fullreport_stats_{name}_{_SIDECAR_VER}.parquet"
-    if (
-        not force
-        and os.path.exists(final)
-        and os.path.getmtime(final) >= os.path.getmtime(src)
-    ):
-        return final
-    docs = _t(spark, sf_dir, "documents", spread=True)
-    transcripts = _docs_as_transcripts(
-        docs, F.col("source"), F.to_timestamp(F.lit("2025-06-01 00:00:00"))
-    )
-    scored = extract_and_score(transcripts, repartition_to=0)
-    # uuid suffixes, not pid: pid reuse after a crashed swap would
-    # collide with a leftover dir and ENOTEMPTY the rename. Leftovers
-    # from crashed runs are swept here (best-effort) instead
-    import glob as _glob
-    import uuid as _uuid
-
-    for stale in _glob.glob(f"{final}.__tmp*__") + _glob.glob(f"{final}.__old*__"):
-        shutil.rmtree(stale, ignore_errors=True)
-    # sweep sidecars built by PRIOR code versions too (ADVICE r4: the
-    # version hash is in the path, so every extraction-code change
-    # would otherwise strand a full per-doc table in /tmp forever)
-    for old_ver in _glob.glob(f"/tmp/rss_fullreport_stats_{name}_v*.parquet"):
-        if os.path.basename(old_ver) != os.path.basename(final):
-            shutil.rmtree(old_ver, ignore_errors=True)
-    staging = f"{final}.__tmp{_uuid.uuid4().hex}__"
+    final = _sidecar_path(sf_dir)
+    stamp = final + ".version"
+    version = _sidecar_version()
+    if os.path.exists(final) and os.path.getmtime(final) >= os.path.getmtime(src):
+        try:
+            with open(stamp) as fh:
+                if fh.read() == version:
+                    return final
+        except FileNotFoundError:
+            pass
+    # drop the stamp BEFORE the swap: a crash anywhere until the new
+    # stamp lands leaves no stamp, so the next call rebuilds instead of
+    # trusting a table the stamp does not describe
+    if os.path.exists(stamp):
+        os.remove(stamp)
     # doc_id (= turn_idx, the documents key) makes the sidecar per-doc
     # addressable — flagship_extract hash-compares the LIVE pipeline's
-    # per-doc rows against a DuckDB read of this table
-    scored.select(
-        F.col("turn_idx").alias("doc_id"), "conv_id", "parse_failed", *A1_METRICS
-    ).coalesce(4).write.mode("overwrite").parquet(staging)
-    # near-atomic swap (ADVICE r3/r4): rename the old table aside, then
-    # the staging dir in. POSIX cannot replace a DIRECTORY atomically,
-    # so between the two renames the path is briefly absent — a reader
-    # landing in that microsecond window should retry once (the driver's
-    # single-process flow never does; noted for concurrent deployments)
-    aside = f"{final}.__old{_uuid.uuid4().hex}__"
-    if os.path.exists(final):
-        os.rename(final, aside)
-    os.rename(staging, final)
-    if os.path.exists(aside):
-        shutil.rmtree(aside)
+    # per-doc rows against a DuckDB read of this table. The staging swap
+    # keeps the old table readable until the new one is fully written
+    overwrite_all(
+        spark,
+        final,
+        _scored_documents(spark, sf_dir)
+        .select(F.col("turn_idx").alias("doc_id"), "conv_id", "parse_failed", *A1_METRICS)
+        .coalesce(4),
+    )
+    with open(stamp, "w") as fh:
+        fh.write(version)
     return final
 
 
@@ -1414,7 +1398,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_search_scored": q_text_search_scored,
         "token_index_search": q_token_index_search,
         "extractive_summary": q_extractive_summary,  # r5: trim oracle fix
-        "flagship_extract": q_flagship_extract,  # sidecar version bump
+        "flagship_extract": q_flagship_extract,
         "full_report": q_full_report,
         "full_report_agg": q_full_report_agg,
         # --- (c) stable greens sharing modules with (b) ---
@@ -1952,7 +1936,7 @@ def _lang_quality_oracle() -> str:
 
 def _text_quality_filters_oracle() -> str:
     """Generated from the operator's PII_PATTERNS so the regex literals
-    cannot drift; repetition math mirrors repetition_signals shape."""
+    cannot drift; repetition math mirrors with_repetition_signals shape."""
     from readability_scanner_spark.operators.textquality import PII_PATTERNS
 
     # triples carry a Java form and an RE2 form per pattern (same match
@@ -1994,7 +1978,6 @@ def _sidecar_report_sql() -> str:
     full_report (live-pipeline Spark side) and full_report_agg
     (sidecar-input Spark side) oracles. Called at oracle_sql() time so
     the sidecar path tracks _oracle_sf_dir()."""
-    name = os.path.basename(os.path.normpath(_oracle_sf_dir()))
     return f"""
             SELECT conv_id AS grp, count(*) AS documents,
                    round(avg(words), 4) AS avg_words,
@@ -2012,7 +1995,7 @@ def _sidecar_report_sql() -> str:
                    round(avg(gunning_fog), 4) AS avg_gunning_fog,
                    round(avg(spache), 4) AS avg_spache,
                    round(avg(automated_readability), 4) AS avg_automated_readability
-            FROM read_parquet('/tmp/rss_fullreport_stats_{name}_{_SIDECAR_VER}.parquet/*.parquet')
+            FROM read_parquet('{_sidecar_path(_oracle_sf_dir())}/*.parquet')
             WHERE NOT parse_failed
             GROUP BY conv_id
         """
@@ -2339,7 +2322,7 @@ def oracle_sql() -> dict[str, str]:
                    complex_polysyllabic_words, flesch, flesch_kincaid, smog,
                    dale_chall, coleman_liau, gunning_fog, spache,
                    automated_readability
-            FROM read_parquet('/tmp/rss_fullreport_stats_{os.path.basename(os.path.normpath(_oracle_sf_dir()))}_{_SIDECAR_VER}.parquet/*.parquet')
+            FROM read_parquet('{_sidecar_path(_oracle_sf_dir())}/*.parquet')
             ORDER BY doc_id
         """,
         "full_report_sql": f"""

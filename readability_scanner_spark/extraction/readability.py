@@ -641,34 +641,3 @@ def extract_main_content(raw_html: str) -> ExtractionResult:
     return ExtractionResult(
         "", "", title, [], parse_failed=True, byline=byline_sink[0] if byline_sink else None
     )
-
-
-def probably_readerable(
-    raw_html: str, min_content_length: int = 140, min_score: float = 20.0
-) -> bool:
-    """The public isProbablyReaderable pre-check: sum sqrt(len - min_len)
-    over candidate paragraph-ish nodes (skipping unlikely-classed ones);
-    readerable once the running score clears min_score. At corpus scale
-    this is the cheap pre-scan gate: run it first and skip the full
-    extraction ladder for obvious non-articles (nav shells, link farms,
-    empty templates) — a parse + one walk instead of up to four
-    grab/clean attempts."""
-    if raw_html is None or not raw_html.strip():
-        return False
-    from math import sqrt
-
-    root = parse_html(raw_html)
-    score = 0.0
-    for node in root.iter_elements("p", "pre", "article", "div"):
-        if node.tag == "div" and not any(c.tag == "br" for c in node.children):
-            continue  # divs count only in their <br>-paragraph form
-        ci = node.class_id
-        if ci and UNLIKELY_CANDIDATES.search(ci) and not OK_MAYBE_CANDIDATE.search(ci):
-            continue
-        n = len(node.inner_text())
-        if n < min_content_length:
-            continue
-        score += sqrt(n - min_content_length)
-        if score > min_score:
-            return True
-    return False

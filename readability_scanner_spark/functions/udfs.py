@@ -1,20 +1,21 @@
-"""Arrow-vectorized pandas UDFs — the only Python in the hot path.
+"""The fused Arrow/pandas pass — the only Python in the hot path.
 
 Per BASELINE.json input_hint: "vectorized pandas/Arrow UDFs (no per-row
-Python) throughout". Spark hands each UDF an Arrow batch (bounded by
-spark.sql.execution.arrow.maxRecordsPerBatch, see config.py); inside the
-batch we run a tight Python loop over strings — one DOM parse per
-document, parser state reused, no per-row Spark↔Python round trip.
+Python) throughout". Spark hands the mapInPandas body an Arrow batch
+(bounded by spark.sql.execution.arrow.maxRecordsPerBatch, see
+config.py); inside the batch we run a tight Python loop over strings —
+one DOM parse per document, parser state reused, no per-row
+Spark↔Python round trip.
 
-Fuses the reference's per-article stages into two UDF stages
-(SURVEY.md §2.1 UDF surface):
-  extract_stats_partition: E1 readability extraction + E2 cleaning + E4 dates +
-               S3 image, one shared DOM parse
-               (reference round-trips HTTP per article instead,
-               news-scanner/scanner/content_extractor.py:54-110)
-  (fused with) T1–T7 text statistics — ONE Arrow pass; the spark.sql
-  UDF registrations for ad-hoc SQL live in sql.py
-               (news-scanner/readability/text_stats.py:136-201)
+Fuses the reference's per-article stages into ONE pass
+(SURVEY.md §2.1 UDF surface), extract_stats_partition:
+  E1 readability extraction + E2 cleaning + E4 dates + S3 image, one
+  shared DOM parse (reference round-trips HTTP per article instead,
+  news-scanner/scanner/content_extractor.py:54-110), then T1–T7 text
+  statistics on the extracted text
+  (news-scanner/readability/text_stats.py:136-201).
+EXTRACT_SCHEMA and STATS_SCHEMA are the one declaration of the pass's
+output columns; plans/pipeline.py builds its output schema from them.
 
 Failure policy: a row never throws — parse failures become
 parse_failed=True rows (the reference's 204/no-content path,
@@ -27,7 +28,6 @@ from __future__ import annotations
 import html as _html
 
 import pandas as pd
-from pyspark.sql.functions import pandas_udf
 
 # module scope, NOT inside the per-row functions: extract_one runs once
 # per document, and even a cached `import` statement pays a sys.modules
@@ -75,26 +75,8 @@ STATS_SCHEMA = StructType(
 )
 
 
-_EXTRACT_COLS = [
-    "content",
-    "text_content",
-    "title",
-    "image_url",
-    "published_ts",
-    "spans",
-    "parse_failed",
-    "content_ratio",
-]
-
-_STATS_COLS = [
-    "words",
-    "sentences",
-    "paragraphs",
-    "characters",
-    "syllables",
-    "word_syllables",
-    "complex_polysyllabic_words",
-]
+_EXTRACT_COLS = EXTRACT_SCHEMA.fieldNames()
+_STATS_COLS = STATS_SCHEMA.fieldNames()
 
 
 def extract_one(raw: str) -> tuple:

@@ -44,11 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark.sql.types import (
-    ArrayType,
-    BooleanType,
-    DoubleType,
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
@@ -56,12 +52,19 @@ from pyspark.sql.types import (
 )
 
 from readability_scanner_spark.functions.formulas import with_readability_scores
-from readability_scanner_spark.functions.udfs import extract_stats_partition
+from readability_scanner_spark.functions.udfs import (
+    EXTRACT_SCHEMA,
+    STATS_SCHEMA,
+    extract_stats_partition,
+)
 
 SALT_SPAN = 1000  # turns per salt shard within one conversation
 
 _PASSTHROUGH = ["conv_id", "turn_idx", "role", "tool", "ts"]
 
+# the fused pass's output: the pass-through transcript columns, then the
+# extraction and stats columns in the order extract_stats_partition
+# appends them
 _SCORED_SCHEMA = StructType(
     [
         StructField("conv_id", StringType()),
@@ -69,22 +72,9 @@ _SCORED_SCHEMA = StructType(
         StructField("role", StringType()),
         StructField("tool", StringType()),
         StructField("ts", TimestampType()),
-        StructField("content", StringType()),
-        StructField("text_content", StringType()),
-        StructField("title", StringType()),
-        StructField("image_url", StringType()),
-        StructField("published_ts", TimestampType()),
-        StructField("spans", ArrayType(ArrayType(LongType()))),
-        StructField("parse_failed", BooleanType()),
-        StructField("content_ratio", DoubleType()),
-        StructField("words", LongType()),
-        StructField("sentences", LongType()),
-        StructField("paragraphs", LongType()),
-        StructField("characters", LongType()),
-        StructField("syllables", LongType()),
-        StructField("word_syllables", DoubleType()),
-        StructField("complex_polysyllabic_words", LongType()),
     ]
+    + EXTRACT_SCHEMA.fields
+    + STATS_SCHEMA.fields
 )
 
 

@@ -40,8 +40,6 @@ PUBLIC_API = {
         "SURVEY S4 upsert sink (Iceberg MERGE INTO / parquet swap)",
     "readability_scanner_spark/catalog.py::delete_rows":
         "SURVEY M4 delete sink (Iceberg DELETE FROM / parquet swap)",
-    "readability_scanner_spark/catalog.py::overwrite_all":
-        "SURVEY S5 full-refresh sink (Iceberg INSERT OVERWRITE / parquet swap)",
     "readability_scanner_spark/operators/io_ops.py::set_columns_where":
         "SURVEY M1 $set field update",
     "readability_scanner_spark/operators/io_ops.py::migrate_legacy_columns":
@@ -92,17 +90,16 @@ PUBLIC_API = {
         "SURVEY E3 Reddit article-URL extraction, JVM form",
     "readability_scanner_spark/functions/columns.py::clean_html_col":
         "SURVEY E2 cleaning as a pure-SQL Column",
-    # defs in the files __spark_entry__._sidecar_version hashes: editing
-    # them moves the oracle SQL text, so they stay until that text is
-    # byte-stable (ROADMAP 1a)
-    "readability_scanner_spark/extraction/readability.py::probably_readerable":
-        "hashed extraction file, waits on ROADMAP 1a",
+    # pure-Python references the JVM/SQL forms are checked against
     "readability_scanner_spark/extraction/cleaning.py::make_preview":
-        "hashed extraction file, waits on ROADMAP 1a",
+        "Python reference of columns.preview_col: test_column_python_parity, "
+        "test_readability::test_preview_word_boundary, test_properties",
     "readability_scanner_spark/functions/textstats.py::count_words":
-        "hashed extraction file, waits on ROADMAP 1a",
+        "Python reference of the T3 word count: test_column_python_parity, "
+        "test_word_unicode",
     "readability_scanner_spark/dom.py::parse_html_stdlib":
-        "hashed extraction file, waits on ROADMAP 1a",
+        "html.parser reference tree that fast_parse must match: test_dom, "
+        "test_properties",
 }
 
 

@@ -38,9 +38,24 @@ def test_generator_schema_and_determinism(spark, small_transcripts):
     assert a == b
 
 
+# extract_and_score's output columns, built from udfs.EXTRACT_SCHEMA and
+# STATS_SCHEMA; a change to either moves every reader of the output
+SCORED_SCHEMA = (
+    "struct<conv_id:string,turn_idx:int,role:string,tool:string,ts:timestamp,"
+    "content:string,cleaned_data:string,title:string,image_url:string,"
+    "spans:array<array<bigint>>,parse_failed:boolean,content_ratio:double,"
+    "words:bigint,sentences:bigint,paragraphs:bigint,characters:bigint,"
+    "syllables:bigint,word_syllables:double,complex_polysyllabic_words:bigint,"
+    "publication_date:timestamp,flesch:double,flesch_kincaid:double,smog:double,"
+    "dale_chall:double,dale_chall_grade:string,coleman_liau:double,"
+    "gunning_fog:double,spache:double,automated_readability:double>"
+)
+
+
 def test_extract_and_score_end_to_end(spark, small_transcripts):
     out = extract_and_score(small_transcripts).cache()
     try:
+        assert out.schema.simpleString() == SCORED_SCHEMA
         total = out.count()
         assert total == small_transcripts.count()
         ok = out.where(~F.col("parse_failed"))

@@ -255,19 +255,6 @@ def test_byline_captured_and_stripped():
     assert r3.byline == "Second Author Credit, senior correspondent, city desk bureau"
 
 
-def test_probably_readerable():
-    from readability_scanner_spark.extraction.readability import probably_readerable
-
-    article = make_fixture("plain_article", 3)
-    assert probably_readerable(article)
-    assert not probably_readerable(make_fixture("no_content", 3))
-    assert not probably_readerable("")
-    assert not probably_readerable("<html><body><div class='menu'><a href='/'>x</a></div></body></html>")
-    # unlikely-classed long text does not count
-    junk = "<html><body><div class='sidebar'><p class='comment'>" + "w " * 200 + "</p></div></body></html>"
-    assert not probably_readerable(junk)
-
-
 def test_byline_not_taken_from_stripped_boilerplate():
     """A byline-ish node inside an unlikely-candidate subtree is removed
     WITH the subtree; the live-DOM spec never sees it, so no byline."""
