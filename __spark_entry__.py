@@ -9,9 +9,12 @@ aliases match column-for-column between the two sides.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import sys
-from collections.abc import Callable
+import tempfile
+import zipfile
+from collections.abc import Callable, Iterable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -31,6 +34,47 @@ TOKEN_PAT = r"\w+|[^\w \t\n\x0B\f\r]"
 
 
 _PKG_SHIPPED: set[str] = set()
+_ZIP_DIR = "/tmp"
+
+
+def _md5_of_files(base: str, rels: Iterable[str]) -> str:
+    """md5 over each file's path (relative to ``base``) and bytes, in the
+    given order — the content key of the worker zip and of the sidecar
+    version stamp."""
+    h = hashlib.md5()
+    for rel in rels:
+        with open(os.path.join(base, rel), "rb") as fh:
+            data = fh.read()
+        h.update(f"{rel}\0{len(data)}\0".encode())
+        h.update(data)
+    return h.hexdigest()
+
+
+def _package_zip(repo: str) -> str:
+    """Zip of the ``.py`` files of the package under ``repo``, named by
+    their md5 in ``_ZIP_DIR``: an existing zip is reused only when its
+    name matches, so a zip built from another checkout (or an older
+    tree) never stands in for this one."""
+    rels = sorted(
+        os.path.relpath(os.path.join(root, f), repo)
+        for root, _dirs, files in os.walk(os.path.join(repo, "readability_scanner_spark"))
+        for f in files
+        if f.endswith(".py")
+    )
+    zip_path = os.path.join(
+        _ZIP_DIR, f"readability_scanner_spark_pkg_{_md5_of_files(repo, rels)[:16]}.zip"
+    )
+    if not os.path.exists(zip_path):
+        # build in a private temp file, then atomic-rename: concurrent
+        # processes (bench + selfcheck) must never addPyFile a half-
+        # written zip
+        fd, tmp_zip = tempfile.mkstemp(suffix=".zip", dir=_ZIP_DIR)
+        os.close(fd)
+        with zipfile.ZipFile(tmp_zip, "w") as zf:
+            for rel in rels:
+                zf.write(os.path.join(repo, rel), rel)
+        os.replace(tmp_zip, zip_path)
+    return zip_path
 
 
 def _ensure_package_on_workers(spark: SparkSession) -> None:
@@ -45,29 +89,7 @@ def _ensure_package_on_workers(spark: SparkSession) -> None:
         key = str(id(spark))
     if key in _PKG_SHIPPED:
         return
-    import tempfile
-    import zipfile
-
-    repo = os.path.dirname(os.path.abspath(__file__))
-    pkg = os.path.join(repo, "readability_scanner_spark")
-    sources = [
-        os.path.join(root, f)
-        for root, _dirs, files in os.walk(pkg)
-        for f in files
-        if f.endswith(".py")
-    ]
-    newest = max(os.path.getmtime(p) for p in sources)
-    zip_path = os.path.join("/tmp", "readability_scanner_spark_pkg.zip")
-    if not os.path.exists(zip_path) or os.path.getmtime(zip_path) < newest:
-        # build in a private temp file, then atomic-rename: concurrent
-        # processes (bench + selfcheck) must never addPyFile a half-
-        # written zip
-        fd, tmp_zip = tempfile.mkstemp(suffix=".zip", dir="/tmp")
-        os.close(fd)
-        with zipfile.ZipFile(tmp_zip, "w") as zf:
-            for full in sources:
-                zf.write(full, os.path.relpath(full, repo))
-        os.replace(tmp_zip, zip_path)
+    zip_path = _package_zip(os.path.dirname(os.path.abspath(__file__)))
     try:
         spark.sparkContext.addPyFile(zip_path)
     except Exception:
@@ -916,11 +938,8 @@ def _sidecar_version() -> str:
     twice in one round). The version lives in a stamp file, never in
     the sidecar's path: the oracle SQL names that path, and its text
     must not move when extraction code changes."""
-    import hashlib
-
     pkg = os.path.join(os.path.dirname(os.path.abspath(__file__)), "readability_scanner_spark")
-    h = hashlib.md5()
-    for rel in (
+    files = (
         "functions/udfs.py",
         "functions/textstats.py",
         "functions/syllables.py",
@@ -932,10 +951,8 @@ def _sidecar_version() -> str:
         "extraction/pdf.py",
         "dom.py",
         "plans/pipeline.py",
-    ):
-        with open(os.path.join(pkg, rel), "rb") as fh:
-            h.update(fh.read())
-    return "v" + h.hexdigest()[:10]
+    )
+    return "v" + _md5_of_files(pkg, files)[:10]
 
 
 def _sidecar_path(sf_dir: str) -> str:
@@ -1168,15 +1185,14 @@ def q_cms_heavy_hitters(spark, sf_dir):
         F.count("*").cast("long").alias("exact_count")
     )
     # candidates = the already-distinct exact table, not the raw token
-    # stream; assume_distinct skips the redundant third aggregation
-    # over the widest intermediate
+    # stream, so the estimate adds no aggregation over the widest
+    # intermediate
     est = cms_estimate(
         sketch,
         exact.select(F.col("token").alias("tok")),
         "tok",
         depth=4,
         width=1024,
-        assume_distinct=True,
     )
     return (
         est.join(exact, "token")

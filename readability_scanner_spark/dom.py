@@ -165,16 +165,13 @@ class Node:
                 push(reversed(node.children))
         return "".join(parts)
 
-    def inner_text(self, normalize: bool = True) -> str:
-        """Concatenated text content; normalize collapses whitespace runs
-        to single spaces and strips (mirrors the reference's cleaning,
-        news-scanner/readability/analyzer.py:56). join/split is
-        byte-equivalent to re.sub(r'\\s+',' ').strip() (both use unicode
-        whitespace) and several times faster."""
-        text = self.raw_text()
-        if normalize:
-            text = " ".join(text.split())
-        return text
+    def inner_text(self) -> str:
+        """Concatenated text content with whitespace runs collapsed to
+        single spaces and stripped (mirrors the reference's cleaning,
+        news-scanner/readability/analyzer.py:56); raw_text() keeps it
+        as is. join/split is byte-equivalent to re.sub(r'\\s+',' ').strip()
+        (both use unicode whitespace) and several times faster."""
+        return " ".join(self.raw_text().split())
 
     def has_text(self) -> bool:
         """True iff inner_text() would be non-empty — early-exits at the

@@ -1,8 +1,11 @@
 """Publication-date extraction + normalization (E4/E5, SURVEY.md §2.1).
 
 Reference behavior re-expressed:
-  * meta-selector strategies, JSON-LD datePublished, then in-text regex
-    patterns (news-scanner/services/date_extraction_service.py:79-218)
+  * meta-selector strategies, then JSON-LD datePublished
+    (news-scanner/services/date_extraction_service.py:79-218); the
+    reference's last step, in-text regex patterns, is not run (the
+    transcript turn is the whole input, so a date-shaped string in the
+    prose is not evidence of publication)
   * normalization: anything → tz-aware UTC; naive ⇒ assume UTC; manual
     ISO/RFC822 fallbacks (news-scanner/utils/date_normalizer.py:13-66)
   * future dates clamped to 'now' (news-scanner/scanner/rss_parser.py:166-172)
@@ -158,9 +161,9 @@ def _jsonld_date(obj) -> Optional[str]:
     return None
 
 
-def extract_publication_date(root: Node, text: str = "") -> Optional[datetime]:
-    """Priority ladder: meta selectors → <time datetime> → JSON-LD →
-    in-text patterns (date_extraction_service.py:79-164)."""
+def extract_publication_date(root: Node) -> Optional[datetime]:
+    """Priority ladder: meta selectors → <time datetime> → JSON-LD
+    (date_extraction_service.py:79-164)."""
     # 1. <meta property/name=...>
     metas = {}
     for meta in root.iter_elements("meta"):
@@ -190,9 +193,4 @@ def extract_publication_date(root: Node, text: str = "") -> Optional[datetime]:
                 dt = normalize_date(raw)
                 if dt:
                     return dt
-    # 4. in-text regex patterns
-    if text:
-        dt = _parse_date_string(text[:2000])
-        if dt:
-            return normalize_date(dt)
     return None

@@ -1,16 +1,18 @@
 """Primary-image extraction (S3, SURVEY.md §2.1).
 
 Precedence from the reference (news-scanner/scanner/content_extractor.py:136-214):
-lead_image_url field → <meta name="image"> → <meta property="og:image">
-→ first <img src>; relative URLs resolved against a base; extension and
-scheme validation.
+<meta name="image"> → <meta property="og:image"> → first <img src>;
+extension and scheme validation. The reference's lead_image_url field
+and its resolving of relative URLs against the page URL have no input
+here: a transcript turn carries no page URL, so a relative URL fails
+the scheme check.
 """
 
 from __future__ import annotations
 
 import re
 from typing import Optional
-from urllib.parse import urljoin, urlparse
+from urllib.parse import urlparse
 
 from readability_scanner_spark.dom import Node
 
@@ -29,12 +31,8 @@ def _valid_image_url(url: str) -> bool:
     return "image" in parsed.path.lower() or "img" in parsed.netloc.lower()
 
 
-def extract_primary_image(
-    root: Node, base_url: str = "", lead_image_url: str = ""
-) -> Optional[str]:
+def extract_primary_image(root: Node) -> Optional[str]:
     candidates: list[str] = []
-    if lead_image_url:
-        candidates.append(lead_image_url)
     metas = {}
     for meta in root.iter_elements("meta"):
         key = (meta.get("property") or meta.get("name")).lower()
@@ -48,7 +46,7 @@ def extract_primary_image(
         candidates.append(img.get("src"))
 
     for cand in candidates:
-        url = urljoin(base_url, cand.strip()) if base_url else cand.strip()
+        url = cand.strip()
         if _valid_image_url(url):
             return url
     return None

@@ -26,6 +26,8 @@ from dataclasses import dataclass, field
 from typing import Optional
 
 from readability_scanner_spark.dom import BLOCK_ELEMENTS, Node, body_of, parse_html
+from readability_scanner_spark.extraction.dates import extract_publication_date
+from readability_scanner_spark.extraction.images import extract_primary_image
 
 # --- public-spec regexes (SURVEY.md §2.2 steps 2 and 4) -------------------
 UNLIKELY_CANDIDATES = re.compile(
@@ -263,7 +265,7 @@ def _is_valid_byline(text: str) -> bool:
     return 0 < len(text.strip()) < 100
 
 
-def _grab_article(body: Node, flags: int, byline_sink: Optional[list] = None) -> Optional[Node]:
+def _grab_article(body: Node, flags: int, byline_sink: list) -> Optional[Node]:
     # step 2 sweep: byline capture+removal ALWAYS (public spec checks the
     # byline before and independent of the unlikely-candidate flag);
     # unlikely-candidate stripping only under the flag. attrs-empty fast
@@ -290,7 +292,7 @@ def _grab_article(body: Node, flags: int, byline_sink: Optional[list] = None) ->
         # sweep iterates a pre-removal snapshot, so a candidate inside an
         # already-stripped subtree must be ignored (spec walks the live
         # DOM): verify the node is still attached under body.
-        if byline_sink is not None and not byline_sink:
+        if not byline_sink:
             if (
                 node.get("rel") == "author"
                 or "author" in node.get("itemprop", "")
@@ -605,9 +607,6 @@ def extract_main_content(raw_html: str) -> ExtractionResult:
             # head metadata (E4 dates, S3 image) from the FIRST parse,
             # before preprocessing strips <script>/<meta> context — saves
             # a dedicated metadata reparse per document
-            from readability_scanner_spark.extraction.dates import extract_publication_date
-            from readability_scanner_spark.extraction.images import extract_primary_image
-
             title = _extract_title(root)
             image_url = extract_primary_image(root)
             published = extract_publication_date(root)

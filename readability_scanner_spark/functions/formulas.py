@@ -198,18 +198,13 @@ def automated_readability_col(words: Column, sentences: Column, characters: Colu
     return _guard(words, sentences, raw)
 
 
-def with_readability_scores(
-    df: DataFrame,
-    words: str = "words",
-    sentences: str = "sentences",
-    characters: str = "characters",
-    syllables: str = "syllables",
-    complex_words: str = "complex_polysyllabic_words",
-) -> DataFrame:
-    """Append all 8 scores + grade bucket as native Column expressions."""
-    w, s = F.col(words).cast("double"), F.col(sentences).cast("double")
-    c, y = F.col(characters).cast("double"), F.col(syllables).cast("double")
-    x = F.col(complex_words).cast("double")
+def with_readability_scores(df: DataFrame) -> DataFrame:
+    """Append all 8 scores + grade bucket as native Column expressions
+    over the stats columns ``words``, ``sentences``, ``characters``,
+    ``syllables`` and ``complex_polysyllabic_words``."""
+    w, s = F.col("words").cast("double"), F.col("sentences").cast("double")
+    c, y = F.col("characters").cast("double"), F.col("syllables").cast("double")
+    x = F.col("complex_polysyllabic_words").cast("double")
     dc = dale_chall_col(w, s, x)
     return df.withColumns(
         {

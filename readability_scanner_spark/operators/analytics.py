@@ -278,14 +278,11 @@ def top_k(df: DataFrame, order_col: str, k: int, tie_break: str) -> DataFrame:
 
 # --- W1/W3: time windows ------------------------------------------------------------------
 
-def rolling_window(df: DataFrame, ts_col: str, days: int, anchor=None) -> DataFrame:
-    """W1 7-day lookback (articles.py:479-495). `anchor` defaults to the
-    data max so tests are deterministic; production passes
-    current_timestamp(). The default anchor is computed INSIDE the same
+def rolling_window(df: DataFrame, ts_col: str, days: int) -> DataFrame:
+    """W1 7-day lookback (articles.py:479-495), anchored at the data max
+    so results are deterministic. The anchor is computed INSIDE the same
     job (broadcast single-row aggregate join — the scalar-subquery
     shape), not a driver-side action, so the operator stays one plan."""
-    if anchor is not None:
-        return df.where(F.col(ts_col) >= F.lit(anchor) - F.expr(f"INTERVAL {days} DAYS"))
     bound = df.agg(
         (F.max(ts_col) - F.expr(f"INTERVAL {days} DAYS")).alias("_cutoff")
     )

@@ -51,20 +51,23 @@ def _md5_64(s: str) -> int:
     return int.from_bytes(hashlib.md5(s.encode("utf-8", "ignore")).digest()[8:], "little")
 
 
-def _capped_memo(fn, cap: int = 200_000):
+_MEMO_CAP = 200_000
+
+
+def _capped_memo(fn):
     """Per-task memo for a pure str -> int hash. Near-dup corpora repeat
     tokens and shingles heavily (Zipf vocabulary: high hit rate), but
-    unique keys dominate overall, so the memo is CAPPED — a long-lived
-    partition task (or an adversarial vocabulary) must not accrete one
-    entry per key ever seen. Build it inside the mapInPandas function so
-    each task owns its own."""
+    unique keys dominate overall, so the memo is CAPPED at _MEMO_CAP
+    entries — a long-lived partition task (or an adversarial vocabulary)
+    must not accrete one entry per key ever seen. Build it inside the
+    mapInPandas function so each task owns its own."""
     memo: dict[str, int] = {}
 
     def cached(s: str) -> int:
         h = memo.get(s)
         if h is None:
             h = fn(s)
-            if len(memo) < cap:
+            if len(memo) < _MEMO_CAP:
                 memo[s] = h
         return h
 
@@ -743,17 +746,16 @@ def resolve_duplicate_clusters(
     docs: DataFrame,
     id_col: str,
     text_col: str,
-    src: str = "id_a",
-    dst: str = "id_b",
 ) -> DataFrame:
-    """Pairs → clusters → canonical winner per cluster: the longest text
-    wins, ties broken by smallest id (deterministic across partitionings
-    and retries — a requirement for idempotent re-runs at scale). Output:
-    (doc_id, component, canonical_id, is_canonical) for every CLUSTERED
-    doc; singletons are not duplicates and are left out. Downstream
-    "keep one per cluster" is `where(is_canonical)` + anti-join.
+    """Pairs (``id_a``, ``id_b``) → clusters → canonical winner per
+    cluster: the longest text wins, ties broken by smallest id
+    (deterministic across partitionings and retries — a requirement for
+    idempotent re-runs at scale). Output: (doc_id, component,
+    canonical_id, is_canonical) for every CLUSTERED doc; singletons are
+    not duplicates and are left out. Downstream "keep one per cluster"
+    is `where(is_canonical)` + anti-join.
     """
-    comps = connected_components(pairs, src, dst)
+    comps = connected_components(pairs, "id_a", "id_b")
     scored = comps.join(
         docs.select(
             F.col(id_col).alias("node"), F.length(F.col(text_col)).alias("_tl")

@@ -52,7 +52,6 @@ def _ranked(
     limit: int,
     contrib,
     value_col: str = "score",
-    require_all: bool = False,
 ) -> DataFrame:
     """THE core of the regexp search family. Binds lower(field) once
     per field and each (field, term) lookaround count once (r6: the
@@ -64,9 +63,8 @@ def _ranked(
     ``value_col`` "relevance" keeps the long sum exact; "score" starts
     from 0.0 and rounds to 4 places. ``n_tokens`` is the field's
     word-run count on the RAW text (column pruning drops it for scorers
-    that ignore it); ``require_all`` keeps only rows where every term
-    matched. The rank tail keeps value > 0 and orders value desc, id
-    asc, top-``limit``."""
+    that ignore it). The rank tail keeps value > 0 and orders value
+    desc, id asc, top-``limit``."""
     terms = _terms(query)
     base = df.withColumns(
         {f"_ts_low_{i}": F.lower(F.col(c)) for i, c in enumerate(fields)}
@@ -86,8 +84,6 @@ def _ranked(
     for i, weight in enumerate(fields.values()):
         for j in range(len(terms)):
             cnt = F.col(f"_ts_c_{i}_{j}")
-            if require_all:
-                base = base.where(cnt > 0)
             score = score + contrib(cnt, float(weight), F.col(f"_ts_nt_{i}"))
     return (
         base.withColumn(value_col, score if exact else F.round(score, 4))
@@ -99,13 +95,12 @@ def _ranked(
 
 
 def text_search(
-    df: DataFrame, text_col: str, query: str, id_col: str, limit: int = 20, require_all: bool = False
+    df: DataFrame, text_col: str, query: str, id_col: str, limit: int = 20
 ) -> DataFrame:
     """Search: ``relevance`` = sum of per-term occurrence counts
     (case-insensitive, word-bounded) — the textScore analog; $text ORs
     terms, so it is the plain sum. Relevance desc, id asc tie-break,
-    top-k. ``require_all`` switches OR semantics ($text default) to AND
-    (phrase-ish)."""
+    top-k."""
     return _ranked(
         df,
         {text_col: 1.0},
@@ -114,7 +109,6 @@ def text_search(
         limit,
         lambda cnt, _w, _nt: cnt.cast("long"),
         value_col="relevance",
-        require_all=require_all,
     )
 
 

@@ -213,7 +213,6 @@ def cms_estimate(
     token_col: str,
     depth: int = 4,
     width: int = 1024,
-    assume_distinct: bool = False,
 ) -> DataFrame:
     """Point estimates for candidate tokens: ``token, est_count`` with
     ``est = min over r of cnt[r][h_r(token)]`` — an overestimate of the
@@ -230,7 +229,12 @@ def cms_estimate(
     undetectable from the sketch alone (buckets just look sparse), so
     callers own that pairing. The probe aggregates the constant-size
     sketch (≤ depth*width rows), corpus-size-independent. An empty
-    sketch (empty corpus) is legitimate: every estimate is 0."""
+    sketch (empty corpus) is legitimate: every estimate is 0.
+
+    Candidates are not deduplicated: the final ``groupBy("token")``
+    folds repeats into one row with the same minimum, so duplicates
+    only cost work. Pass already-distinct tokens (e.g. the output of a
+    groupBy on the token) to skip it."""
     probe = sketch.agg(
         F.collect_set("r").alias("rs"), F.max("bucket").alias("maxb")
     ).first()
@@ -248,13 +252,6 @@ def cms_estimate(
     cand = candidates.where(F.col(token_col).isNotNull()).select(
         F.col(token_col).alias("token")
     )
-    if not assume_distinct:
-        cand = cand.distinct()
-    # assume_distinct=True skips the dedup shuffle when the caller's
-    # candidates are already unique (e.g. the output of a groupBy on
-    # the token) — duplicates would only waste work, not corrupt
-    # estimates, but at corpus scale that wasted aggregation is a full
-    # extra pass over the widest intermediate
     fanned = cand.select(
         "token", F.explode(F.array(*[F.lit(r) for r in range(depth)])).alias("r")
     ).select("token", "r", _cms_bucket(F.col("r"), F.col("token"), width).alias("bucket"))

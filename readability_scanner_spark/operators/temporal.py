@@ -73,12 +73,12 @@ def range_join(
     right_ts: str,
     lower_seconds: float,
     upper_seconds: float,
-    bucket_seconds: float | None = None,
 ) -> DataFrame:
     """Pairs (l, r) with same key and right_ts in
     [left_ts + lower, left_ts + upper]. Band-bucketed: each side
-    explodes into the O(1) buckets its window can touch, the join runs
-    on (key, bucket), then the exact predicate filters.
+    explodes into the O(1) buckets its window can touch (buckets are
+    one window wide, at least 1 s), the join runs on (key, bucket),
+    then the exact predicate filters.
 
     Right-side columns whose names collide with left ones (other than
     the key) come out suffixed ``_r`` — a self-range-join over the same
@@ -91,8 +91,7 @@ def range_join(
     if right_ts in overlap:
         right_ts = f"{right_ts}_r"
 
-    width = upper_seconds - lower_seconds
-    bucket_seconds = bucket_seconds or max(width, 1.0)
+    bucket_seconds = max(upper_seconds - lower_seconds, 1.0)
 
     l_epoch = _epoch(F.col(left_ts))
     r_epoch = _epoch(F.col(right_ts))

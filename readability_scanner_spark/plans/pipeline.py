@@ -92,9 +92,7 @@ def salted_repartition(df: DataFrame, num_partitions: int | None = None) -> Data
     return df.repartition(F.col("conv_id"), salt)
 
 
-def extract_and_score(
-    df: DataFrame, repartition_to: int | None = None, redact_pii: bool = False
-) -> DataFrame:
+def extract_and_score(df: DataFrame, repartition_to: int | None = None) -> DataFrame:
     """transcripts(conv_id, turn_idx, role, text, tool, ts) → scored docs.
 
     One wide row per turn: extraction fields, stats, 8 scores + grade,
@@ -102,10 +100,6 @@ def extract_and_score(
     ONE fused mapInPandas pass (a single Arrow round trip per partition;
     a chained two-UDF plan pays the Python transfer twice); formulas are
     JVM Column expressions on top.
-
-    ``redact_pii=True`` scrubs emails/phones/IPs from the extracted text
-    as a JVM regexp stage AFTER stats (counts reflect the original text;
-    the stored text is clean) — zero extra Python passes.
     """
     out = salted_repartition(df, repartition_to) if repartition_to != 0 else df
     out = out.mapInPandas(
@@ -124,10 +118,6 @@ def extract_and_score(
             ).otherwise(F.col("published_ts")),
         }
     ).withColumnRenamed("text_content", "cleaned_data").drop("published_ts")
-    if redact_pii:
-        from readability_scanner_spark.operators.textquality import redact_pii_col
-
-        out = out.withColumn("cleaned_data", redact_pii_col(F.col("cleaned_data")))
     return with_readability_scores(out)
 
 
@@ -157,31 +147,21 @@ def _meta_path(output_path: str) -> str:
     return os.path.join(output_path, "_meta")
 
 
-def committed_buckets(output_path: str) -> set[int]:
+def _meta_rows(output_path: str) -> list[dict]:
+    """The committed ``_meta/*.json`` rows, in file-name order."""
     meta = _meta_path(output_path)
     if not os.path.isdir(meta):
-        return set()
-    done = set()
-    for name in os.listdir(meta):
-        if name.endswith(".json"):
-            with open(os.path.join(meta, name)) as fh:
-                done.add(json.load(fh)["bucket"])
-    return done
-
-
-def committed_n_buckets(output_path: str):
-    """n_buckets recorded by a prior run's meta rows (None if fresh or
-    written before the field existed)."""
-    meta = _meta_path(output_path)
-    if not os.path.isdir(meta):
-        return None
+        return []
+    rows = []
     for name in sorted(os.listdir(meta)):
         if name.endswith(".json"):
             with open(os.path.join(meta, name)) as fh:
-                n = json.load(fh).get("n_buckets")
-            if n is not None:
-                return n
-    return None
+                rows.append(json.load(fh))
+    return rows
+
+
+def committed_buckets(output_path: str) -> set[int]:
+    return {row["bucket"] for row in _meta_rows(output_path)}
 
 
 def run_pipeline(
@@ -206,12 +186,15 @@ def run_pipeline(
     materialized table for large synthetic runs.
     """
     os.makedirs(_meta_path(output_path), exist_ok=True)
-    done = committed_buckets(output_path)
+    rows = _meta_rows(output_path)
+    done = {row["bucket"] for row in rows}
     # resume-safety: bucket membership is pmod(hash, n_buckets) — resuming
     # with a DIFFERENT n_buckets would silently duplicate and drop
     # conversations across bucket dirs. Every meta row records n_buckets;
     # a mismatch is an error, not a guess.
-    prior_n = committed_n_buckets(output_path)
+    prior_n = next(
+        (row["n_buckets"] for row in rows if row.get("n_buckets") is not None), None
+    )
     if prior_n is not None and prior_n != n_buckets:
         raise ValueError(
             f"resume with n_buckets={n_buckets} over a run committed with "

@@ -31,8 +31,6 @@ def build_daily_topics(
     threshold: float = 0.75,
     min_group_size: int = 3,
     max_per_window: int = 500,
-    anchor=None,
-    per_day: bool = False,
 ) -> DataFrame:
     """docs must carry id, embedding, ts + article payload columns.
 
@@ -40,32 +38,23 @@ def build_daily_topics(
     date_range_end, articles: array<struct<...article_cols>>) — the
     reference's daily_topics document shape (ml-service/main.py:471-488).
 
-    Reference semantics (default, per_day=False): ONE clustering pool of
-    the ``max_per_window`` newest articles across the whole lookback
-    window (daily_topics_jobs.py:63-70 + main.py:418) — articles from
-    different days can share a topic, and the cap is global. The cap is
-    applied BEFORE the single-group applyInPandas via orderBy+limit
-    (TakeOrderedAndProject), so only max_per_window rows ever land on one
-    task regardless of corpus size. per_day=True keeps the alternative
-    per-calendar-day partitioning (parallel across days, day-local
-    topics) as an explicit scale tradeoff, NOT reference parity.
+    Reference semantics: ONE clustering pool of the ``max_per_window``
+    newest articles across the whole lookback window, anchored at the
+    newest ``ts_col`` (daily_topics_jobs.py:63-70 + main.py:418) —
+    articles from different days can share a topic, and the cap is
+    global. The cap is applied BEFORE the single-group applyInPandas via
+    orderBy+limit (TakeOrderedAndProject), so only max_per_window rows
+    ever land on one task regardless of corpus size.
     """
-    if anchor is None:
-        anchor = docs.agg(F.max(ts_col)).first()[0]
-    windowed = docs.where(
-        F.col(ts_col) >= F.lit(anchor) - F.expr(f"INTERVAL {lookback_days} DAYS")
+    anchor = docs.agg(F.max(ts_col)).first()[0]
+    pool = (
+        docs.where(
+            F.col(ts_col) >= F.lit(anchor) - F.expr(f"INTERVAL {lookback_days} DAYS")
+        )
+        .orderBy(F.desc(ts_col), F.asc(id_col))
+        .limit(max_per_window)
+        .withColumn("_win", F.lit("all"))
     )
-
-    if per_day:
-        pool = windowed.withColumn(
-            "_win", F.date_format(F.date_trunc("day", F.col(ts_col)), "yyyy-MM-dd")
-        )
-    else:
-        pool = (
-            windowed.orderBy(F.desc(ts_col), F.asc(id_col))
-            .limit(max_per_window)
-            .withColumn("_win", F.lit("all"))
-        )
 
     members = greedy_topic_groups(
         pool.select(id_col, vec_col, ts_col, "_win").withColumn(

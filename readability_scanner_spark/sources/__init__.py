@@ -1,7 +1,5 @@
 from readability_scanner_spark.sources.transcripts import (  # noqa: F401
     TRANSCRIPTS_SCHEMA,
     generate_conversation,
-    load_tables,
     transcripts_df,
-    write_transcripts,
 )

@@ -130,21 +130,3 @@ def transcripts_df(
     if partitions:
         ids = ids.repartition(partitions)
     return ids.mapInPandas(expand, schema=TRANSCRIPTS_SCHEMA)
-
-
-def write_transcripts(
-    spark: SparkSession,
-    path: str,
-    n_conversations: int = 200,
-    seed: int = 42,
-    partitions: int | None = None,
-) -> None:
-    transcripts_df(spark, n_conversations, seed, partitions).write.mode("overwrite").parquet(path)
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load the driver-provided testdata parquet tables (TESTDATA.md)."""
-    names = (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split()
-    return {name: spark.read.parquet(f"{sf_dir}/{name}.parquet") for name in names}

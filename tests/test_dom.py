@@ -12,7 +12,7 @@ def test_entities_decoded():
     root = parse_html("<p>a&nbsp;&amp;&lt;&gt;&quot;&#65;</p>")
     # raw text keeps the nbsp; normalized inner_text collapses it (as the
     # reference's \s+ collapse does, analyzer.py:56)
-    assert root.find("p").inner_text(normalize=False) == 'a\xa0&<>"A'
+    assert root.find("p").raw_text() == 'a\xa0&<>"A'
     assert root.find("p").inner_text() == 'a &<>"A'
 
 

@@ -3,14 +3,15 @@ must be reachable from something that runs, or be a declared public API.
 
 Pure stdlib ``ast``. Roots are the files a job, query, script or
 benchmark starts from (``ROOT_FILES``) plus the module-level statements
-of every package module (imports, constants, registries). From there,
-names are followed through top-level def bodies: a def is reached when
-a reached body refers to its name as a variable, an attribute, an
-imported name, or an exact identifier string constant
-(``getattr``/registry lookups). Matching is by name alone, so a
-collision can only keep a def alive, never flag a live one. Mentions in
-comments and docstrings do not count, and neither do tests: a def that
-only tests call is a second path nothing runs.
+of every package module (constants, registries). From there, names are
+followed through top-level def bodies: a def is reached when a reached
+body refers to its name as a variable, an attribute, or an exact
+identifier string constant (``getattr``/registry lookups). Matching is
+by name alone, so a collision can only keep a def alive, never flag a
+live one. Import statements do not count — a def that only an
+``__init__.py`` re-exports is not reached — and neither do mentions in
+comments and docstrings, or tests: a def that only tests call is a
+second path nothing runs.
 
 A def that fails here is either deleted or declared in ``PUBLIC_API``
 with the SURVEY row (or other reason) that needs it. A declaration that
@@ -128,8 +129,6 @@ def _names_used(tree: ast.AST) -> set[str]:
             used.add(node.id)
         elif isinstance(node, ast.Attribute):
             used.add(node.attr)
-        elif isinstance(node, ast.alias):
-            used.add(node.name.rsplit(".", 1)[-1])
         elif isinstance(node, ast.Constant) and isinstance(node.value, str):
             if node.value.isidentifier():
                 used.add(node.value)
@@ -195,3 +194,8 @@ def test_every_package_def_is_reachable_or_declared():
     assert stale == [], (
         "PUBLIC_API entries that are gone or reachable anyway:\n" + "\n".join(stale)
     )
+
+
+def test_import_statements_are_not_uses():
+    # a re-export in an __init__.py must not keep a def alive
+    assert _names_used(ast.parse("from m import f\nimport g.h as k\n")) == set()

@@ -536,7 +536,7 @@ def test_decode_stub_raises():
 
 # --- search (P9) --------------------------------------------------------------------
 
-def test_text_search_relevance_and_and_mode(spark):
+def test_text_search_relevance_or_semantics(spark):
     from readability_scanner_spark.operators import search
     rows = [
         (1, "spark spark spark shuffle"),
@@ -547,8 +547,9 @@ def test_text_search_relevance_and_and_mode(spark):
     df = spark.createDataFrame(rows, "id long, text string")
     got = [(r.id, r.relevance) for r in search.text_search(df, "text", "spark shuffle", "id").collect()]
     assert got == [(1, 4), (4, 3), (2, 2)]  # case-insensitive, OR semantics
-    got_and = [r.id for r in search.text_search(df, "text", "spark partition", "id", require_all=True).collect()]
-    assert got_and == [2]
+    # a row matching only one term still ranks: $text ORs the terms
+    got_or = [(r.id, r.relevance) for r in search.text_search(df, "text", "spark partition", "id").collect()]
+    assert got_or == [(1, 3), (2, 2), (4, 2)]
 
 
 def test_diagnose_rules():

@@ -143,16 +143,14 @@ def test_normalize_date_variants():
 
 def test_image_precedence():
     root = parse_html(_fx("images"))
-    url = extract_primary_image(root, base_url="https://news.example.com/a")
+    url = extract_primary_image(root)
     assert url == "https://cdn.example.com/lead.jpg"
 
 
-def test_relative_image_resolved():
+def test_relative_image_rejected():
+    # a transcript turn has no page URL to resolve a relative src against
     root = parse_html('<html><body><img src="/pic.png"/></body></html>')
-    assert (
-        extract_primary_image(root, base_url="https://h.com/x")
-        == "https://h.com/pic.png"
-    )
+    assert extract_primary_image(root) is None
 
 
 def test_reddit_link_extraction():
