@@ -50,17 +50,23 @@ def _md5_of_files(base: str, rels: Iterable[str]) -> str:
     return h.hexdigest()
 
 
-def _package_zip(repo: str) -> str:
-    """Zip of the ``.py`` files of the package under ``repo``, named by
-    their md5 in ``_ZIP_DIR``: an existing zip is reused only when its
-    name matches, so a zip built from another checkout (or an older
-    tree) never stands in for this one."""
-    rels = sorted(
+def _package_files(repo: str) -> list[str]:
+    """The package's ``.py`` files under ``repo``, repo-relative and
+    sorted."""
+    return sorted(
         os.path.relpath(os.path.join(root, f), repo)
         for root, _dirs, files in os.walk(os.path.join(repo, "readability_scanner_spark"))
         for f in files
         if f.endswith(".py")
     )
+
+
+def _package_zip(repo: str) -> str:
+    """Zip of the ``.py`` files of the package under ``repo``, named by
+    their md5 in ``_ZIP_DIR``: an existing zip is reused only when its
+    name matches, so a zip built from another checkout (or an older
+    tree) never stands in for this one."""
+    rels = _package_files(repo)
     zip_path = os.path.join(
         _ZIP_DIR, f"readability_scanner_spark_pkg_{_md5_of_files(repo, rels)[:16]}.zip"
     )
@@ -260,13 +266,13 @@ def q_success_ratio(spark, sf_dir):
 
 
 def q_broadcast_lookup_join(spark, sf_dir):
-    from readability_scanner_spark.operators.analytics import lookup_join
+    from readability_scanner_spark.operators.analytics import merge_precedence_join
 
     orders = _t(spark, sf_dir, "orders").where(F.col("o_totalprice") > 400000)
-    cust = _t(spark, sf_dir, "customer")
-    return lookup_join(
-        orders, cust, "o_custkey", "c_custkey", ["c_name", "c_mktsegment"]
-    ).select("o_orderkey", "o_totalprice", "c_name", "c_mktsegment")
+    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_mktsegment")
+    return merge_precedence_join(orders, cust, "o_custkey", "c_custkey").select(
+        "o_orderkey", "o_totalprice", "c_name", "c_mktsegment"
+    )
 
 
 def q_orders_semi_join(spark, sf_dir):
@@ -832,30 +838,33 @@ def q_daily_topics(spark, sf_dir):
     """§3.3 daily-topics pipeline over the embeddings table (synthetic
     monotone ts per vec_id); nested article structs per topic.
 
-    max_per_window is lifted to cover the whole table: the oracle's
-    recursive CTE clusters EVERY embedding in the window (no 500-cap),
-    so the declared query must too.  The operator default keeps the
-    reference's newest-500 cap for production callers; at the driver's
-    correctness SFs (≤500 embeddings) the lifted cap is bitwise a
-    no-op, and this query is not in bench.py's timed set.  The cap must
-    be the REAL row count, not a huge sentinel: orderBy().limit(k)
-    compiles to TakeOrderedAndProject whose per-partition priority
-    queue eagerly allocates O(k) — a 1e9 sentinel OOMs the JVM."""
+    Both pool caps are lifted to cover the whole table: the oracle's
+    recursive CTE clusters EVERY embedding (no 500-cap, no 7-day
+    lookback), so the declared query must too.  The operator defaults
+    keep the reference's newest-500 / 7-day pool for production callers.
+    One driver aggregate gives the row count and the ts span: the
+    lookback covers the span (sf1.0's minute ts run ~13.9 days), and
+    max_per_window is the REAL row count, not a huge sentinel:
+    orderBy().limit(k) compiles to TakeOrderedAndProject whose
+    per-partition priority queue eagerly allocates O(k) — a 1e9
+    sentinel OOMs the JVM."""
     from readability_scanner_spark.plans.topics import build_daily_topics
 
     emb = _t(spark, sf_dir, "embeddings").withColumn(
         "ts",
         F.to_timestamp(F.lit("2025-06-01 00:00:00")) + F.make_interval(mins=F.col("vec_id")),
     )
+    n, first_ts, last_ts = emb.agg(F.count("*"), F.min("ts"), F.max("ts")).first()
     topics = build_daily_topics(
         emb,
         "vec_id",
         "embedding",
         "ts",
         ["label"],
+        lookback_days=(last_ts - first_ts).days + 1 if n else 1,
         threshold=0.4,
         min_group_size=2,
-        max_per_window=max(emb.count(), 1),
+        max_per_window=max(n, 1),
     )
     return topics.select("topic_id", "article_count")
 
@@ -929,30 +938,18 @@ def _scored_documents(spark, sf_dir: str) -> DataFrame:
 def _sidecar_version() -> str:
     """Content-derived sidecar version: the sidecar lives in /tmp across
     driver rounds and its mtime gate only tracks the SOURCE parquet, so
-    a sidecar built by OLDER extraction code would fail the live-vs-
-    sidecar per-doc comparison (flagship_extract/full_report) bit-
-    exactly-but-wrongly. Hashing every extraction-semantics source file
-    closes that class permanently — any code change that could alter
-    per-doc output changes the version, and a sidecar whose stamp
-    differs is rebuilt (r4 review: a hand-bumped constant was forgotten
-    twice in one round). The version lives in a stamp file, never in
-    the sidecar's path: the oracle SQL names that path, and its text
-    must not move when extraction code changes."""
-    pkg = os.path.join(os.path.dirname(os.path.abspath(__file__)), "readability_scanner_spark")
-    files = (
-        "functions/udfs.py",
-        "functions/textstats.py",
-        "functions/syllables.py",
-        "functions/formulas.py",
-        "extraction/readability.py",
-        "extraction/cleaning.py",
-        "extraction/dates.py",
-        "extraction/images.py",
-        "extraction/pdf.py",
-        "dom.py",
-        "plans/pipeline.py",
-    )
-    return "v" + _md5_of_files(pkg, files)[:10]
+    a sidecar built by OLDER code would fail the live-vs-sidecar per-doc
+    comparison (flagship_extract/full_report) bit-exactly-but-wrongly.
+    The stamp hashes the same package file listing the worker zip is
+    keyed by, plus this file (``_scored_documents`` shapes the sidecar's
+    rows), so no code change that could alter a per-doc value goes
+    unseen and there is no hand-kept file list to forget. A sidecar
+    whose stamp differs is rebuilt. The version lives in a stamp file,
+    never in the sidecar's path: the oracle SQL names that path, and its
+    text must not move when code changes."""
+    repo = os.path.dirname(os.path.abspath(__file__))
+    rels = _package_files(repo) + [os.path.basename(__file__)]
+    return "v" + _md5_of_files(repo, rels)[:10]
 
 
 def _sidecar_path(sf_dir: str) -> str:
@@ -1307,10 +1304,7 @@ def q_phrase_search(spark, sf_dir):
     )
 
     idx = build_positional_index(
-        _t(spark, sf_dir, "documents", spread=True),
-        "doc_id",
-        "text",
-        extract_then_lower=True,
+        _t(spark, sf_dir, "documents", spread=True), "doc_id", "text"
     )
     return phrase_search(idx, "data table", limit=20)
 
@@ -1328,10 +1322,7 @@ def q_near_search(spark, sf_dir):
     )
 
     idx = build_positional_index(
-        _t(spark, sf_dir, "documents", spread=True),
-        "doc_id",
-        "text",
-        extract_then_lower=True,
+        _t(spark, sf_dir, "documents", spread=True), "doc_id", "text"
     )
     return near_search(idx, "data table", max_distance=3, limit=20)
 

@@ -8,7 +8,7 @@ work, pure Column expressions for every formula, and explicit
 partitioning/skew handling for 100 TB-scale runs.
 
 Layout:
-    dom.py                  minimal DOM built on stdlib html.parser
+    dom.py                  minimal DOM, one-pass regex tokenizer
     extraction/             Readability algorithm, cleaning, dates, images
     functions/              text stats, syllable estimator, formulas, UDFs
     sources/                synthetic transcripts generator, table loaders

@@ -19,7 +19,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import time
 import uuid
 from typing import Optional
 
@@ -179,13 +178,12 @@ def _swap_in(df: DataFrame, path: str) -> None:
     the first rename leaves the old table intact; a crash between the two
     renames is healed by recover_swap (runs first on the next write).
 
-    Concurrency contract: SINGLE writer, and readers must go through
-    read_table — between rename(path→backup) and rename(staging→path)
-    the table path briefly does not exist, so a raw spark.read.parquet
-    racing the swap can see path-not-found instead of the old snapshot.
-    read_table heals/falls back through the backup; true multi-writer/
-    multi-reader needs the Iceberg path (that asymmetry is the point of
-    the capability gate)."""
+    Concurrency contract: ONE writer and no concurrent parquet reader —
+    between rename(path→backup) and rename(staging→path) the table path
+    briefly does not exist, so a read racing the swap can see
+    path-not-found instead of the old snapshot. Concurrent readers and
+    writers need the Iceberg path (snapshot isolation; that asymmetry is
+    the point of the capability gate)."""
     recover_swap(path)
     staging = path + ".__staging__"
     backup = path + ".__old__"
@@ -197,45 +195,6 @@ def _swap_in(df: DataFrame, path: str) -> None:
     os.rename(staging, path)
     if os.path.exists(backup):
         shutil.rmtree(backup)
-
-
-def read_table(spark: SparkSession, target: str, attempts: int = 5) -> DataFrame:
-    """Read a sink written by this module. Parquet targets: when the
-    table dir is missing but a swap backup exists — either a writer is
-    inside the swap window right now, or one died there — serve the
-    backup (the old snapshot) instead of path-not-found, retrying across
-    {target, backup} because a concurrent writer can finish the swap
-    between our existence probe and Spark's file listing. Readers only
-    FALL BACK, they never heal: calling recover_swap here would rename
-    the backup out from under a live writer and break its final
-    staging→path rename. Healing stays a writer-side action (recover_swap
-    runs at the start of every write).
-
-    Residual caveat (by design of the parquet fallback): the returned
-    DataFrame is lazy — if a LATER swap completes before an action runs,
-    that action can still lose files to the writer's backup cleanup.
-    Plan actions promptly after read_table; true concurrent
-    readers/writers are what the Iceberg path (snapshot isolation) is
-    for — that asymmetry is the point of the capability gate."""
-    if not _is_path(target):
-        return spark.table(target)
-    backup = target + ".__old__"
-    last_err: Exception | None = None
-    for _ in range(attempts):
-        for path in (target, backup):
-            if not os.path.exists(path):
-                continue
-            try:
-                df = spark.read.parquet(path)
-                df.schema  # force the file listing NOW, inside the retry
-                return df
-            except Exception as exc:  # swap raced us; try the other side
-                last_err = exc
-        time.sleep(0.05)
-    raise FileNotFoundError(
-        f"table {target!r} not readable (no table dir or swap backup after "
-        f"{attempts} attempts)"
-    ) from last_err
 
 
 def _parquet_upsert(

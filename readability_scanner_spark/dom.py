@@ -1,10 +1,12 @@
-"""Minimal DOM built on the stdlib ``html.parser``.
+"""Minimal DOM with a one-pass regex tokenizer.
 
 The container has no lxml/selectolax/bs4, so the extraction engine
-(extraction/readability.py) runs against this lightweight tree. Design
-goals, in order: determinism, source-offset tracking (for span output),
-tolerable tag-soup recovery, speed (one parse per document inside an
-Arrow batch loop — see functions/udfs.py).
+(extraction/readability.py) runs against this lightweight tree. The
+stdlib ``html.parser`` builder below is kept only as the reference tree
+the tokenizer is tested against. Design goals, in order: determinism,
+source-offset tracking (for span output), tolerable tag-soup recovery,
+speed (one parse per document inside an Arrow batch loop — see
+functions/udfs.py).
 
 Reference behavior being re-expressed (cited for parity, not copied):
 the reference delegates DOM work to BeautifulSoup
@@ -188,16 +190,12 @@ class Node:
                 push(node.children)  # order-insensitive: existence only
         return False
 
-    def text_spans(self) -> list[tuple[int, int]]:
-        """Source-offset spans of all non-blank text nodes under self,
-        merged when adjacent/overlapping. Offsets index the original
-        HTML string handed to :func:`parse_html`."""
-        return self.text_and_spans()[1]
-
     def text_and_spans(self) -> tuple[str, list[tuple[int, int]]]:
-        """(inner_text(), text_spans()) from ONE subtree walk — the
-        extraction entry point needs both for every successful attempt,
-        and the two separate calls each re-traverse the article."""
+        """(inner_text(), spans) from ONE subtree walk — the extraction
+        entry point needs both for every successful attempt. ``spans``
+        are the source-offset spans of all non-blank text nodes under
+        self, merged when adjacent/overlapping; offsets index the
+        original HTML string handed to :func:`parse_html`."""
         parts: list[str] = []
         spans: list[tuple[int, int]] = []
         stack = [self]
@@ -367,13 +365,13 @@ class _TreeBuilder(HTMLParser):
 
 
 # ---------------------------------------------------------------------------
-# fast regex tokenizer (the default parser)
+# regex tokenizer: the parser
 # ---------------------------------------------------------------------------
 # One scan over the document with a single compiled regex; exact source
 # offsets come free from match positions. ~2-3x faster than stdlib
 # html.parser, which the extraction profile showed as the largest single
-# cost. Produces the same Node tree; stdlib html.parser remains the
-# fallback for inputs the tokenizer rejects.
+# cost. Produces the same Node tree as _TreeBuilder, which stays only as
+# the reference the parity tests compare against.
 
 _TOKEN_RE = re.compile(
     r"<!--.*?(?:-->|$)"  # comments (unterminated swallowed to EOF)
@@ -412,9 +410,13 @@ def _parse_attrs(attr_str: str) -> dict:
     return attrs
 
 
-def fast_parse(raw: str) -> Node:
-    """Single-regex-scan HTML parser building the same tree (and the
-    same recovery rules) as the html.parser-based builder."""
+def parse_html(raw: str) -> Node:
+    """Parse an HTML string into a Node tree rooted at ``#root``.
+
+    One regex scan; builds the same tree (and applies the same tag-soup
+    recovery rules) as the html.parser-based reference builder. Every
+    input tokenizes — unmatched ``<`` is text, unterminated comments run
+    to EOF — so it does not raise on malformed HTML."""
     root = Node("#root")
     stack = [root]
     pos, length = 0, len(raw)
@@ -481,31 +483,9 @@ def fast_parse(raw: str) -> Node:
     return root
 
 
-def parse_html(raw: str) -> Node:
-    """Parse an HTML string into a Node tree rooted at ``#root``.
-
-    Never raises on malformed input: the fast tokenizer handles the
-    overwhelming majority; stdlib html.parser is the fallback, and a
-    regex tag-strip is the fallback of last resort.
-    """
-    try:
-        return fast_parse(raw)
-    except Exception:
-        pass
-    builder = _TreeBuilder(raw)
-    try:
-        builder.feed(raw)
-        builder.close()
-    except Exception:
-        # pathological input: fall back to a root holding the raw text
-        root = Node("#root")
-        root.append(Node(text=re.sub(r"<[^>]+>", " ", raw), src_start=0, src_end=len(raw)))
-        return root
-    return builder.root
-
-
 def parse_html_stdlib(raw: str) -> Node:
-    """The html.parser-based builder, exposed for parity testing."""
+    """The html.parser-based reference tree parse_html must match,
+    exposed for parity testing."""
     builder = _TreeBuilder(raw)
     builder.feed(raw)
     builder.close()

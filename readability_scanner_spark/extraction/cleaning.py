@@ -7,7 +7,9 @@ Mirrors the reference's cleaning semantics exactly
   3. collapse all whitespace runs to single spaces
   4. unescape the 5 legacy entities the reference replaces post-hoc
   5. strip
-On parse error, fall back to regex tag-stripping (analyzer.py:71-74).
+The reference falls back to regex tag-stripping on a parse error
+(analyzer.py:71-74); dom.parse_html does not raise, so there is no
+second path here.
 
 Also implements the preview/truncate operator
 (news-scanner/api/routes/article_search_routes.py:247-270).
@@ -15,26 +17,17 @@ Also implements the preview/truncate operator
 
 from __future__ import annotations
 
-import re
-
 from readability_scanner_spark.dom import parse_html
-
-_WS_RE = re.compile(r"\s+")
-_TAG_RE = re.compile(r"<[^>]+>")
 
 
 def clean_html_content(html_content: str) -> str:
     """Plain text from HTML, whitespace-normalized (analyzer.py:34-74)."""
     if html_content is None:
         return ""
-    try:
-        root = parse_html(html_content)
-        for node in list(root.iter_elements("script", "style")):
-            node.remove()
-        text = root.raw_text()
-    except Exception:
-        text = _TAG_RE.sub(" ", html_content)
-    text = " ".join(text.split())
+    root = parse_html(html_content)
+    for node in list(root.iter_elements("script", "style")):
+        node.remove()
+    text = " ".join(root.raw_text().split())
     # the reference additionally replaces these literal entity strings if
     # they survived parsing (analyzer.py:59-63)
     text = (

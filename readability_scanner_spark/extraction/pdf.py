@@ -69,6 +69,14 @@ TJ_SPACE_KERN = -180.0
 # Runs whose baseline y differs by no more than this (text-space units,
 # i.e. points for an unscaled Tm) belong to one line.
 LINE_Y_TOLERANCE = 2.0
+# Decoded bytes one document may produce, summed over every stream it
+# decodes (page contents, /ObjStm) and every stage of a filter chain.
+# A 65 KB Flate stream can inflate to 64 MiB (and a chain to far more);
+# unbounded, one such turn held a Python worker for a minute and over
+# 100 MiB. A stream whose decode would cross the budget decodes to b""
+# and spends the rest of it, so the turn ends parse_failed, never fatal.
+PDF_DECODE_MAX_BYTES = 16 * 1024 * 1024
+_INFLATE_CHUNK = 1024 * 1024
 
 
 class PdfParseError(ValueError):
@@ -346,6 +354,7 @@ class _Document:
         self.data = data
         self.objects: dict[int, _PdfObject] = {}
         self._decoded: dict[int, bytes] = {}
+        self._budget = PDF_DECODE_MAX_BYTES
         self._scan()
 
     def _scan(self) -> None:
@@ -462,7 +471,9 @@ class _Document:
         obj = self.objects.get(num)
         out = b""
         if obj is not None and obj.stream is not None:
-            out = _apply_filters(obj.stream, self.resolve_filters(obj))
+            out, self._budget = _apply_filters(
+                obj.stream, self.resolve_filters(obj), self._budget
+            )
         self._decoded[num] = out
         return out
 
@@ -562,17 +573,20 @@ class _Document:
         return b"\n".join(self.decoded_stream(r.num) for r in refs)
 
 
-def _apply_filters(raw: bytes, filters: list[str]) -> bytes:
+def _apply_filters(raw: bytes, filters: list[str], budget: int) -> tuple[bytes, int]:
+    """``raw`` decoded through ``filters`` in order, and what is left of
+    ``budget`` (the decoded bytes the document may still produce). A
+    stage that would cross the budget stops at it: the stream decodes
+    to b"" and the budget is spent."""
     data = raw
     for f in filters or []:
         if f in ("FlateDecode", "Fl"):
             try:
-                data = zlib.decompress(data)
+                data = _inflate(data, budget)
             except zlib.error:
-                try:  # tolerate trailing garbage / missing checksum
-                    data = zlib.decompressobj().decompress(data)
-                except zlib.error:
-                    return b""
+                return b"", budget
+            if data is None:
+                return b"", 0
         elif f in ("ASCIIHexDecode", "AHx"):
             hex_bytes = re.sub(rb"[^0-9A-Fa-f]", b"", data.split(b">")[0])
             if len(hex_bytes) % 2:
@@ -580,24 +594,49 @@ def _apply_filters(raw: bytes, filters: list[str]) -> bytes:
             try:
                 data = bytes.fromhex(hex_bytes.decode("ascii"))
             except ValueError:
-                return b""
+                return b"", budget
         elif f in ("ASCII85Decode", "A85"):
-            data = _ascii85_decode(data)
+            data = _ascii85_decode(data, budget)
             if data is None:
-                return b""
+                return b"", budget
         elif f in ("RunLengthDecode", "RL"):
-            data = _runlength_decode(data)
+            data = _runlength_decode(data, budget)
             if data is None:
-                return b""
+                return b"", budget
         else:
-            return b""  # image/JBIG2/DCT etc — no text to be had
-    return data
+            return b"", budget  # image/JBIG2/DCT etc — no text to be had
+        if len(data) > budget:
+            return b"", 0
+        budget -= len(data)
+    return data, budget
 
 
-def _ascii85_decode(data: bytes):
+def _inflate(data: bytes, limit: int) -> Optional[bytes]:
+    """zlib-inflate ``data`` one chunk at a time, tolerating trailing
+    garbage and a missing checksum. None as soon as the output is longer
+    than ``limit``, holding at most ``limit`` plus one chunk; zlib.error
+    on corrupt data."""
+    d = zlib.decompressobj()
+    parts: list[bytes] = []
+    total = 0
+    while True:
+        chunk = d.decompress(data, _INFLATE_CHUNK)
+        total += len(chunk)
+        if total > limit:
+            return None
+        parts.append(chunk)
+        data = d.unconsumed_tail
+        # a full chunk with no input left may still have output pending;
+        # an empty chunk means no progress is possible
+        if d.eof or not chunk or not (data or len(chunk) == _INFLATE_CHUNK):
+            return b"".join(parts)
+
+
+def _ascii85_decode(data: bytes, limit: int):
     """ISO 32000-1 §7.4.3 ASCII85: base-85 groups of 5 chars ('z' =
     four zero bytes), whitespace ignored, '~>' EOD, partial final group
-    padded with 'u' and truncated. None on malformed input."""
+    padded with 'u' and truncated. None on malformed input; stops once
+    the output is longer than ``limit``."""
     if data.lstrip(b" \t\r\n\x0c\x00").startswith(b"<~"):
         # Adobe-style leader (rare, tolerated)
         data = data.lstrip(b" \t\r\n\x0c\x00")[2:]
@@ -614,6 +653,8 @@ def _ascii85_decode(data: bytes):
             if group:
                 return None  # z inside a group is illegal
             out += b"\x00\x00\x00\x00"
+            if len(out) > limit:
+                break
             continue
         if not 0x21 <= c <= 0x75:
             return None
@@ -626,6 +667,8 @@ def _ascii85_decode(data: bytes):
                 return None
             out += acc.to_bytes(4, "big")
             group = []
+            if len(out) > limit:
+                break
     if group:
         n = len(group)
         if n == 1:
@@ -639,13 +682,13 @@ def _ascii85_decode(data: bytes):
     return bytes(out)
 
 
-def _runlength_decode(data: bytes):
+def _runlength_decode(data: bytes, limit: int):
     """ISO 32000-1 §7.4.5 RunLength: L<128 copies L+1 literal bytes,
     L>128 repeats the next byte 257-L times, 128 = EOD. None on
-    truncation."""
+    truncation; stops once the output is longer than ``limit``."""
     out = bytearray()
     i, n = 0, len(data)
-    while i < n:
+    while i < n and len(out) <= limit:
         length = data[i]
         i += 1
         if length == 128:

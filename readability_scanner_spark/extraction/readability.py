@@ -61,7 +61,6 @@ ALL_FLAGS = FLAG_STRIP_UNLIKELYS | FLAG_WEIGHT_CLASSES | FLAG_CLEAN_CONDITIONALL
 MIN_CONTENT_LENGTH = 500  # chars of text below which we retry with fewer flags
 SCORE_TAGS = frozenset(("p", "td", "pre"))
 EMBED_TAGS = frozenset(("object", "embed", "iframe", "applet"))
-_WS_RE = re.compile(r"\s+")
 
 
 @dataclass
@@ -576,7 +575,7 @@ def extract_main_content(raw_html: str) -> ExtractionResult:
     if raw_html is None or not raw_html.strip():
         return ExtractionResult("", "", "", [], parse_failed=True)
 
-    # == len(_WS_RE.sub(" ", _TAG_STRIP.sub(" ", raw)).strip()): str.split
+    # == len(re.sub(r"\s+", " ", _TAG_STRIP.sub(" ", raw)).strip()): str.split
     # splits on exactly the re-\s codepoint set (pinned in
     # test_textstats.py), and join/split skips building the normalized
     # intermediate — one full-document pass instead of two
@@ -616,7 +615,6 @@ def extract_main_content(raw_html: str) -> ExtractionResult:
         if article is None:
             continue
         _prep_article(article, flags)
-        # one walk for both (text_spans alone would re-traverse)
         text, spans = article.text_and_spans()
         result = ExtractionResult(
             content=article.serialize(),

@@ -22,7 +22,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
-from readability_scanner_spark.functions.syllables import estimate_syllables
+from readability_scanner_spark.functions.syllables import _CACHE, estimate_syllables
 
 _WS_RUN = re.compile(r"\s+")
 _SENTENCE_SPLIT = re.compile(r"[.!?]+(?:\s+|$)")
@@ -32,7 +32,6 @@ _PARAGRAPH_SPLIT = re.compile(r"\n\s*\n|\r\n\s*\r\n")
 # are redundant around a greedy \w+ in Python — identical match set —
 # and dropping them keeps this the literal twin of the JVM/DuckDB form.
 _WORD = re.compile(r"\w+")
-_ANY_WS = re.compile(r"\s")
 
 
 @dataclass
@@ -67,7 +66,7 @@ def count_words(text: str) -> int:
 
 
 def count_characters(text: str) -> int:
-    # == len(_ANY_WS.sub("", text)) but ~4x faster: str.split() splits on
+    # == len(re.sub(r"\s", "", text)) but ~4x faster: str.split() splits on
     # exactly the codepoints re \s matches (verified over ALL of Unicode
     # by test_textstats.py::test_count_characters_fast_path_exact), and
     # summing token lengths skips building the stripped string
@@ -78,8 +77,6 @@ def count_syllables_per_word(text: str) -> list[int]:
     # inline the memo fast path: one dict get per word instead of a
     # function call (hot loop — every word of every document goes
     # through here; Zipf vocabulary makes the hit rate ~99%)
-    from readability_scanner_spark.functions.syllables import _CACHE, estimate_syllables
-
     lows = list(map(str.lower, _WORD.findall(text)))
     out = list(map(_CACHE.get, lows))  # C-speed lookups; misses are None
     for i, n in enumerate(out):

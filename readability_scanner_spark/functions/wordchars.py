@@ -44,9 +44,6 @@ WORD_CHARS = r"\p{L}\p{N}_"
 # inside a DuckDB single-quoted string (backslashes stay literal there).
 WORD_RUN = rf"[{WORD_CHARS}]+"
 
-# CPython twin of WORD_RUN (see module docstring for the sweep).
-PY_WORD_RUN = re.compile(r"\w+")
-
 
 # --- whitespace, same story -------------------------------------------------
 # Python re \s == str.isspace() over ALL codepoints (swept; 29 chars),
@@ -61,12 +58,6 @@ WS_CHARS = (
 )
 WS_CLASS = rf"[{WS_CHARS}]"
 WS_RUN = rf"{WS_CLASS}+"
-
-# the same 29 codepoints as a Python frozenset (for non-regex twins)
-PY_WS_SET = frozenset(
-    [*range(0x9, 0xE), *range(0x1C, 0x21), 0x85, 0xA0, 0x1680,
-     *range(0x2000, 0x200B), 0x2028, 0x2029, 0x202F, 0x205F, 0x3000]
-)
 
 
 # --- dedup tokenizer: ASCII word runs + CJK char unigrams -------------------

@@ -179,25 +179,16 @@ def derived_ratios(df: DataFrame, success_pred: F.Column) -> DataFrame:
     )
 
 
-# --- JN1: broadcast lookup join -----------------------------------------------------
-
-def lookup_join(facts: DataFrame, dim: DataFrame, fact_key: str, dim_key: str, dim_cols: list[str]) -> DataFrame:
-    """JN1 $lookup + $mergeObjects flatten (articles.py:339-361): left
-    outer equi-join with an explicitly broadcast small side — the Spark
-    analog of Mongo's index nested-loop over the tiny `urls` collection."""
-    return facts.join(
-        F.broadcast(dim.select(F.col(dim_key).alias("_dk"), *dim_cols)),
-        facts[fact_key] == F.col("_dk"),
-        "left",
-    ).drop("_dk")
-
+# --- JN1: broadcast lookup join with $mergeObjects precedence -------------------------
 
 def merge_precedence_join(
     facts: DataFrame, dim: DataFrame, fact_key: str, dim_key: str
 ) -> DataFrame:
-    """JN1's exact $mergeObjects/$replaceRoot semantics
-    (articles.py:348-360: `{$mergeObjects: [{$arrayElemAt:
-    ['$source_info', 0]}, '$$ROOT']}` — the DOCUMENT's fields win; the
+    """JN1 $lookup + $mergeObjects flatten (articles.py:339-361): a left
+    outer equi-join with an explicitly broadcast small side — the Spark
+    analog of Mongo's index nested-loop over the tiny `urls` collection —
+    with $replaceRoot precedence (`{$mergeObjects: [{$arrayElemAt:
+    ['$source_info', 0]}, '$$ROOT']}`: the DOCUMENT's fields win; the
     dim side only fills fields the document lacks/has null). Shared
     column names are coalesced fact-first; dim-only columns pass
     through."""

@@ -180,11 +180,6 @@ def _sample_stats(
     return feats
 
 
-def png_pixel_stats(payload: bytes) -> list[float]:
-    """REAL per-channel pixel statistics from :func:`decode_png`."""
-    return _sample_stats(*decode_png(payload))
-
-
 def image_pixel_stats(payload: bytes) -> list[float]:
     """REAL per-channel pixel statistics for any decodable image format
     (PNG via :func:`decode_png`, baseline JPEG via operators/jpeg.py,

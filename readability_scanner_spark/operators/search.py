@@ -262,17 +262,15 @@ def search_token_index(index: DataFrame, query: str, limit: int = 20) -> DataFra
     )
 
 
-def build_positional_index(
-    df: DataFrame, id_col: str, text_col: str, extract_then_lower: bool = False
-) -> DataFrame:
+def build_positional_index(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Positional inverted index: ``(token, doc_id, positions)`` with
     the 0-based token offsets sorted ascending (collect_list order is
     partition-dependent; sort_array pins it) — what phrase and
     proximity queries need beyond :func:`build_token_index`'s tf.
-    Same tokenizer definitions, same explode+aggregate build shape,
-    same bucketBy(token) layout advice. ``extract_then_lower`` as in
-    build_token_index."""
-    tok_arr = _token_array(text_col, extract_then_lower)
+    Same tokenizer, in its extract-then-lower fold (see
+    build_token_index), same explode+aggregate build shape, same
+    bucketBy(token) layout advice."""
+    tok_arr = _token_array(text_col, extract_then_lower=True)
     toks = df.select(
         F.col(id_col).alias("doc_id"), F.posexplode(tok_arr).alias("pos", "token")
     )

@@ -43,6 +43,18 @@ def cosine_col(a: Column, b: Column) -> Column:
     return F.when(denom != 0.0, dot_col(ad, bd) / denom).otherwise(F.lit(0.0))
 
 
+def _cosine_pairs(candidates: DataFrame, threshold: float) -> DataFrame:
+    """The tail every pair finder shares: cosine of each candidate
+    ``(id_a, va, id_b, vb)`` row, the pairs at >= ``threshold`` as
+    ``(id_a, id_b)``, ordered."""
+    return (
+        candidates.select("id_a", "id_b", cosine_col(F.col("va"), F.col("vb")).alias("sim"))
+        .where(F.col("sim") >= threshold)
+        .select("id_a", "id_b")
+        .orderBy("id_a", "id_b")
+    )
+
+
 def similarity_pairs(
     vectors: DataFrame,
     id_col: str,
@@ -73,13 +85,9 @@ def similarity_pairs(
             )
     a = vectors.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
     b = vectors.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .where(F.size("va") == F.size("vb"))
-        .select("id_a", "id_b", cosine_col(F.col("va"), F.col("vb")).alias("sim"))
-        .where(F.col("sim") >= threshold)
-        .select("id_a", "id_b")
-        .orderBy("id_a", "id_b")
+    return _cosine_pairs(
+        a.join(b, F.col("id_a") < F.col("id_b")).where(F.size("va") == F.size("vb")),
+        threshold,
     )
 
 
@@ -107,6 +115,20 @@ def _hyperplanes(dim: int, n_planes: int, seed: int) -> np.ndarray:
     return rng.randn(n_planes, dim)
 
 
+def _valid_matrix(pdf: pd.DataFrame, vec_col: str, dim: int):
+    """``(rows, matrix)``: the rows of an Arrow batch whose vector is
+    non-null with ``dim`` entries, and those vectors stacked one per
+    row (``matrix`` is None when no row is valid). Null and wrong-
+    dimension vectors are dropped instead of crashing the worker on a
+    ragged vstack — the V5 size guard of the brute-force path (excluded
+    rows form no pairs and get no cell)."""
+    ok = pdf[vec_col].map(lambda v: v is not None and len(v) == dim)
+    pdf = pdf[ok.to_numpy()] if not ok.all() else pdf
+    if pdf.empty:
+        return pdf, None
+    return pdf, np.vstack(pdf[vec_col].to_numpy())
+
+
 def lsh_signature_df(
     vectors: DataFrame, id_col: str, vec_col: str, dim: int, n_planes: int = 8, seed: int = 42
 ) -> DataFrame:
@@ -117,14 +139,9 @@ def lsh_signature_df(
 
     def sign_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            # drop null / wrong-dimension vectors instead of crashing the
-            # worker on a ragged vstack — mirrors the V5 size guard of the
-            # brute-force path (excluded rows simply form no pairs)
-            ok = pdf[vec_col].map(lambda v: v is not None and len(v) == dim)
-            pdf = pdf[ok.to_numpy()] if not ok.all() else pdf
-            if pdf.empty:
+            pdf, mat = _valid_matrix(pdf, vec_col, dim)
+            if mat is None:
                 continue
-            mat = np.vstack(pdf[vec_col].to_numpy())
             bits = (mat @ planes.T) >= 0  # (n, planes)
             bucket = bits.dot(1 << np.arange(n_planes)).astype("int64")
             yield pd.DataFrame({id_col: pdf[id_col], "bucket": bucket})
@@ -151,13 +168,8 @@ def lsh_bucketed_pairs(
     tagged = vectors.join(sigs, id_col)
     a = tagged.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), "bucket")
     b = tagged.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"), "bucket")
-    return (
-        a.join(b, ["bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", cosine_col(F.col("va"), F.col("vb")).alias("sim"))
-        .where(F.col("sim") >= threshold)
-        .select("id_a", "id_b")
-        .orderBy("id_a", "id_b")
+    return _cosine_pairs(
+        a.join(b, ["bucket"]).where(F.col("id_a") < F.col("id_b")), threshold
     )
 
 
@@ -214,11 +226,10 @@ def ivf_assign(
 
     def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            ok = pdf[vec_col].map(lambda v: v is not None and len(v) == dim)
-            pdf = pdf[ok.to_numpy()] if not ok.all() else pdf
-            if pdf.empty:
+            pdf, mat = _valid_matrix(pdf, vec_col, dim)
+            if mat is None:
                 continue
-            mat = np.vstack(pdf[vec_col].to_numpy()).astype("float64")
+            mat = mat.astype("float64")
             d = (mat**2).sum(1)[:, None] - 2 * mat @ cents.T + (cents**2).sum(1)[None, :]
             yield pd.DataFrame({id_col: pdf[id_col], "cell": d.argmin(axis=1).astype("int64")})
 

@@ -16,8 +16,6 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-STATUSES = ("pending", "processing", "completed", "failed")
-
 
 def claim_batch(df: DataFrame, key: str, status_col: str, n: int) -> DataFrame:
     """Mark the n lowest-key pending rows as processing (the reference's

@@ -578,3 +578,38 @@ def test_delta_resubmission_still_rejects_missing_benchmark(
     curate_delta(spark, batch, str(out), benchmark=bench)
     with pytest.raises(ValueError, match="pass the same benchmark"):
         curate_delta(spark, batch, str(out), benchmark=None)
+
+
+def _digest(df) -> list:
+    return sorted(tuple(sorted(r.asDict().items())) for r in df.collect())
+
+
+def test_no_stats_run_writes_the_same_corpus(spark, corpus, bench, tmp_path):
+    """stats=False (jobs/curate.py --no-stats) skips every stage count
+    and boundary persist; the base run and a delta on top of it must
+    still write exactly the rows the counted run writes."""
+    from readability_scanner_spark.plans.curate import (
+        curate_delta,
+        read_curated,
+        read_packed,
+        read_windows,
+    )
+
+    batch = spark.createDataFrame(
+        [(40, "a fresh delta document for the uncounted path"), (41, _DOCS[-1][1])],
+        ["doc_id", "text"],
+    )
+    digests, metas = {}, {}
+    for stats in (True, False):
+        out = str(tmp_path / f"stats_{stats}")
+        base = _run(spark, corpus, bench, out, stats=stats)
+        delta = curate_delta(spark, batch, out, benchmark=bench, stats=stats)
+        metas[stats] = (base, delta)
+        digests[stats] = [
+            _digest(read(spark, out)) for read in (read_curated, read_packed, read_windows)
+        ]
+    assert digests[False] == digests[True]
+    assert all(len(d) > 0 for d in digests[True])
+    for meta in metas[False]:
+        assert meta["counts"] == {}
+    assert all(meta["counts"] for meta in metas[True])

@@ -39,14 +39,14 @@ def test_unmatched_end_tag_ignored():
 def test_text_spans_point_into_source():
     html = "<div><p>alpha</p><p>beta</p></div>"
     root = parse_html(html)
-    spans = root.text_spans()
+    spans = root.text_and_spans()[1]
     assert [html[s:e] for s, e in spans] == ["alpha", "beta"]
 
 
 def test_spans_with_entities_cover_raw_input():
     html = "<p>a&amp;b</p>"
     root = parse_html(html)
-    (span,) = root.text_spans()
+    (span,) = root.text_and_spans()[1]
     assert html[span[0] : span[1]] == "a&amp;b"
     assert root.find("p").inner_text() == "a&b"
 
@@ -81,17 +81,17 @@ def _tree_sig(n):
 def test_fast_parser_matches_stdlib_on_fixtures():
     """The fast regex tokenizer (default) must build byte-identical trees
     to the stdlib-html.parser builder on every fixture class."""
-    from readability_scanner_spark.dom import fast_parse, parse_html_stdlib
+    from readability_scanner_spark.dom import parse_html_stdlib
     from readability_scanner_spark.sources.fixtures import fixture_classes, make_fixture
 
     for cls in fixture_classes():
         for seed in range(4):
             html = make_fixture(cls, seed)
-            assert _tree_sig(fast_parse(html)) == _tree_sig(parse_html_stdlib(html)), (cls, seed)
+            assert _tree_sig(parse_html(html)) == _tree_sig(parse_html_stdlib(html)), (cls, seed)
 
 
 def test_fast_parser_rawtext_and_edge_cases():
-    from readability_scanner_spark.dom import fast_parse, parse_html_stdlib
+    from readability_scanner_spark.dom import parse_html_stdlib
 
     cases = [
         "<script>if (a<b && c>d) { x('</div>'); }</script><p>k</p>",
@@ -103,11 +103,11 @@ def test_fast_parser_rawtext_and_edge_cases():
         "",
     ]
     for html in cases:
-        fast_parse(html)  # never raises
+        parse_html(html)  # never raises
     # rawtext content must not be parsed as tags
-    root = fast_parse("<script>var s = '<p>x</p>';</script><div>y</div>")
+    root = parse_html("<script>var s = '<p>x</p>';</script><div>y</div>")
     assert root.find("p") is None
     assert root.find("div").inner_text() == "y"
     # parity on the well-formed subset
     for html in cases[:2]:
-        assert _tree_sig(fast_parse(html)) == _tree_sig(parse_html_stdlib(html))
+        assert _tree_sig(parse_html(html)) == _tree_sig(parse_html_stdlib(html))

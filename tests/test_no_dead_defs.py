@@ -1,17 +1,22 @@
-"""Reachability guard: every top-level function or class in the package
-must be reachable from something that runs, or be a declared public API.
+"""Reachability guard: every top-level function, class, class method
+and module constant in the package must be reachable from something that
+runs, or be a declared public API.
 
 Pure stdlib ``ast``. Roots are the files a job, query, script or
-benchmark starts from (``ROOT_FILES``) plus the module-level statements
-of every package module (constants, registries). From there, names are
-followed through top-level def bodies: a def is reached when a reached
-body refers to its name as a variable, an attribute, or an exact
-identifier string constant (``getattr``/registry lookups). Matching is
-by name alone, so a collision can only keep a def alive, never flag a
-live one. Import statements do not count — a def that only an
-``__init__.py`` re-exports is not reached — and neither do mentions in
-comments and docstrings, or tests: a def that only tests call is a
-second path nothing runs.
+benchmark starts from (``ROOT_FILES``) plus the package's module-level
+statements that are not plain assignments (registries built in loops,
+guarded imports). From there, names are followed through the bodies of
+defs, methods and constants: one is reached when a reached body reads
+its name as a variable, an attribute, or an exact identifier string
+constant (``getattr``/registry lookups). Matching is by name alone, so a
+collision can only keep a def alive, never flag a live one. Three uses
+do not count: import statements (a def that only an ``__init__.py``
+re-exports is not reached), an attribute of a name imported from
+outside the package (``pq.read_table`` does not reach a package
+``read_table``), and mentions in comments, docstrings or tests (a def
+that only tests call is a second path nothing runs). Dunder methods and
+names are exempt, and so are the methods of a class with a base from
+outside the package: the framework calls them.
 
 A def that fails here is either deleted or declared in ``PUBLIC_API``
 with the SURVEY row (or other reason) that needs it. A declaration that
@@ -19,6 +24,7 @@ names a missing def, or a def that is reachable anyway, fails too.
 """
 
 import ast
+import builtins
 import os
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -55,8 +61,6 @@ PUBLIC_API = {
         "SURVEY §3.2 /daily read path: per-day trend",
     "readability_scanner_spark/operators/reports.py::compat_view":
         "COVERAGE legacy field-name compat ('Flesch Kincaid', ...)",
-    "readability_scanner_spark/operators/analytics.py::merge_precedence_join":
-        "SURVEY JN1 exact $mergeObjects precedence",
     "readability_scanner_spark/operators/statusflow.py::requeue_stale":
         "COVERAGE summary-status lifecycle: requeue stale processing rows",
     "readability_scanner_spark/plans/curate.py::read_curated":
@@ -73,8 +77,6 @@ PUBLIC_API = {
         "COVERAGE Z-order clustering + file skipping",
     "readability_scanner_spark/operators/layout.py::prune_files":
         "COVERAGE Z-order clustering + file skipping",
-    "readability_scanner_spark/operators/multimodal.py::png_pixel_stats":
-        "COVERAGE multimodal binary columns: PNG pixel stats",
     "readability_scanner_spark/operators/multimodal.py::resize_image":
         "COVERAGE image resize / thumbnail normalization",
     "readability_scanner_spark/operators/multimodal.py::resize_images":
@@ -99,7 +101,7 @@ PUBLIC_API = {
         "Python reference of the T3 word count: test_column_python_parity, "
         "test_word_unicode",
     "readability_scanner_spark/dom.py::parse_html_stdlib":
-        "html.parser reference tree that fast_parse must match: test_dom, "
+        "html.parser reference tree that parse_html must match: test_dom, "
         "test_properties",
 }
 
@@ -122,46 +124,143 @@ def _parse(path: str) -> ast.Module:
         return ast.parse(f.read(), filename=path)
 
 
-def _names_used(tree: ast.AST) -> set[str]:
+class _Imports:
+    """What a file's import statements bind: ``foreign`` names point at a
+    module (or a member of one) outside ``package``; ``aliases`` maps an
+    ``as`` name of a package import to the name it imports."""
+
+    def __init__(self, tree: ast.AST, package: str) -> None:
+        self.foreign: set[str] = set()
+        self.aliases: dict[str, str] = {}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                for alias in node.names:
+                    if alias.name.split(".")[0] != package:
+                        self.foreign.add(alias.asname or alias.name.split(".")[0])
+            elif isinstance(node, ast.ImportFrom):
+                ours = node.level > 0 or (node.module or "").split(".")[0] == package
+                for alias in node.names:
+                    if not ours:
+                        self.foreign.add(alias.asname or alias.name)
+                    elif alias.asname:
+                        self.aliases[alias.asname] = alias.name
+
+
+_NO_IMPORTS = _Imports(ast.parse(""), "")
+
+
+def _base_name(node: ast.AST):
+    while isinstance(node, ast.Attribute):
+        node = node.value
+    return node.id if isinstance(node, ast.Name) else None
+
+
+def _names_used(tree: ast.AST, imports: _Imports = _NO_IMPORTS) -> set[str]:
+    """Names ``tree`` reads: loaded variables (an import alias counts as
+    the name it imports), attributes (except those hanging off a foreign
+    import, like ``pq.read_table``) and identifier string constants."""
     used: set[str] = set()
     for node in ast.walk(tree):
         if isinstance(node, ast.Name):
-            used.add(node.id)
+            if isinstance(node.ctx, ast.Load):
+                used.add(imports.aliases.get(node.id, node.id))
         elif isinstance(node, ast.Attribute):
-            used.add(node.attr)
+            if isinstance(node.ctx, ast.Load) and _base_name(node) not in imports.foreign:
+                used.add(node.attr)
         elif isinstance(node, ast.Constant) and isinstance(node.value, str):
             if node.value.isidentifier():
                 used.add(node.value)
     return used
 
 
-_DEF_KINDS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+_FUNC_KINDS = (ast.FunctionDef, ast.AsyncFunctionDef)
 
 
-def _scan():
-    """(defs, root_names): ``defs`` maps "module::name" to the names its
-    def node uses (its own name excluded, so recursion is no use);
-    ``root_names`` is every name the roots use."""
-    defs: dict[str, set[str]] = {}
+def _is_dunder(name: str) -> bool:
+    return name.startswith("__") and name.endswith("__")
+
+
+def _checked_methods(node: ast.ClassDef, foreign: set[str]) -> list:
+    """Methods of a package class that must be reached by name. Dunders
+    are exempt, and so is every method of a class with a base from
+    outside the package: the framework calls those (the
+    ``HTMLParser.handle_*`` callbacks)."""
+    for base in node.bases:
+        name = _base_name(base)
+        if name in foreign or (name in dir(builtins) and name != "object"):
+            return []
+    return [
+        item for item in node.body
+        if isinstance(item, _FUNC_KINDS) and not _is_dunder(item.name)
+    ]
+
+
+def _constant_names(node: ast.stmt) -> list[str]:
+    """Non-dunder names a module-level assignment binds."""
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, ast.AnnAssign) and node.value is not None:
+        targets = [node.target]
+    else:
+        return []
+    names = []
+    for target in targets:
+        elts = target.elts if isinstance(target, ast.Tuple) else [target]
+        if not all(isinstance(e, ast.Name) for e in elts):
+            return []
+        names += [e.id for e in elts if not _is_dunder(e.id)]
+    return names
+
+
+def _scan(package_dir: str, root_paths: list[str]):
+    """(units, root_names). ``units`` maps "module::name" (methods as
+    "module::Class.method") to the names its code uses, its own name
+    excluded so recursion is no use; ``root_names`` is every name the
+    roots and the package's other module-level statements use."""
+    package = os.path.basename(package_dir)
+    repo = os.path.dirname(package_dir)
+    units: dict[str, set[str]] = {}
     roots: set[str] = set()
-    for path in sorted(_py_files(PACKAGE)):
-        rel = os.path.relpath(path, REPO)
+    for path in sorted(_py_files(package_dir)):
+        rel = os.path.relpath(path, repo)
         tree = _parse(path)
+        imports = _Imports(tree, package)
         for node in tree.body:
-            if isinstance(node, _DEF_KINDS):
-                defs[f"{rel}::{node.name}"] = _names_used(node) - {node.name}
+            if isinstance(node, _FUNC_KINDS):
+                units[f"{rel}::{node.name}"] = _names_used(node, imports) - {node.name}
+            elif isinstance(node, ast.ClassDef):
+                methods = _checked_methods(node, imports.foreign)
+                for fn in methods:
+                    key = f"{rel}::{node.name}.{fn.name}"
+                    units.setdefault(key, set()).update(
+                        _names_used(fn, imports) - {fn.name}
+                    )
+                rest = [item for item in node.body if item not in methods]
+                body = set().union(*(_names_used(n, imports) for n in rest))
+                for n in node.bases + node.keywords + node.decorator_list:
+                    body |= _names_used(n, imports)
+                units[f"{rel}::{node.name}"] = body - {node.name}
+            elif _constant_names(node):
+                used = _names_used(node.value, imports)
+                for name in _constant_names(node):
+                    units[f"{rel}::{name}"] = used - {name}
             else:
-                roots |= _names_used(node)
-    for entry in ROOT_FILES:
-        for path in _py_files(os.path.join(REPO, entry)):
-            roots |= _names_used(_parse(path))
-    return defs, roots
+                roots |= _names_used(node, imports)
+    for entry in root_paths:
+        for path in _py_files(entry):
+            tree = _parse(path)
+            roots |= _names_used(tree, _Imports(tree, package))
+    return units, roots
 
 
-def _reach(defs: dict[str, set[str]], seed: set[str]) -> set[str]:
+def _unit_name(key: str) -> str:
+    return key.rsplit("::", 1)[1].rsplit(".", 1)[-1]
+
+
+def _reach(units: dict[str, set[str]], seed: set[str]) -> set[str]:
     by_name: dict[str, list[str]] = {}
-    for key in defs:
-        by_name.setdefault(key.rsplit("::", 1)[1], []).append(key)
+    for key in units:
+        by_name.setdefault(_unit_name(key), []).append(key)
     reached: set[str] = set()
     todo = list(seed)
     while todo:
@@ -170,26 +269,35 @@ def _reach(defs: dict[str, set[str]], seed: set[str]) -> set[str]:
             continue
         reached.add(name)
         for key in by_name.get(name, ()):
-            todo.extend(defs[key] - reached)
+            todo.extend(units[key] - reached)
     return reached
 
 
-def test_every_package_def_is_reachable_or_declared():
-    defs, roots = _scan()
-    declared_bodies = set().union(*(defs.get(k, set()) for k in PUBLIC_API))
-    reached = _reach(defs, roots | declared_bodies)
+def _audit(package_dir: str, root_paths: list[str], public_api: dict):
+    """(unreachable, stale) keys: units nothing reaches that are not
+    declared, and declarations that are gone or reached anyway."""
+    units, roots = _scan(package_dir, root_paths)
+    declared = set().union(*(units.get(k, set()) for k in public_api))
+    reached = _reach(units, roots | declared)
     unreachable = sorted(
-        key for key in defs
-        if key.rsplit("::", 1)[1] not in reached and key not in PUBLIC_API
-    )
-    assert unreachable == [], (
-        "top-level package defs no job, query, script or benchmark reaches "
-        "(delete them, or declare them in PUBLIC_API with a reason):\n"
-        + "\n".join(unreachable)
+        key for key in units
+        if _unit_name(key) not in reached and key not in public_api
     )
     stale = sorted(
-        key for key in PUBLIC_API
-        if key not in defs or key.rsplit("::", 1)[1] in reached
+        key for key in public_api
+        if key not in units or _unit_name(key) in reached
+    )
+    return unreachable, stale
+
+
+def test_every_package_def_is_reachable_or_declared():
+    unreachable, stale = _audit(
+        PACKAGE, [os.path.join(REPO, entry) for entry in ROOT_FILES], PUBLIC_API
+    )
+    assert unreachable == [], (
+        "package defs, methods and constants no job, query, script or "
+        "benchmark reaches (delete them, or declare them in PUBLIC_API "
+        "with a reason):\n" + "\n".join(unreachable)
     )
     assert stale == [], (
         "PUBLIC_API entries that are gone or reachable anyway:\n" + "\n".join(stale)
@@ -199,3 +307,62 @@ def test_every_package_def_is_reachable_or_declared():
 def test_import_statements_are_not_uses():
     # a re-export in an __init__.py must not keep a def alive
     assert _names_used(ast.parse("from m import f\nimport g.h as k\n")) == set()
+
+
+def _plant(tmp_path, package_src: str, root_src: str):
+    pkg = tmp_path / "pkg"
+    pkg.mkdir()
+    (pkg / "mod.py").write_text(package_src)
+    root = tmp_path / "job.py"
+    root.write_text(root_src)
+    return _audit(str(pkg), [str(root)], {})
+
+
+def test_foreign_module_attributes_are_not_uses(tmp_path):
+    # pq.read_table must not keep the package's own read_table alive
+    package_src = "def read_table():\n    pass\n"
+    unreachable, _ = _plant(
+        tmp_path, package_src,
+        "import pyarrow.parquet as pq\npq.read_table('x')\n"
+        "import pyarrow\npyarrow.parquet.read_table('x')\n",
+    )
+    assert unreachable == ["pkg/mod.py::read_table"]
+    control = tmp_path / "control"
+    control.mkdir()
+    unreachable, _ = _plant(
+        control, package_src, "from pkg import mod\nmod.read_table()\n"
+    )
+    assert unreachable == []
+
+
+def test_class_methods_are_checked(tmp_path):
+    unreachable, _ = _plant(
+        tmp_path,
+        "from html.parser import HTMLParser\n"
+        "class Node:\n"
+        "    def __init__(self):\n"
+        "        self.used()\n"
+        "    def used(self):\n"
+        "        pass\n"
+        "    def text_spans(self):\n"
+        "        pass\n"
+        "class Builder(HTMLParser):\n"
+        "    def handle_data(self, data):\n"
+        "        pass\n",
+        "from pkg.mod import Node, Builder\nNode()\nBuilder()\n",
+    )
+    assert unreachable == ["pkg/mod.py::Node.text_spans"]
+
+
+def test_module_constants_are_checked(tmp_path):
+    unreachable, _ = _plant(
+        tmp_path,
+        "import re\n"
+        "__version__ = '1'\n"
+        "_WS_RE = re.compile('x')\n"
+        "_USED = 1\n"
+        "def f():\n"
+        "    return _USED\n",
+        "from pkg.mod import f\nf()\n",
+    )
+    assert unreachable == ["pkg/mod.py::_WS_RE"]

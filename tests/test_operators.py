@@ -940,7 +940,7 @@ def test_decode_png_matches_writer_pattern_and_stats():
     # writer pattern: byte x of row y is (seed + y*31 + x) % 256
     expect = bytearray((9 + y * 31 + x) % 256 for y in range(4) for x in range(15))
     assert px == expect
-    feats = multimodal.png_pixel_stats(png)
+    feats = multimodal.image_pixel_stats(png)
     assert feats[:3] == [5.0, 4.0, 3.0]
     plane0 = expect[0::3]
     mean0 = sum(plane0) / 20

@@ -97,14 +97,15 @@ def test_roundtrip_property_printable_ascii(text):
 # ---------------------------------------------------------------------------
 
 
-def _hand_pdf(content: bytes, *, length: int | None = None) -> bytes:
+def _hand_pdf(content: bytes, *, length: int | None = None, filters: bytes = b"") -> bytes:
     n = len(content) if length is None else length
+    head = b"/Length " + str(n).encode() + (b" /Filter " + filters if filters else b"")
     return (
         b"%PDF-1.4\n"
         b"1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n"
         b"2 0 obj << /Type /Pages /Kids [3 0 R] /Count 1 >> endobj\n"
         b"3 0 obj << /Type /Page /Parent 2 0 R /Contents 4 0 R >> endobj\n"
-        b"4 0 obj << /Length " + str(n).encode() + b" >>\nstream\n"
+        b"4 0 obj << " + head + b" >>\nstream\n"
         + content
         + b"\nendstream endobj\n"
         b"trailer << /Size 5 /Root 1 0 R >>\n"
@@ -463,21 +464,59 @@ def test_ascii85_and_runlength_filters():
     # cross-check ascii85 against the stdlib encoder (Adobe variant)
     for payload in (b"hello world", b"\x00\x00\x00\x00spam", b"a", b"ab", bytes(range(256))):
         enc = base64.a85encode(payload) + b"~>"
-        assert _ascii85_decode(enc) == payload
-    assert _ascii85_decode(b"z~>") == b"\x00\x00\x00\x00"
-    assert _ascii85_decode(b"!!z~>") is None  # z inside a group
-    assert _ascii85_decode(b"\x7f\x7f\x7f\x7f\x7f~>") is None  # out of range
-    assert _ascii85_decode(b"!~>") is None  # 1-char group is illegal
+        assert _ascii85_decode(enc, 1024) == payload
+    assert _ascii85_decode(b"z~>", 1024) == b"\x00\x00\x00\x00"
+    assert _ascii85_decode(b"!!z~>", 1024) is None  # z inside a group
+    assert _ascii85_decode(b"\x7f\x7f\x7f\x7f\x7f~>", 1024) is None  # out of range
+    assert _ascii85_decode(b"!~>", 1024) is None  # 1-char group is illegal
     # runlength: literal run + repeat run + EOD
     rl = bytes([2]) + b"abc" + bytes([257 - 4]) + b"x" + bytes([128])
-    assert _runlength_decode(rl) == b"abcxxxx"
-    assert _runlength_decode(bytes([5]) + b"ab") is None  # truncated literal
-    assert _runlength_decode(bytes([200])) is None  # truncated repeat
-    # end to end through the filter chain (chained with AHx)
+    assert _runlength_decode(rl, 1024) == b"abcxxxx"
+    assert _runlength_decode(bytes([5]) + b"ab", 1024) is None  # truncated literal
+    assert _runlength_decode(bytes([200]), 1024) is None  # truncated repeat
+    # both stop once past their limit: 'z' and a repeat run expand 4x/128x
+    assert len(_ascii85_decode(b"z" * 1000 + b"~>", 10)) == 12
+    assert len(_runlength_decode(bytes([129, 0]) * 1000, 10)) == 128
+    # end to end through the filter chain (chained with AHx): the
+    # budget left is charged for every stage's output
     a85 = base64.a85encode(b"chained payload") + b"~>"
     hexed = a85.hex().encode() + b">"
-    assert _apply_filters(hexed, ["ASCIIHexDecode", "ASCII85Decode"]) == b"chained payload"
-    assert _apply_filters(b"garbage", ["DCTDecode"]) == b""
+    assert _apply_filters(hexed, ["ASCIIHexDecode", "ASCII85Decode"], 1024) == (
+        b"chained payload", 1024 - len(a85) - len(b"chained payload")
+    )
+    assert _apply_filters(hexed, ["ASCIIHexDecode", "ASCII85Decode"], 30) == (b"", 0)
+    assert _apply_filters(b"garbage", ["DCTDecode"], 1024) == (b"", 1024)
+
+
+def test_decompression_bombs_fail_within_the_decode_budget():
+    """A content stream that inflates to 64 MiB, directly or through a
+    chained /Filter [/FlateDecode /FlateDecode], ends parse_failed fast
+    and never holds much more than PDF_DECODE_MAX_BYTES decoded."""
+    import time
+    import tracemalloc
+    import zlib
+
+    from readability_scanner_spark.extraction.pdf import PDF_DECODE_MAX_BYTES
+
+    co = zlib.compressobj(9)
+    bomb = b"".join([co.compress(bytes(1 << 20)) for _ in range(64)] + [co.flush()])
+    cases = [
+        (bomb, b"/FlateDecode"),
+        (zlib.compress(bomb, 9), b"[/FlateDecode /FlateDecode]"),
+    ]
+    for stream, filters in cases:
+        payload = _hand_pdf(stream, filters=filters).decode("latin-1")
+        tracemalloc.start()
+        t0 = time.perf_counter()
+        try:
+            failed = extract_one(payload)[6]
+            elapsed = time.perf_counter() - t0
+            peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        assert failed, filters
+        assert elapsed < 2.0, (filters, elapsed)
+        assert peak < 2 * PDF_DECODE_MAX_BYTES, (filters, peak)
 
 
 def test_ascii85_whitespace_split_eod_and_leader():
@@ -487,5 +526,5 @@ def test_ascii85_whitespace_split_eod_and_leader():
 
     from readability_scanner_spark.extraction.pdf import _ascii85_decode
 
-    assert _ascii85_decode(base64.a85encode(b"wrapped") + b"~\r\n>") == b"wrapped"
-    assert _ascii85_decode(b"\n<~" + base64.a85encode(b"led") + b"~>") == b"led"
+    assert _ascii85_decode(base64.a85encode(b"wrapped") + b"~\r\n>", 1024) == b"wrapped"
+    assert _ascii85_decode(b"\n<~" + base64.a85encode(b"led") + b"~>", 1024) == b"led"

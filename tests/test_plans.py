@@ -25,12 +25,12 @@ def test_column_pruning_reaches_parquet(spark):
     assert "ReadSchema: struct<l_orderkey:bigint,l_quantity:double>" in plan
 
 
-def test_lookup_join_is_broadcast(spark):
-    from readability_scanner_spark.operators.analytics import lookup_join
+def test_merge_precedence_join_is_broadcast(spark):
+    from readability_scanner_spark.operators.analytics import merge_precedence_join
 
     orders = spark.read.parquet(f"{SF}/orders.parquet")
-    cust = spark.read.parquet(f"{SF}/customer.parquet")
-    df = lookup_join(orders, cust, "o_custkey", "c_custkey", ["c_name"])
+    cust = spark.read.parquet(f"{SF}/customer.parquet").select("c_custkey", "c_name")
+    df = merge_precedence_join(orders, cust, "o_custkey", "c_custkey")
     plan = _plan(df)
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan

@@ -29,7 +29,7 @@ html_like = st.one_of(
 @given(html_like)
 def test_parse_never_raises_and_spans_valid(raw):
     root = parse_html(raw)
-    for start, end in root.text_spans():
+    for start, end in root.text_and_spans()[1]:
         assert 0 <= start < end <= len(raw)
 
 
@@ -111,11 +111,11 @@ def test_clone_equivalent(raw):
     clone = root.clone()
     assert clone.serialize() == root.serialize()
     assert clone.inner_text() == root.inner_text()
-    assert clone.text_spans() == root.text_spans()
+    assert clone.text_and_spans()[1] == root.text_and_spans()[1]
 
 
 # well-formed HTML generator: nested tags, attributes, entities — the
-# domain where fast_parse and the stdlib builder must agree exactly
+# domain where parse_html and the stdlib builder must agree exactly
 _safe_text = st.text(
     alphabet=st.characters(min_codepoint=32, max_codepoint=126, blacklist_characters="<>&"),
     max_size=40,
@@ -148,14 +148,14 @@ def _wf_html(depth):
 @settings(max_examples=200, deadline=None)
 @given(st.lists(_wf_html(3), max_size=4).map("".join))
 def test_fast_parser_parity_on_wellformed(html):
-    from readability_scanner_spark.dom import fast_parse, parse_html_stdlib
+    from readability_scanner_spark.dom import parse_html_stdlib
 
     def sig(n):
         if n.is_text:
             return ("#t", n.text, n.src_start, n.src_end)
         return (n.tag, tuple(sorted(n.attrs.items())), tuple(sig(c) for c in n.children))
 
-    assert sig(fast_parse(html)) == sig(parse_html_stdlib(html))
+    assert sig(parse_html(html)) == sig(parse_html_stdlib(html))
 
 
 # --- media codecs: never raise on arbitrary bytes, roundtrip on valid ---

@@ -108,6 +108,31 @@ def test_build_daily_topics(spark):
         assert t.articles[0].title.startswith("title-")
 
 
+def test_daily_topics_query_pools_every_row_past_seven_days(spark, tmp_path):
+    """q_daily_topics must lift the 7-day lookback as well as the
+    newest-500 cap: its oracle clusters every embedding. 40 identical
+    vectors 8 h apart span 13 days; all of them form one topic."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entry
+
+    n = 40
+    pq.write_table(
+        pa.table(
+            {
+                # ts = 2025-06-01 + vec_id minutes
+                "vec_id": pa.array([i * 8 * 60 for i in range(n)], pa.int64()),
+                "embedding": pa.array([[1.0, 0.5, 0.25]] * n, pa.list_(pa.float32())),
+                "label": pa.array([i % 3 for i in range(n)], pa.int32()),
+            }
+        ),
+        tmp_path / "embeddings.parquet",
+    )
+    topics = entry.q_daily_topics(spark, str(tmp_path)).collect()
+    assert [t.article_count for t in topics] == [n]
+
+
 # --- summary / headline enrichment (LLM-seam analog) ------------------------------
 
 

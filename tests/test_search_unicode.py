@@ -419,7 +419,7 @@ def test_phrase_search_vs_python_recompute(spark, corpus_df):
         k = len(terms)
         return sum(1 for i in range(len(toks) - k + 1) if toks[i : i + k] == terms)
 
-    idx = build_positional_index(corpus_df, "doc_id", "text", extract_then_lower=True)
+    idx = build_positional_index(corpus_df, "doc_id", "text")
     for phrase in ("data table", "data 表", "table query", "more data"):
         got = [
             (r["doc_id"], r["occurrences"])
@@ -443,7 +443,7 @@ def test_phrase_search_overlapping_and_repeated_terms(spark):
 
     rows = [(1, "data data data"), (2, "data x data"), (3, "data data")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    idx = build_positional_index(df, "doc_id", "text", extract_then_lower=True)
+    idx = build_positional_index(df, "doc_id", "text")
     got = {
         r["doc_id"]: r["occurrences"]
         for r in phrase_search(idx, "data data").collect()
@@ -460,7 +460,7 @@ def test_phrase_search_missing_term_and_empty_phrase(spark):
     df = spark.createDataFrame(
         [(1, "alpha beta"), (2, "alpha gamma")], "doc_id long, text string"
     )
-    idx = build_positional_index(df, "doc_id", "text", extract_then_lower=True)
+    idx = build_positional_index(df, "doc_id", "text")
     got = [(r["doc_id"], r["occurrences"]) for r in phrase_search(idx, "alpha beta").collect()]
     assert got == [(1, 1)]  # doc 2 lacks 'beta' entirely -> NULL chain -> filtered
     empty = phrase_search(idx, "!!!")
@@ -485,7 +485,7 @@ def test_near_search_window_semantics(spark):
         (5, "alpha beta alpha beta"), # two adjacent spans
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    idx = build_positional_index(df, "doc_id", "text", extract_then_lower=True)
+    idx = build_positional_index(df, "doc_id", "text")
     got = {
         r["doc_id"]: r["occurrences"]
         for r in near_search(idx, "alpha beta", max_distance=2).collect()
@@ -529,7 +529,7 @@ def test_near_search_vs_python_recompute(spark, corpus_df):
             }
         return len(ends)
 
-    idx = build_positional_index(corpus_df, "doc_id", "text", extract_then_lower=True)
+    idx = build_positional_index(corpus_df, "doc_id", "text")
     for query, d in (("data table", 3), ("the data", 2), ("data query", 5)):
         got = {
             r["doc_id"]: r["occurrences"]
@@ -556,6 +556,6 @@ def test_near_search_dense_doc_stays_linear(spark):
 
     words = ["alpha", "beta", "gamma", "delta"] * 200
     df = spark.createDataFrame([(1, " ".join(words))], "doc_id long, text string")
-    idx = build_positional_index(df, "doc_id", "text", extract_then_lower=True)
+    idx = build_positional_index(df, "doc_id", "text")
     got = near_search(idx, "alpha beta gamma delta", max_distance=3).collect()
     assert [(r["doc_id"], r["occurrences"]) for r in got] == [(1, 200)]

@@ -51,6 +51,10 @@ def test_oracle_text_survives_an_extraction_edit(tmp_path):
     edited_digest, edited_version = _probe(tmp_path)
     assert edited_version != version  # the edit is one the stamp sees
     assert edited_digest == digest
+    # the entry file shapes the sidecar's rows too (_scored_documents)
+    with open(tmp_path / "__spark_entry__.py", "a") as fh:
+        fh.write("\n")
+    assert _probe(tmp_path)[1] != edited_version
 
 
 @pytest.fixture

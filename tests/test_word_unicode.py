@@ -18,8 +18,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from readability_scanner_spark.functions.columns import words_col
+from readability_scanner_spark.functions import textstats
 from readability_scanner_spark.functions.textstats import count_words
-from readability_scanner_spark.functions.wordchars import PY_WORD_RUN, WORD_RUN
+from readability_scanner_spark.functions.wordchars import WORD_RUN, WS_CHARS
 from readability_scanner_spark.operators.textquality import (
     _LANG_WORDS,
     PII_PATTERNS,
@@ -51,7 +52,7 @@ def adv_df(spark):
 
 def test_python_word_run_is_word_pat_twin():
     # the Python twin really is plain \w+ (wordchars.py sweep contract)
-    assert PY_WORD_RUN.pattern == r"\w+"
+    assert textstats._WORD.pattern == r"\w+"
     assert WORD_RUN == r"[\p{L}\p{N}_]+"
 
 
@@ -74,7 +75,7 @@ def test_marker_hits_three_engines_agree(spark, adv_df):
     con = duckdb.connect()
     for r in sel:
         t = ROWS[r.id]
-        toks = [w.lower() for w in PY_WORD_RUN.findall(t)]
+        toks = [w.lower() for w in textstats._WORD.findall(t)]
         for lang in sorted(_LANG_WORDS):
             py = sum(1 for w in toks if w in _LANG_WORDS[lang])
             in_list = ", ".join(f"'{w}'" for w in _LANG_WORDS[lang])
@@ -116,13 +117,14 @@ def test_pii_java_re2_forms_agree(spark, adv_df):
 
 
 def test_ws_class_is_python_s_twin():
-    """WS_CLASS/PY_WS_SET must be exactly CPython's \\s set — full
-    codepoint re-sweep (cheap: one regex match per codepoint)."""
-    from readability_scanner_spark.functions.wordchars import PY_WS_SET
-
+    """WS_CHARS must be exactly CPython's \\s set — full codepoint
+    re-sweep (cheap: one regex match per codepoint)."""
     ws = re.compile(r"\s")
     swept = {cp for cp in range(0x110000) if ws.match(chr(cp))}
-    assert swept == set(PY_WS_SET)
+    spelled = set()
+    for lo, hi in re.findall(r"\\x\{([0-9A-F]+)\}(?:-\\x\{([0-9A-F]+)\})?", WS_CHARS):
+        spelled.update(range(int(lo, 16), int(hi or lo, 16) + 1))
+    assert swept == spelled
 
 
 def test_unicode_whitespace_three_engines(spark):
