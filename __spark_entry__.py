@@ -836,35 +836,15 @@ def q_text_quality_filters(spark, sf_dir):
 
 def q_daily_topics(spark, sf_dir):
     """§3.3 daily-topics pipeline over the embeddings table (synthetic
-    monotone ts per vec_id); nested article structs per topic.
-
-    Both pool caps are lifted to cover the whole table: the oracle's
-    recursive CTE clusters EVERY embedding (no 500-cap, no 7-day
-    lookback), so the declared query must too.  The operator defaults
-    keep the reference's newest-500 / 7-day pool for production callers.
-    One driver aggregate gives the row count and the ts span: the
-    lookback covers the span (sf1.0's minute ts run ~13.9 days), and
-    max_per_window is the REAL row count, not a huge sentinel:
-    orderBy().limit(k) compiles to TakeOrderedAndProject whose
-    per-partition priority queue eagerly allocates O(k) — a 1e9
-    sentinel OOMs the JVM."""
+    monotone ts per vec_id); nested article structs per topic."""
     from readability_scanner_spark.plans.topics import build_daily_topics
 
     emb = _t(spark, sf_dir, "embeddings").withColumn(
         "ts",
         F.to_timestamp(F.lit("2025-06-01 00:00:00")) + F.make_interval(mins=F.col("vec_id")),
     )
-    n, first_ts, last_ts = emb.agg(F.count("*"), F.min("ts"), F.max("ts")).first()
     topics = build_daily_topics(
-        emb,
-        "vec_id",
-        "embedding",
-        "ts",
-        ["label"],
-        lookback_days=(last_ts - first_ts).days + 1 if n else 1,
-        threshold=0.4,
-        min_group_size=2,
-        max_per_window=max(n, 1),
+        emb, "vec_id", "embedding", "ts", ["label"], threshold=0.4, min_group_size=2
     )
     return topics.select("topic_id", "article_count")
 
@@ -1901,8 +1881,8 @@ def _greedy_topics_oracle() -> str:
 
 
 def _daily_topics_oracle() -> str:
-    # build_daily_topics global pool: all 500 sf0.01 vectors fit the
-    # 500-newest cap, one 'all' window; output is (topic_id, article_count)
+    # build_daily_topics clusters every embedding in one 'all' window;
+    # output is (topic_id, article_count)
     return (
         _greedy_cte("'all'", threshold=0.4, min_group=2)
         + "SELECT topic_id, count(*) AS article_count FROM emitted GROUP BY topic_id"

@@ -17,6 +17,7 @@ Iceberg path — that asymmetry is the point of the capability gate.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import uuid
@@ -195,6 +196,18 @@ def _swap_in(df: DataFrame, path: str) -> None:
     os.rename(staging, path)
     if os.path.exists(backup):
         shutil.rmtree(backup)
+
+
+def write_meta(path: str, meta: dict) -> dict:
+    """Atomic JSON commit of a run's ``_meta`` row: write a temp file,
+    then rename it over ``path``. A crash mid-write never leaves a
+    partial file that a resume would read as a committed run."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = path + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump(meta, fh, indent=2, sort_keys=True)
+    os.replace(tmp, path)
+    return meta
 
 
 def _parquet_upsert(

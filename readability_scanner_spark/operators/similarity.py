@@ -1,10 +1,12 @@
 """Vector operators V2–V5 (SURVEY.md §2.1) + ANN similarity search.
 
 Cosine similarity stays JVM-side via higher-order array functions
-(zip_with/aggregate) — no Python for the pairwise math; the O(n²) greedy
-clustering (V4) runs inside applyInPandas over bounded windows because
-the reference algorithm is order-dependent and capped at 500 rows per
-window by construction (ml-service/main.py:418, daily_topics_jobs.py:63-70).
+(zip_with/aggregate) — no Python for the pairwise math; the greedy
+clustering (V4) runs inside applyInPandas, one task per window, because
+the reference algorithm is order-dependent. The reference caps its pool
+at 500 rows (ml-service/main.py:418) to bound an n×n matrix; here each
+seed scores one n-vector instead, so a window costs O(n·d) memory and
+carries no cap.
 
 Scale path: the brute-force self-join is quadratic; `lsh_bucketed_pairs`
 blocks candidates by random-hyperplane signatures so a 10^9-vector corpus
@@ -270,42 +272,37 @@ def greedy_topic_groups(
     window_col: str,
     threshold: float = 0.75,
     min_group_size: int = 3,
-    max_rows_per_window: int = 500,
 ) -> DataFrame:
     """V4 greedy clustering (ml-service/main.py:429-497): iterate items
-    newest-first; each unprocessed seed absorbs all unprocessed items with
-    cosine >= threshold; keep groups of >= min size.
+    newest-first, (order desc, id asc); each unprocessed seed absorbs all
+    unprocessed items with cosine >= threshold; keep groups of >= min size.
 
     Order-dependent ⇒ sequential *within* a window; windows (e.g. days)
-    are independent ⇒ parallel across windows via applyInPandas. The
-    reference caps input at 500 newest (main.py:418) — same cap applied
-    per window, deterministically by (order desc, id).
+    are independent ⇒ parallel across windows via applyInPandas. Every
+    row of a window is clustered: a seed scores one vector against the
+    window, never an n×n matrix.
     """
 
     def cluster(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(
-            [order_col, id_col], ascending=[False, True], kind="mergesort"
-        ).head(max_rows_per_window)
         if pdf.empty:
             return pd.DataFrame(columns=["window", "topic_id", "member_id"])
+        pdf = pdf.sort_values([order_col, id_col], ascending=[False, True], kind="mergesort")
         mat = np.vstack(pdf[vec_col].to_numpy()).astype("float64")
         norms = np.linalg.norm(mat, axis=1)
         norms[norms == 0] = 1.0
         unit = mat / norms[:, None]
-        sims = unit @ unit.T
         ids = pdf[id_col].to_numpy()
-        window_val = pdf[window_col].iloc[0]
+        window_val = str(pdf[window_col].iloc[0])
         processed = np.zeros(len(ids), dtype=bool)
         out = []
         for i in range(len(ids)):
             if processed[i]:
                 continue
-            members = [j for j in range(len(ids)) if not processed[j] and sims[i, j] >= threshold]
+            members = np.flatnonzero(~processed & (unit @ unit[i] >= threshold))
             if len(members) >= min_group_size:
                 topic_id = f"{window_val}-{ids[i]}"
-                for j in members:
-                    processed[j] = True
-                    out.append((str(window_val), topic_id, int(ids[j])))
+                processed[members] = True
+                out.extend((window_val, topic_id, int(ids[j])) for j in members)
             # a failed seed is NOT marked processed: the reference
             # (ml-service/main.py:429-497) leaves it eligible to be
             # absorbed as a member of a later seed's group; the forward

@@ -34,6 +34,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from readability_scanner_spark.catalog import write_meta
 from readability_scanner_spark.operators.dedup import (
     content_hash_cols,
     exact_dedup,
@@ -273,17 +274,6 @@ def _pack(
         st.counts["training_windows"] = spark.read.parquet(windows_path).count()
 
 
-def _write_meta(path: str, meta: dict) -> dict:
-    """Atomic meta commit: a crash mid-write never leaves a partial
-    file that a re-submission would read as a completed run."""
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh, indent=2, sort_keys=True)
-    os.replace(tmp, path)
-    return meta
-
-
 def curate_corpus(
     spark: SparkSession,
     docs: DataFrame,
@@ -424,7 +414,7 @@ def curate_corpus(
             spark, st, final, splits, n_shards, seq_len,
             os.path.join(output, "packed"), os.path.join(output, "windows"),
         )
-        return _write_meta(
+        return write_meta(
             meta_path,
             {
                 "input_fingerprint": fp,
@@ -669,7 +659,7 @@ def curate_delta(
             os.path.join(output, "packed_delta", f"batch={batch_tag}"),
             os.path.join(output, "windows_delta", f"batch={batch_tag}"),
         )
-        return _write_meta(
+        return write_meta(
             delta_meta_path,
             {
                 "batch": batch_tag,

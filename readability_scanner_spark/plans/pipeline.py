@@ -51,6 +51,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from readability_scanner_spark.catalog import write_meta
 from readability_scanner_spark.functions.formulas import with_readability_scores
 from readability_scanner_spark.functions.udfs import (
     EXTRACT_SCHEMA,
@@ -233,11 +234,8 @@ def run_pipeline(
             "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
         meta_row["diagnosis"] = diagnose(meta_row)
-        tmp = os.path.join(_meta_path(output_path), f".bucket-{bucket}.json.tmp")
-        final = os.path.join(_meta_path(output_path), f"bucket-{bucket}.json")
-        with open(tmp, "w") as fh:
-            json.dump(meta_row, fh)
-        os.replace(tmp, final)  # atomic commit point
+        # atomic commit point
+        write_meta(os.path.join(_meta_path(output_path), f"bucket-{bucket}.json"), meta_row)
         summary["buckets_run"] += 1
         summary["turns"] += meta_row["turns_processed"]
         summary["parse_failures"] += meta_row["parse_failures"]

@@ -6,11 +6,12 @@ ml-service/main.py:392-497): 7-day window of embedded articles, greedy
 cosine clustering (threshold 0.75, min group 3, 500-article cap),
 nested article structs per group, delete_many+insert_many refresh.
 
-Spark shape: window filter → per-window applyInPandas greedy clustering
-(deterministic, order-dependent inside a window; windows independent and
-parallel) → join members back → collect_list(struct) per topic →
-INSERT OVERWRITE. The LLM summary/headline enrichment stage is out of
-engine scope (network service) — the group structure and metadata match.
+Spark shape: one 'all' window → applyInPandas greedy clustering
+(deterministic, order-dependent, one seed vector at a time, so no pool
+cap is needed to bound memory) → join members back →
+collect_list(struct) per topic → INSERT OVERWRITE. The LLM
+summary/headline enrichment stage is out of engine scope (network
+service) — the group structure and metadata match.
 """
 
 from __future__ import annotations
@@ -27,10 +28,8 @@ def build_daily_topics(
     vec_col: str,
     ts_col: str,
     article_cols: list[str],
-    lookback_days: int = 7,
     threshold: float = 0.75,
     min_group_size: int = 3,
-    max_per_window: int = 500,
 ) -> DataFrame:
     """docs must carry id, embedding, ts + article payload columns.
 
@@ -38,27 +37,15 @@ def build_daily_topics(
     date_range_end, articles: array<struct<...article_cols>>) — the
     reference's daily_topics document shape (ml-service/main.py:471-488).
 
-    Reference semantics: ONE clustering pool of the ``max_per_window``
-    newest articles across the whole lookback window, anchored at the
-    newest ``ts_col`` (daily_topics_jobs.py:63-70 + main.py:418) —
-    articles from different days can share a topic, and the cap is
-    global. The cap is applied BEFORE the single-group applyInPandas via
-    orderBy+limit (TakeOrderedAndProject), so only max_per_window rows
-    ever land on one task regardless of corpus size.
+    Every row of ``docs`` lands in ONE clustering pool, window ``all``,
+    seeded newest-first by ``ts_col`` — articles from different days can
+    share a topic. A caller that wants the reference's pool (the 500
+    newest of the last 7 days, daily_topics_jobs.py:63-70 + main.py:418)
+    filters ``docs`` before the call.
     """
-    anchor = docs.agg(F.max(ts_col)).first()[0]
-    pool = (
-        docs.where(
-            F.col(ts_col) >= F.lit(anchor) - F.expr(f"INTERVAL {lookback_days} DAYS")
-        )
-        .orderBy(F.desc(ts_col), F.asc(id_col))
-        .limit(max_per_window)
-        .withColumn("_win", F.lit("all"))
-    )
-
     members = greedy_topic_groups(
-        pool.select(id_col, vec_col, ts_col, "_win").withColumn(
-            "_ord", F.unix_timestamp(ts_col)
+        docs.select(
+            id_col, vec_col, F.lit("all").alias("_win"), F.unix_timestamp(ts_col).alias("_ord")
         ),
         id_col=id_col,
         vec_col=vec_col,
@@ -66,7 +53,6 @@ def build_daily_topics(
         window_col="_win",
         threshold=threshold,
         min_group_size=min_group_size,
-        max_rows_per_window=max_per_window,
     )
 
     joined = members.join(docs, members.member_id == docs[id_col])

@@ -108,14 +108,16 @@ def main() -> None:
             print(f"FAIL  {name}: spark error: {e}")
             failed += 1
             continue
+        spark_s = time.time() - t0
         if name not in oracles:
-            print(f"rows  {name}: {len(s_rows)} rows ({time.time()-t0:.1f}s, no oracle)")
+            print(f"rows  {name}: {len(s_rows)} rows (spark {spark_s:.1f}s, no oracle)")
             rows_only += 1
             continue
         try:
             res = con.execute(oracles[name])
             d_cols = [d[0] for d in res.description]
             d_rows = res.fetchall()
+            oracle_s = time.time() - t0 - spark_s
         except Exception as e:
             print(f"FAIL  {name}: duckdb error: {e}")
             failed += 1
@@ -137,7 +139,7 @@ def main() -> None:
                 print(f"      only-spark={only_s}\n      only-duck ={only_d}")
             failed += 1
         else:
-            print(f"ok    {name}: {len(sr)} rows ({time.time()-t0:.1f}s)")
+            print(f"ok    {name}: {len(sr)} rows (spark {spark_s:.1f}s, oracle {oracle_s:.1f}s)")
             passed += 1
     # the driver's smoke: entry() must run and return >= 0 rows
     if not only:

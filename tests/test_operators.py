@@ -1,6 +1,7 @@
 """Unit tests for the operator modules (SURVEY.md §5.2 test model):
 known-answer checks computed independently in Python/numpy."""
 
+import collections
 import random
 
 import numpy as np
@@ -75,14 +76,22 @@ def test_lsh_pairs_subset_of_bruteforce(spark, vec_df):
 
 
 def test_greedy_topics_deterministic_and_clustered(spark, vec_df):
+    """Two tight clusters in w0 plus a zero-norm vector (cosine 0 with
+    everything, itself included: never a seed's member), and an
+    all-equal pool in w1 (one topic, seeded by the newest id)."""
     df, _ = vec_df
-    win = df.withColumn("window", F.lit("w0"))
+    extra = spark.createDataFrame(
+        [(99, [0.0] * 8, "w0")] + [(i, [1.0] * 8, "w1") for i in range(100, 105)],
+        "vec_id long, embedding array<double>, window string",
+    )
+    win = df.withColumn("window", F.lit("w0")).unionByName(extra)
     out1 = similarity.greedy_topic_groups(win, "vec_id", "embedding", "vec_id", "window", 0.9, 3).collect()
     out2 = similarity.greedy_topic_groups(win.repartition(7), "vec_id", "embedding", "vec_id", "window", 0.9, 3).collect()
     assert out1 == out2
     topics = {}
     for r in out1:
         topics.setdefault(r.topic_id, []).append(r.member_id)
+    assert topics.pop("w1-104") == [100, 101, 102, 103, 104]
     assert len(topics) == 2
     for members in topics.values():
         assert len(members) == 10
@@ -109,6 +118,31 @@ def test_greedy_failed_seed_still_absorbable(spark):
     got = {(r.topic_id, r.member_id) for r in out}
     assert {m for _, m in got} == {10, 20, 30}
     assert len({t for t, _ in got}) == 1
+
+
+def test_greedy_topics_query_clusters_windows_past_500_rows(spark, tmp_path):
+    """q_greedy_topics clusters every row of a window: 4 windows
+    (vec_id % 4) of 600 identical vectors give 4 topics of 600, each
+    seeded by its window's newest id. A 500-row pool cap would leave
+    100 rows per window out of any topic."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entry
+
+    n = 2400
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(range(n), pa.int64()),
+                "embedding": pa.array([[1.0, 0.5, 0.25]] * n, pa.list_(pa.float32())),
+            }
+        ),
+        tmp_path / "embeddings.parquet",
+    )
+    out = entry.q_greedy_topics(spark, str(tmp_path)).collect()
+    sizes = collections.Counter((r.window, r.topic_id) for r in out)
+    assert sizes == {(str(w), f"{w}-{n - 4 + w}"): 600 for w in range(4)}
 
 
 # --- dedup -----------------------------------------------------------------------

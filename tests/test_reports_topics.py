@@ -133,6 +133,43 @@ def test_daily_topics_query_pools_every_row_past_seven_days(spark, tmp_path):
     assert [t.article_count for t in topics] == [n]
 
 
+def test_daily_topics_query_builds_without_a_spark_job(spark, tmp_path):
+    """Constructing q_daily_topics runs no Spark job of its own: the pool
+    is the whole table, so there is no row count, ts span or anchor to
+    fetch first. The one job it may start is the parquet reader's schema
+    read, which reading the table alone starts too. The collect after it
+    does run jobs, so the probe is live."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entry
+
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(range(20), pa.int64()),
+                "embedding": pa.array([[1.0, 0.5, 0.25]] * 20, pa.list_(pa.float32())),
+                "label": pa.array([0] * 20, pa.int32()),
+            }
+        ),
+        tmp_path / "embeddings.parquet",
+    )
+    sc = spark.sparkContext
+    jobs = sc.statusTracker().getJobIdsForGroup
+    try:
+        sc.setJobGroup("daily-topics-read", "table read")
+        entry._t(spark, str(tmp_path), "embeddings")
+        sc.setJobGroup("daily-topics-build", "construction")
+        query = entry.q_daily_topics(spark, str(tmp_path))
+        sc.setJobGroup("daily-topics-run", "collect")
+        assert len(jobs("daily-topics-build")) == len(jobs("daily-topics-read")) <= 1
+        assert [t.article_count for t in query.collect()] == [20]
+        assert jobs("daily-topics-run")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
 # --- summary / headline enrichment (LLM-seam analog) ------------------------------
 
 
