@@ -1,14 +1,18 @@
 """Vector operators V2–V5 (SURVEY.md §2.1) + ANN similarity search.
 
-Cosine similarity stays JVM-side via higher-order array functions
-(zip_with/aggregate) — no Python for the pairwise math; the greedy
-clustering (V4) runs inside applyInPandas, one task per window, because
-the reference algorithm is order-dependent. The reference caps its pool
-at 500 rows (ml-service/main.py:418) to bound an n×n matrix; here each
-seed scores one n-vector instead, so a window costs O(n·d) memory and
-carries no cap.
+Pair and cluster scoring is numpy: every pairwise cosine (the exact
+all-pairs join, the LSH bucket join) and every greedy-clustering seed
+goes through one kernel, `_cosines`, inside applyInPandas, so the
+per-row interpretation is paid once per block instead of once per pair.
+Row-against-constant top-k (`knn_topk`, `ivf_knn`) stays JVM-side via
+higher-order array functions (zip_with/aggregate): it is one cosine per
+row and a TakeOrderedAndProject, which a Python worker only slows down.
+The greedy clustering (V4) is order-dependent, so it runs one task per
+window. The reference caps its pool at 500 rows (ml-service/main.py:418)
+to bound an n×n matrix; here a task scores a block of rows at a time, so
+memory is O(block·n + n·d) and nothing carries a cap.
 
-Scale path: the brute-force self-join is quadratic; `lsh_bucketed_pairs`
+Scale path: exact all-pairs is quadratic in time; `lsh_bucketed_pairs`
 blocks candidates by random-hyperplane signatures so a 10^9-vector corpus
 only compares within buckets.
 """
@@ -45,51 +49,67 @@ def cosine_col(a: Column, b: Column) -> Column:
     return F.when(denom != 0.0, dot_col(ad, bd) / denom).otherwise(F.lit(0.0))
 
 
-def _cosine_pairs(candidates: DataFrame, threshold: float) -> DataFrame:
-    """The tail every pair finder shares: cosine of each candidate
-    ``(id_a, va, id_b, vb)`` row, the pairs at >= ``threshold`` as
-    ``(id_a, id_b)``, ordered."""
+def _cosines(a: np.ndarray, b: np.ndarray, norms_b: np.ndarray) -> np.ndarray:
+    """Cosine of every row of ``a`` against every row of ``b`` (``norms_b``
+    = the row norms of ``b``), as an ``len(a) × len(b)`` matrix. A zero
+    denominator gives 0.0, never NaN — the same guard as `cosine_col`."""
+    denom = np.outer(np.linalg.norm(a, axis=1), norms_b)
+    return np.divide(a @ b.T, denom, out=np.zeros(denom.shape), where=denom != 0)
+
+
+def _stack(vecs) -> tuple[np.ndarray, np.ndarray]:
+    """Vectors stacked one per row as float64, and their row norms: the
+    ``b, norms_b`` operand of `_cosines`."""
+    mat = np.vstack(vecs).astype("float64")
+    return mat, np.linalg.norm(mat, axis=1)
+
+
+def _pairs_within(
+    tagged: DataFrame, group_cols: list, id_col: str, vec_col: str, threshold: float
+) -> DataFrame:
+    """``(id_a, id_b)`` with id_a < id_b and cosine >= ``threshold`` for
+    every two rows of one ``group_cols`` group, ordered. Rows with a null
+    id or vector form no pairs. A group is sorted by id and scored a
+    block of rows against the rest of the group at a time; the block
+    height keeps each of a block's matrices at most 2^22 doubles (32 MiB)."""
+    id_type = tagged.schema[id_col].dataType.simpleString()
+
+    def pairs(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(id_col, kind="mergesort")
+        ids = pdf[id_col].to_numpy()
+        mat, norms = _stack(pdf[vec_col].to_numpy())
+        n = len(ids)
+        step = max(1, 2**22 // n)
+        id_a, id_b = [], []
+        for lo in range(0, n, step):
+            # rows lo..lo+step against columns lo..n: each pair once
+            sims = _cosines(mat[lo : lo + step], mat[lo:], norms[lo:])
+            rows, cols = np.nonzero(sims >= threshold)
+            a, b = ids[lo + rows], ids[lo + cols]
+            keep = a < b
+            id_a.append(a[keep])
+            id_b.append(b[keep])
+        return pd.DataFrame({"id_a": np.concatenate(id_a), "id_b": np.concatenate(id_b)})
+
     return (
-        candidates.select("id_a", "id_b", cosine_col(F.col("va"), F.col("vb")).alias("sim"))
-        .where(F.col("sim") >= threshold)
-        .select("id_a", "id_b")
+        tagged.where(F.col(id_col).isNotNull() & F.col(vec_col).isNotNull())
+        .groupBy(*group_cols)
+        .applyInPandas(pairs, schema=f"id_a {id_type}, id_b {id_type}")
         .orderBy("id_a", "id_b")
     )
 
 
-def similarity_pairs(
-    vectors: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float,
-    max_rows: int | None = 500,
-) -> DataFrame:
+def similarity_pairs(vectors: DataFrame, id_col: str, vec_col: str, threshold: float) -> DataFrame:
     """JN5 all-pairs theta join (vector_service.py:194-221): pairs with
     cosine >= threshold, each pair once (id_a < id_b). Dimension-match
-    guard = V5 (ml-service/main.py:459-461).
+    guard = V5 (ml-service/main.py:459-461): rows are grouped by vector
+    length, so only same-length vectors pair.
 
-    The non-equi join plans as a nested-loop PRODUCT — the reference's
-    own algorithm, which it caps at 500 documents (ml-service/main.py:418).
-    Same contract here (r4): inputs above ``max_rows`` are refused so
-    the quadratic plan can never run at scale; pass ``max_rows=None``
-    only when the caller already bounded the input. The scale path is
-    lsh_bucketed_pairs."""
-    if max_rows is not None:
-        # limit(cap+1).count(): the probe job stops materializing the
-        # input lineage after cap+1 rows instead of scanning it all
-        # (ADVICE r4) — enough to answer "over the cap?" either way
-        n = vectors.limit(max_rows + 1).count()
-        if n > max_rows:
-            raise ValueError(
-                f"all-pairs similarity refused: > cap {max_rows} rows "
-                "(quadratic nested-loop plan); use lsh_bucketed_pairs "
-                "at scale, or raise max_rows explicitly"
-            )
-    a = vectors.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    b = vectors.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
-    return _cosine_pairs(
-        a.join(b, F.col("id_a") < F.col("id_b")).where(F.size("va") == F.size("vb")),
-        threshold,
+    Exact and quadratic in time: one group is scored in one task, at
+    O(block·n + n·d) memory, so an oversized input costs time but cannot
+    exhaust a worker. The scale path is lsh_bucketed_pairs."""
+    return _pairs_within(
+        vectors.select(id_col, vec_col), [F.size(vec_col)], id_col, vec_col, threshold
     )
 
 
@@ -131,28 +151,6 @@ def _valid_matrix(pdf: pd.DataFrame, vec_col: str, dim: int):
     return pdf, np.vstack(pdf[vec_col].to_numpy())
 
 
-def lsh_signature_df(
-    vectors: DataFrame, id_col: str, vec_col: str, dim: int, n_planes: int = 8, seed: int = 42
-) -> DataFrame:
-    """Random-hyperplane signature per vector (sign pattern → bucket id).
-    Vectorized: one matmul per Arrow batch."""
-    planes = _hyperplanes(dim, n_planes, seed)
-    id_type = vectors.schema[id_col].dataType.simpleString()
-
-    def sign_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf, mat = _valid_matrix(pdf, vec_col, dim)
-            if mat is None:
-                continue
-            bits = (mat @ planes.T) >= 0  # (n, planes)
-            bucket = bits.dot(1 << np.arange(n_planes)).astype("int64")
-            yield pd.DataFrame({id_col: pdf[id_col], "bucket": bucket})
-
-    return vectors.select(id_col, vec_col).mapInPandas(
-        sign_batches, schema=f"{id_col} {id_type}, bucket long"
-    )
-
-
 def lsh_bucketed_pairs(
     vectors: DataFrame,
     id_col: str,
@@ -162,17 +160,28 @@ def lsh_bucketed_pairs(
     n_planes: int = 8,
     seed: int = 42,
 ) -> DataFrame:
-    """ANN near-pair search: bucket by hyperplane signature, compare only
-    within buckets. Recall < 1 vs brute force (documented tradeoff);
-    at 100 TB this replaces an infeasible O(n²) crossJoin with a
-    shuffle-by-bucket + per-bucket quadratic on ~n/2^planes rows."""
-    sigs = lsh_signature_df(vectors, id_col, vec_col, dim, n_planes, seed)
-    tagged = vectors.join(sigs, id_col)
-    a = tagged.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), "bucket")
-    b = tagged.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"), "bucket")
-    return _cosine_pairs(
-        a.join(b, ["bucket"]).where(F.col("id_a") < F.col("id_b")), threshold
+    """ANN near-pair search: bucket by random-hyperplane signature (sign
+    pattern → bucket id, one matmul per Arrow batch), compare only within
+    buckets. Recall < 1 vs brute force (documented tradeoff); at 100 TB
+    this replaces an infeasible O(n²) all-pairs with a shuffle-by-bucket
+    + per-bucket quadratic on ~n/2^planes rows."""
+    planes = _hyperplanes(dim, n_planes, seed)
+    id_type = vectors.schema[id_col].dataType.simpleString()
+    vec_type = vectors.schema[vec_col].dataType.simpleString()
+
+    def sign_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            pdf, mat = _valid_matrix(pdf, vec_col, dim)
+            if mat is None:
+                continue
+            bits = (mat @ planes.T) >= 0  # (n, planes)
+            bucket = bits.dot(1 << np.arange(n_planes)).astype("int64")
+            yield pd.DataFrame({id_col: pdf[id_col], vec_col: pdf[vec_col], "bucket": bucket})
+
+    tagged = vectors.select(id_col, vec_col).mapInPandas(
+        sign_batches, schema=f"{id_col} {id_type}, {vec_col} {vec_type}, bucket long"
     )
+    return _pairs_within(tagged, ["bucket"], id_col, vec_col, threshold)
 
 
 # --- scale path: IVF (inverted-file) ANN -------------------------------------------
@@ -287,10 +296,7 @@ def greedy_topic_groups(
         if pdf.empty:
             return pd.DataFrame(columns=["window", "topic_id", "member_id"])
         pdf = pdf.sort_values([order_col, id_col], ascending=[False, True], kind="mergesort")
-        mat = np.vstack(pdf[vec_col].to_numpy()).astype("float64")
-        norms = np.linalg.norm(mat, axis=1)
-        norms[norms == 0] = 1.0
-        unit = mat / norms[:, None]
+        mat, norms = _stack(pdf[vec_col].to_numpy())
         ids = pdf[id_col].to_numpy()
         window_val = str(pdf[window_col].iloc[0])
         processed = np.zeros(len(ids), dtype=bool)
@@ -298,7 +304,8 @@ def greedy_topic_groups(
         for i in range(len(ids)):
             if processed[i]:
                 continue
-            members = np.flatnonzero(~processed & (unit @ unit[i] >= threshold))
+            sims = _cosines(mat[i : i + 1], mat, norms)[0]
+            members = np.flatnonzero(~processed & (sims >= threshold))
             if len(members) >= min_group_size:
                 topic_id = f"{window_val}-{ids[i]}"
                 processed[members] = True

@@ -245,8 +245,7 @@ def test_simhash_block_layout_covers_all_bits():
 def test_embedding_near_dups_lsh_is_bucket_join(spark, vec_df):
     """The embedding near-dup scale path must be the bucket join (no
     nested-loop/cartesian in the plan) and still find near-identical
-    vectors; the exact quadratic path must refuse inputs over its
-    explicit cap."""
+    vectors, a subset of the exact all-pairs path's."""
     df, rows = vec_df
     out = similarity.lsh_bucketed_pairs(
         df, "vec_id", "embedding", len(rows[0][1]), threshold=0.95, n_planes=4
@@ -260,9 +259,6 @@ def test_embedding_near_dups_lsh_is_bucket_join(spark, vec_df):
         for p in similarity.similarity_pairs(df, "vec_id", "embedding", 0.95).collect()
     }
     assert pairs <= brute and pairs
-
-    with pytest.raises(ValueError, match="refused"):
-        similarity.similarity_pairs(df, "vec_id", "embedding", 0.98, max_rows=3)
 
 
 def test_dedup_by_key_keeps_newest(spark):
@@ -739,11 +735,29 @@ def test_cosine_zero_vector_is_zero_not_nan(spark):
 
 def test_lsh_and_ivf_tolerate_bad_vectors(spark):
     df = spark.createDataFrame(
-        [(1, [1.0] * 8), (2, [1.0] * 8), (3, None), (4, [1.0, 2.0])],
+        [(1, [1.0] * 8), (2, [1.0] * 8), (3, None), (4, [1.0, 2.0]), (5, [1.0, 2.0])],
         "vec_id long, embedding array<double>",
     )
     pairs = {(r.id_a, r.id_b) for r in similarity.lsh_bucketed_pairs(df, "vec_id", "embedding", 8, 0.9, n_planes=2).collect()}
     assert pairs == {(1, 2)}  # bad rows dropped, no worker crash
+    exact = {(r.id_a, r.id_b) for r in similarity.similarity_pairs(df, "vec_id", "embedding", 0.9).collect()}
+    assert exact == {(1, 2), (4, 5)}  # null dropped; only same-length vectors pair
+
+
+@pytest.mark.parametrize("sf", ["sf0.01", "sf0.1"])
+def test_testdata_cosines_clear_query_thresholds(sf):
+    """numpy (BLAS), Spark and DuckDB sum a dot product in different
+    orders, so a cosine within float64 rounding of a threshold could
+    fall on either side. Every testdata pair must clear the thresholds
+    the queries use (greedy_topics 0.3; similar_pairs, lsh_ann_pairs,
+    daily_topics 0.4) by far more than that rounding."""
+    import pyarrow.parquet as pq
+
+    vecs = pq.read_table(f"/root/testdata/{sf}/embeddings.parquet").column("embedding").to_pylist()
+    mat, norms = similarity._stack(vecs)
+    sims = similarity._cosines(mat, mat, norms)[np.triu_indices(len(mat), 1)]
+    for threshold in (0.3, 0.4):
+        assert np.abs(sims - threshold).min() > 1e-9
 
 
 def test_session_first_last_by_event_time(spark):

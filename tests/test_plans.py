@@ -119,12 +119,19 @@ def test_status_claim_is_broadcast(spark):
 
 
 def test_embedding_near_dups_no_nested_loop(spark):
-    from readability_scanner_spark.operators.similarity import lsh_bucketed_pairs
+    from readability_scanner_spark.operators.similarity import lsh_bucketed_pairs, similarity_pairs
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     dim = len(emb.select("embedding").first()[0])
     plan = _plan(lsh_bucketed_pairs(emb, "vec_id", "embedding", dim, threshold=0.95, n_planes=4))
     assert "CartesianProduct" not in plan
+    plan = _plan(similarity_pairs(emb, "vec_id", "embedding", 0.4))
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    # exact pairs are scored inside one grouped pandas stage: no self-join
+    # at all (a size-equality theta join plans as a BroadcastHashJoin on
+    # size, which over one vector length is the full product)
+    assert "Join" not in plan and "FlatMapGroupsInPandas" in plan
 
 
 def test_dedup_pipeline_never_goes_quadratic(spark):
