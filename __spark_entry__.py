@@ -18,8 +18,10 @@ from collections.abc import Callable, Iterable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 # word/sentence regexes shared by Spark and DuckDB sides. WORD_PAT is
 # the engine-stable unicode word-run class (functions/wordchars.py):
@@ -106,13 +108,21 @@ def _ensure_package_on_workers(spark: SparkSession) -> None:
 def _t(spark: SparkSession, sf_dir: str, name: str, spread: bool = False) -> DataFrame:
     _ensure_package_on_workers(spark)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    # the schema comes from the file's footer, read here on the driver:
+    # spark.read.parquet(path) alone starts a Spark job to infer it.
+    # prefer_timestamp_ntz keeps a tz-less timestamp TimestampNTZ, as
+    # Spark's own inference does (the default maps it to TimestampType)
+    schema = from_arrow_schema(pq.read_schema(path), prefer_timestamp_ntz=True)
+    df = spark.read.schema(schema).parquet(path)
     if spread:
         # the testdata parquet files are single-row-group (unsplittable:
         # the whole scan lands on ONE task); heavy per-row compute must
-        # repartition first or it runs single-threaded — at production
-        # scale this is the "one giant input file" guard
-        df = df.repartition(int(spark.conf.get("spark.sql.shuffle.partitions")))
+        # repartition first or it runs single-threaded. One round-robin
+        # partition per core: a Python-UDF task costs ~0.25 s fixed
+        # whatever its rows (measured on a 4-core host), so partitions
+        # beyond one per core only add tasks at small scale
+        df = df.repartition(spark.sparkContext.defaultParallelism)
     return df
 
 
@@ -307,14 +317,20 @@ def q_similar_pairs(spark, sf_dir):
     return similarity_pairs(_t(spark, sf_dir, "embeddings"), "vec_id", "embedding", 0.4)
 
 
+def _query_vec(spark, sf_dir):
+    """The knn query vector, vec_id 0's embedding, from the unspread
+    reader: parquet pushdown finds the row in one job, with no shuffle
+    ahead of it."""
+    return _t(spark, sf_dir, "embeddings").where(F.col("vec_id") == 0).select("embedding").first()[0]
+
+
 def q_knn_topk(spark, sf_dir):
     from readability_scanner_spark.operators.similarity import knn_topk
 
     emb = _t(spark, sf_dir, "embeddings", spread=True)
-    query_vec = emb.where(F.col("vec_id") == 0).select("embedding").first()[0]
-    return knn_topk(emb.where(F.col("vec_id") != 0), "vec_id", "embedding", query_vec, k=10).select(
-        "vec_id"
-    )
+    return knn_topk(
+        emb.where(F.col("vec_id") != 0), "vec_id", "embedding", _query_vec(spark, sf_dir), k=10
+    ).select("vec_id")
 
 
 def q_orders_topk(spark, sf_dir):
@@ -583,10 +599,9 @@ def q_ivf_knn(spark, sf_dir):
     from readability_scanner_spark.operators.similarity import ivf_knn
 
     emb = _t(spark, sf_dir, "embeddings", spread=True)
-    query_vec = emb.where(F.col("vec_id") == 0).select("embedding").first()[0]
     return ivf_knn(
         emb.where(F.col("vec_id") != 0), "vec_id", "embedding",
-        [float(x) for x in query_vec], k=10, n_centroids=8, n_probe=4,
+        [float(x) for x in _query_vec(spark, sf_dir)], k=10, n_centroids=8, n_probe=4,
     ).select("vec_id")
 
 

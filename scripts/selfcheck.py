@@ -2,16 +2,23 @@
 Spark at sf0.01 and compare against oracle_sql() in DuckDB — row count,
 column names, and order-insensitive values (doubles to 1e-6 rel tol).
 
-Usage: python scripts/selfcheck.py [--exact] [sf_dir] [query ...]
+Usage: python scripts/selfcheck.py [--exact] [--json PATH] [sf_dir] [query ...]
 
 --exact mimics the driver's value-hash bar: cells must match exactly,
 including numeric TYPE (int 5 vs double 5.0 is a mismatch — the driver
 hashes representations, not tolerant floats). Default mode keeps the
 1e-6 tolerance for quick semantic iteration.
+
+--json PATH also writes, per query, the seconds of its construction (the
+``q_*`` call, ``build_s``), of its collect (``run_s``) and of its oracle
+(``oracle_s``), and the Spark jobs each of the first two started, so
+runs can be compared over time. The text output is the same with or
+without it.
 """
 
 from __future__ import annotations
 
+import json
 import math
 import os
 import sys
@@ -72,12 +79,27 @@ def rows_match(a, b):
     )
 
 
+def count_jobs(ctx, timing: dict, name: str) -> None:
+    """Add the job counts of ``name``'s build and run job groups to its
+    timings. Read right after the query, once the listener bus has caught
+    up: the status tracker keeps only the newest jobs of a session."""
+    ctx._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = ctx.statusTracker().getJobIdsForGroup
+    timing["build_jobs"] = len(jobs(f"build-{name}"))
+    timing["run_jobs"] = len(jobs(f"run-{name}"))
+
+
 def main() -> None:
     global EXACT
     args = sys.argv[1:]
     if "--exact" in args:  # accept the flag in any position
         EXACT = True
         args = [a for a in args if a != "--exact"]
+    json_path = None
+    if "--json" in args:
+        i = args.index("--json")
+        json_path = args[i + 1]
+        del args[i : i + 2]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
     # data-derived oracles (LSH planes, IVF centroids) must read the SAME
@@ -95,29 +117,42 @@ def main() -> None:
         print(f"FAIL  unknown query name(s): {sorted(unknown)}")
         spark.stop()
         sys.exit(2)
+    ctx = spark.sparkContext
+    timings: dict[str, dict] = {}
     passed = failed = rows_only = 0
     for name, fn in queries.items():
         if only and name not in only:
             continue
+        timings[name] = timing = {}
         t0 = time.time()
         try:
+            ctx.setJobGroup(f"build-{name}", name)
             sdf = fn(spark, sf_dir)
+            timing["build_s"] = time.time() - t0
+            ctx.setJobGroup(f"run-{name}", name)
             s_cols = sdf.columns
             s_rows = [tuple(r) for r in sdf.collect()]
         except Exception as e:
             print(f"FAIL  {name}: spark error: {e}")
             failed += 1
             continue
+        finally:
+            ctx.setLocalProperty("spark.jobGroup.id", None)
+            ctx.setLocalProperty("spark.job.description", None)
         spark_s = time.time() - t0
+        timing["run_s"] = spark_s - timing["build_s"]
+        if json_path:
+            count_jobs(ctx, timing, name)
         if name not in oracles:
             print(f"rows  {name}: {len(s_rows)} rows (spark {spark_s:.1f}s, no oracle)")
             rows_only += 1
             continue
+        t1 = time.time()
         try:
             res = con.execute(oracles[name])
             d_cols = [d[0] for d in res.description]
             d_rows = res.fetchall()
-            oracle_s = time.time() - t0 - spark_s
+            timing["oracle_s"] = oracle_s = time.time() - t1
         except Exception as e:
             print(f"FAIL  {name}: duckdb error: {e}")
             failed += 1
@@ -150,6 +185,9 @@ def main() -> None:
             print(f"FAIL  entry(): {e}")
             failed += 1
     print(f"\n{passed} ok, {failed} failed, {rows_only} rows-only")
+    if json_path:
+        with open(json_path, "w") as fh:
+            json.dump({"sf_dir": sf_dir, "exact": EXACT, "queries": timings}, fh, indent=1)
     spark.stop()
     sys.exit(1 if failed else 0)
 

@@ -84,6 +84,18 @@ def test_pipeline_single_python_stage(spark):
     assert "ArrowEvalPython" not in plan
 
 
+def test_spread_reader_has_one_partition_per_core(spark):
+    """_t's spread repartitions to the session's cores, not to
+    spark.sql.shuffle.partitions: a Python-UDF task has a fixed cost, so
+    tasks beyond one per core only add it. The test session has 4 cores
+    and 8 shuffle partitions, so the pin tells the two apart."""
+    import __spark_entry__ as entry
+
+    spread = entry._t(spark, SF, "documents", spread=True)
+    assert spread.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    assert spark.sparkContext.defaultParallelism != int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
 def test_semi_join_planned(spark):
     cust = spark.read.parquet(f"{SF}/customer.parquet")
     orders = spark.read.parquet(f"{SF}/orders.parquet").where("o_totalprice > 450000")

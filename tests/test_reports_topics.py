@@ -134,11 +134,11 @@ def test_daily_topics_query_pools_every_row_past_seven_days(spark, tmp_path):
 
 
 def test_daily_topics_query_builds_without_a_spark_job(spark, tmp_path):
-    """Constructing q_daily_topics runs no Spark job of its own: the pool
-    is the whole table, so there is no row count, ts span or anchor to
-    fetch first. The one job it may start is the parquet reader's schema
-    read, which reading the table alone starts too. The collect after it
-    does run jobs, so the probe is live."""
+    """Constructing q_daily_topics runs no Spark job: the pool is the
+    whole table, so there is no row count, ts span or anchor to fetch
+    first, and the table reader takes its schema from the parquet footer.
+    The collect after it does run jobs, so the probe is live; the counts
+    are read after it, once the listener bus has caught up."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -162,12 +162,13 @@ def test_daily_topics_query_builds_without_a_spark_job(spark, tmp_path):
         sc.setJobGroup("daily-topics-build", "construction")
         query = entry.q_daily_topics(spark, str(tmp_path))
         sc.setJobGroup("daily-topics-run", "collect")
-        assert len(jobs("daily-topics-build")) == len(jobs("daily-topics-read")) <= 1
         assert [t.article_count for t in query.collect()] == [20]
-        assert jobs("daily-topics-run")
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(jobs("daily-topics-read")) == len(jobs("daily-topics-build")) == 0
+    assert jobs("daily-topics-run")
 
 
 # --- summary / headline enrichment (LLM-seam analog) ------------------------------
