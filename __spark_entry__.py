@@ -18,6 +18,7 @@ from collections.abc import Callable, Iterable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+import pyarrow.dataset as pa_ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -105,16 +106,20 @@ def _ensure_package_on_workers(spark: SparkSession) -> None:
     _PKG_SHIPPED.add(key)
 
 
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """A reader over ``path``, one parquet file or a Spark-written
+    directory, with the schema read from the parquet footer here on the
+    driver: spark.read.parquet(path) alone starts a Spark job to infer
+    it. prefer_timestamp_ntz keeps a tz-less timestamp TimestampNTZ, as
+    Spark's own inference does (the default maps it to TimestampType)."""
+    schema = from_arrow_schema(pa_ds.dataset(path).schema, prefer_timestamp_ntz=True)
+    return spark.read.schema(schema).parquet(path)
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str, spread: bool = False) -> DataFrame:
     _ensure_package_on_workers(spark)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    path = f"{sf_dir}/{name}.parquet"
-    # the schema comes from the file's footer, read here on the driver:
-    # spark.read.parquet(path) alone starts a Spark job to infer it.
-    # prefer_timestamp_ntz keeps a tz-less timestamp TimestampNTZ, as
-    # Spark's own inference does (the default maps it to TimestampType)
-    schema = from_arrow_schema(pq.read_schema(path), prefer_timestamp_ntz=True)
-    df = spark.read.schema(schema).parquet(path)
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if spread:
         # the testdata parquet files are single-row-group (unsplittable:
         # the whole scan lands on ONE task); heavy per-row compute must
@@ -551,8 +556,9 @@ def q_ngram_jaccard(spark, sf_dir):
 def q_dedup_clusters(spark, sf_dir):
     """Pairs → connected components → canonical winner: the cluster-
     resolution step between "near-dup pairs above threshold" and "which
-    rows survive". Components via iterative min-label propagation
-    (O(diameter) shuffles); canonical = longest text, then smallest id."""
+    rows survive". Components = min reachable id, from one union-find
+    pass over the verified pairs; canonical = longest text, then
+    smallest id."""
     from readability_scanner_spark.operators.dedup import (
         minhash_lsh_candidates,
         ngram_jaccard_verify,
@@ -998,7 +1004,7 @@ def q_full_report_agg(spark, sf_dir):
     )
 
     side = _fullreport_sidecar(spark, sf_dir)
-    rep = readability_report(spark.read.parquet(side), "conv_id")
+    rep = readability_report(_read_parquet(spark, side), "conv_id")
     return rep.select(
         "grp",
         "documents",
@@ -1690,10 +1696,10 @@ def _dedup_pipeline_oracle(threshold: float = 0.5) -> str:
 def _dedup_clusters_oracle(threshold: float = 0.5) -> str:
     """Cluster-resolution oracle: the dedup-pipeline pair recompute as a
     CTE, then TRANSITIVE CLOSURE via a recursive CTE (component = min
-    reachable id — exactly what min-label propagation converges to),
-    then the canonical pick (longest text, then smallest id) as a window.
-    Fully independent of the Spark iteration: closure by set-recursion,
-    not by label rounds."""
+    reachable id, the root union-find links each component under), then
+    the canonical pick (longest text, then smallest id) as a window.
+    Fully independent of the Spark side: closure by set-recursion, not
+    by linking roots."""
     pairs = _dedup_pipeline_oracle(threshold)
     return f"""
         WITH RECURSIVE pairs AS ({pairs}),

@@ -7,10 +7,10 @@ on purpose, with the job count it takes at sf0.001; every other query
 must build with none. An entry whose query starts fewer jobs than listed,
 or that names no query, is stale and fails too.
 
-``__spark_entry__._t`` makes the zero possible: it reads each table's
-schema from the parquet footer instead of letting Spark run a job to
-infer it. The schema tests pin that the footer read gives Spark's own
-schema.
+``__spark_entry__._read_parquet`` makes the zero possible: it reads
+the schema of each table, and of the stats sidecar directory, from the
+parquet footer instead of letting Spark run a job to infer it. The
+schema tests pin that the footer read gives Spark's own schema.
 """
 
 import glob
@@ -27,12 +27,11 @@ CONSTRUCTION_JOBS = {
     "minhash_candidates": (3, "dedup._checkpoint_sized counts the signature checkpoint"),
     "simhash_near_dups": (3, "dedup._checkpoint_sized counts the fingerprint checkpoint"),
     "dedup_pipeline": (12, "the minhash checkpoint count plus ngram_jaccard_verify's checkpoints"),
-    "dedup_clusters": (33, "connected_components: one job per label-propagation round plus checkpoints"),
+    "dedup_clusters": (12, "the minhash and verify checkpoint counts; connected_components starts none"),
     "cms_heavy_hitters": (4, "cms_estimate's depth/width probe aggregates the sketch"),
     "knn_topk": (1, "fetches the query vector"),
     "ivf_knn": (3, "fetches the query vector, then collects train_ivf_centroids' sample"),
     "lsh_ann_pairs": (1, "reads one embedding for the vector length"),
-    "full_report_agg": (1, "Spark infers the schema of the stats sidecar directory it reads"),
 }
 
 
@@ -68,6 +67,9 @@ def test_table_reader_schema_is_sparks_own(spark):
     for path in sorted(glob.glob(f"{SF}/*.parquet")):
         name = os.path.basename(path)[: -len(".parquet")]
         assert entry._t(spark, SF, name).schema == spark.read.parquet(path).schema, name
+    # the stats sidecar is a Spark-written directory: part files beside _SUCCESS
+    side = entry._fullreport_sidecar(spark, SF)
+    assert entry._read_parquet(spark, side).schema == spark.read.parquet(side).schema
 
 
 def test_table_reader_keeps_ntz_apart_from_ltz(spark, tmp_path):

@@ -288,12 +288,13 @@ def _union_find_components(pairs):
 
 
 def test_connected_components_shapes(spark):
-    """Chain (forces multiple propagation rounds), cycle, and two
-    separate components — component id must be the min reachable node."""
+    """Chain, cycle, and two separate components — component id must be
+    the min reachable node. A pair with a null end links nothing."""
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5),      # chain 1-5
          (10, 11), (11, 12), (12, 10),        # cycle
-         (20, 21)],                            # pair
+         (20, 21),                            # pair
+         (30, None), (None, 1)],              # null ends
         "id_a long, id_b long",
     )
     got = {r.node: r.component for r in dedup.connected_components(edges, "id_a", "id_b").collect()}
@@ -314,19 +315,33 @@ def test_connected_components_shapes(spark):
             for r in dedup.connected_components(edges, "id_a", "id_b").collect()
         }
         assert got == _union_find_components(pairs)
-        if pairs is chain:  # the default max_iterations converges on it
+        if pairs is chain:
             assert set(got.values()) == {1}
 
 
-def test_connected_components_nonconvergence_raises(spark):
-    """A graph whose diameter exceeds max_iterations must fail loudly —
-    silently returning intermediate labels breaks the min-reachable-id
-    contract (and exact-oracle parity)."""
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 8)], "id_a long, id_b long"
-    )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components(chain, "id_a", "id_b", max_iterations=2)
+def test_connected_components_deep_graph_in_one_pass(spark):
+    """A 500-node chain (diameter 499) plus a 200-leaf star, edges
+    shuffled and pointing both ways: one component per shape, each
+    labelled by its min id. Building the frame starts no Spark job."""
+    rng = random.Random(13)
+    pairs = [(i, i + 1) for i in range(1000, 1499)]
+    pairs += [(5000, leaf) for leaf in range(5001, 5201)]
+    pairs = [(b, a) if rng.random() < 0.5 else (a, b) for a, b in pairs]
+    rng.shuffle(pairs)
+    edges = spark.createDataFrame(pairs, "id_a long, id_b long")
+    sc = spark.sparkContext
+    sc.setJobGroup("cc-construct", "connected_components")
+    try:
+        comps = dedup.connected_components(edges, "id_a", "id_b")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    got = {r.node: r.component for r in comps.collect()}
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup("cc-construct") == []
+    assert got == _union_find_components(pairs)
+    assert sorted(set(got.values())) == [1000, 5000]
+    assert len(got) == 701
 
 
 def test_resolve_duplicate_clusters_canonical(spark):
@@ -1279,32 +1294,6 @@ def test_wav_parser_truncated_fmt_and_trailing_data_garbage():
     tampered = wav + b"data" + _s.pack("<I", 2) + b"\x00\x00"
     assert multimodal.parse_wav_info(tampered) == multimodal.parse_wav_info(wav)
     assert multimodal.wav_audio_stats(tampered) == multimodal.wav_audio_stats(wav)
-
-
-def test_connected_components_single_action_per_iteration(spark):
-    """r4 rework: the changed-flag rides the label aggregate, so each
-    iteration costs ONE driver action (the old shape paid a
-    materializing count() PLUS a join-based probe -> 2+ actions/round).
-    AQE splinters actions into many engine jobs, so measure with AQE
-    off: triangle+pair converges in 2 iterations -> 2 iteration actions
-    + the final lineage-free localCheckpoint + one setup job = at most
-    4 jobs (the old shape measured 7+ here)."""
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        sc = spark.sparkContext
-        pairs = spark.createDataFrame(
-            [(1, 2), (2, 3), (1, 3), (10, 11)], "a long, b long"
-        )
-        sc.setJobGroup("cc-action-count", "probe")
-        out = dedup.connected_components(pairs, "a", "b", checkpoint_every=0)
-        sc.setJobGroup("cc-after", "rest")
-        jobs = sc.statusTracker().getJobIdsForGroup("cc-action-count")
-        assert len(jobs) <= 4, f"{len(jobs)} jobs for 2 iterations"
-        assert sorted((r["node"], r["component"]) for r in out.collect()) == [
-            (1, 1), (2, 1), (3, 1), (10, 10), (11, 10),
-        ]
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
 
 
 def test_compact_parquet_small_files(spark, tmp_path):
