@@ -550,7 +550,7 @@ def q_ngram_jaccard(spark, sf_dir):
 
     # deterministic quadratic guard (limit() without order is not stable)
     docs = _t(spark, sf_dir, "documents", spread=True).where(F.col("doc_id") < 200)
-    return ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.5)
+    return ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.5).orderBy("id_a", "id_b")
 
 
 def q_dedup_clusters(spark, sf_dir):
@@ -568,7 +568,9 @@ def q_dedup_clusters(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents", spread=True)
     cand = minhash_lsh_candidates(docs, "doc_id", "text")
     pairs = ngram_jaccard_verify(cand, docs, "doc_id", "text", threshold=0.5)
-    return resolve_duplicate_clusters(pairs, docs, "doc_id", "text")
+    # the (doc_id, length) side runs no Python UDF, so a spread read
+    # would only add a round-robin shuffle under its join
+    return resolve_duplicate_clusters(pairs, _t(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 def q_dedup_pipeline(spark, sf_dir):
@@ -582,7 +584,7 @@ def q_dedup_pipeline(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents", spread=True)
     cand = minhash_lsh_candidates(docs, "doc_id", "text")
-    return ngram_jaccard_verify(cand, docs, "doc_id", "text", threshold=0.5)
+    return ngram_jaccard_verify(cand, docs, "doc_id", "text", threshold=0.5).orderBy("id_a", "id_b")
 
 
 def q_lsh_ann_pairs(spark, sf_dir):

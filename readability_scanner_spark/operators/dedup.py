@@ -74,26 +74,6 @@ def _capped_memo(fn):
     return cached
 
 
-def _checkpoint_sized(df: DataFrame, fanout: int, cap: int) -> tuple[DataFrame, bool]:
-    """Materialize ``df`` once and size the join built from it: returns
-    the checkpointed frame and whether ``count * fanout`` build rows fit
-    under ``cap``.
-
-    The near-dup operators self-join a small proxy table (signatures,
-    candidate pairs); without the checkpoint every join side rebuilds
-    the whole upstream lineage, tokenizing and hashing each document
-    once per side. The count both materializes the checkpoint and sizes
-    the broadcast decision from real rows: the planner's estimate for a
-    checkpoint is carried over from its origin plan (compressed source
-    bytes scaled through projections) and says nothing about the rows an
-    exploded build side holds. Below the cap the caller broadcasts the
-    build side, which keeps skewed bucket keys off one task (the stream
-    side stays evenly partitioned whatever the key); above it the
-    planner and AQE choose the join."""
-    df = df.localCheckpoint(eager=False)
-    return df, df.count() * fanout <= cap
-
-
 # --- exact dedup -----------------------------------------------------------------
 
 def content_hash_cols(text_col: str) -> tuple:
@@ -216,13 +196,12 @@ def minhash_lsh_candidates(
             f"bands={bands} must divide n_hashes={n_hashes} (1 <= bands <= n_hashes)"
         )
     rows = n_hashes // bands
-    # the signatures are the small proxy table (n_docs x n_hashes longs);
-    # the build side is the banded table, bands rows per doc
-    sigs, small = _checkpoint_sized(
-        minhash_signatures(df, id_col, text_col, n_hashes, shingle_n, seed),
-        bands,
-        KEYED_BROADCAST_MAX_ROWS,
-    )
+    # the signatures are the small proxy table (n_docs x n_hashes longs),
+    # materialized once: both join sides read it, and without the
+    # checkpoint the stream side would run the MapInPandas a second time
+    sigs = minhash_signatures(
+        df, id_col, text_col, n_hashes, shingle_n, seed
+    ).localCheckpoint(eager=False)
     banded = sigs.select(
         id_col,
         F.explode(
@@ -244,9 +223,8 @@ def minhash_lsh_candidates(
     # the distinct stays — banding duplicates cannot be filtered from
     # bucket hashes alone, and candidate volume is bounded by the tiny
     # bucket sizes
-    build = F.broadcast(b) if small else b
     return (
-        a.join(build, ["band", "bucket"])
+        a.join(b, ["band", "bucket"])
         .where(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .distinct()
@@ -255,18 +233,6 @@ def minhash_lsh_candidates(
 
 
 # --- SimHash ---------------------------------------------------------------------------
-
-# broadcast cap for the blocked simhash self-join build side (rows):
-# its rows are three LONGS (~40 B/row in the hashed relation), so 10M
-# rows ~ 400 MB — well under Spark's 8 GB / 512M-row broadcast limits;
-# larger inputs use a shuffled join instead
-SIMHASH_BROADCAST_MAX_ROWS = 10_000_000
-# broadcast cap for build sides that carry CALLER-SUPPLIED id values
-# (minhash banded rows, jaccard candidate pairs): ids can be wide
-# strings, so the per-row sizing argument above does not apply — cap
-# lower (2M rows ~ a few hundred MB even at ~100 B/id; r6 review)
-KEYED_BROADCAST_MAX_ROWS = 2_000_000
-
 
 def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 64) -> DataFrame:
     """64-bit SimHash per document (token-hash sign voting). Token hash is
@@ -385,13 +351,13 @@ def simhash_near_dups(df: DataFrame, id_col: str, text_col: str, max_hamming: in
     * the signature table is materialized once (localCheckpoint — n_docs
       x 16 bytes, the guide-§8 "small proxy" shape) so the self-join's
       build side does not rebuild the whole MapInPandas lineage: the
-      previous plan tokenized and hashed every document TWICE. The join
-      stays BROADCAST on the blocked build side deliberately: the group
-      keys are heavily skewed (measured 17k-doc buckets at sf1.0 under
-      single-slice blocking), and a shuffled join would send each
-      bucket's quadratic pair generation to one task (measured 2.5x
-      slower); with a broadcast build the stream side stays evenly
-      partitioned regardless of key.
+      previous plan tokenized and hashed every document TWICE. The
+      planner picks the join: while the build side's estimate is under
+      the auto-broadcast threshold (every corpus here) it broadcasts it,
+      so the skewed group keys (measured 17k-doc buckets at sf1.0 under
+      single-slice blocking) never land one bucket's quadratic pair
+      generation on one task; above it, AQE's skew-join split divides
+      the hot buckets.
     * cross-group duplicate candidates are dropped by a canonical-group
       filter instead of ``.distinct()``: a pair is emitted only from its
       FIRST agreeing group (for all j < i the pair must disagree on
@@ -403,12 +369,10 @@ def simhash_near_dups(df: DataFrame, id_col: str, text_col: str, max_hamming: in
       verified pairs.
     """
     groups = _simhash_groups(max_hamming)
-    hashed, small = _checkpoint_sized(
-        simhash(df, id_col, text_col), len(groups), SIMHASH_BROADCAST_MAX_ROWS
-    )
+    hashed = simhash(df, id_col, text_col).localCheckpoint(eager=False)
     # group keys are packed into ONE long — slices compacted, group index
     # in the low bits — so the join key is a single LongType column and
-    # the broadcast build becomes a LongHashedRelation (direct long-keyed
+    # a broadcast build becomes a LongHashedRelation (direct long-keyed
     # map, measurably cheaper per probe than a composite-key UnsafeRow
     # map on the candidate volumes involved). Packing always fits: >= 2
     # groups means slice widths sum to <= 44 bits, and the single-group
@@ -453,9 +417,8 @@ def simhash_near_dups(df: DataFrame, id_col: str, text_col: str, max_hamming: in
     group_idx = (
         F.col("bk").bitwiseAND(F.lit((1 << gbits) - 1)) if gbits else F.lit(0)
     )
-    build = F.broadcast(b) if small else b
     return (
-        a.join(build, ["bk"])
+        a.join(b, ["bk"])
         .where(F.col("id_a") < F.col("id_b"))
         .withColumn("hamming", F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))))
         .where(F.col("hamming") <= max_hamming)
@@ -479,7 +442,8 @@ def ngram_jaccard_pairs(
     """Exact n-gram Jaccard over candidate pairs. Shingle sets are built
     JVM-side (split + transform + array_distinct), intersection via
     array_intersect — no Python. Quadratic: use after LSH candidate cut
-    at scale; standalone form here for small inputs/oracle checks."""
+    at scale; standalone form here for small inputs/oracle checks.
+    Result rows are unordered."""
     docs = df.select(
         F.col(id_col).alias("doc_id"), _dedup_toks_col(text_col).alias("_dt")
     ).select(F.col("doc_id"), _grams_from_toks(F.col("_dt"), shingle_n).alias("grams"))
@@ -491,7 +455,8 @@ def ngram_jaccard_pairs(
 def _jaccard_at_least(pairs: DataFrame, threshold: float) -> DataFrame:
     """Shared tail of the Jaccard operators: (id_a, id_b, ga, gb) gram-set
     pairs → (id_a, id_b, jaccard) at or above ``threshold``, rounded to 4
-    places, ordered by ids."""
+    places. Unordered: a caller that returns the pairs sorts them, and
+    one that feeds them on (cluster resolution) pays no sort."""
     inter = F.size(F.array_intersect(F.col("ga"), F.col("gb")))
     union = F.size(F.array_union(F.col("ga"), F.col("gb")))
     return (
@@ -501,7 +466,6 @@ def _jaccard_at_least(pairs: DataFrame, threshold: float) -> DataFrame:
         pairs.select("id_a", "id_b", F.try_divide(inter, union).alias("jaccard"))
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
-        .orderBy("id_a", "id_b")
     )
 
 
@@ -541,34 +505,27 @@ def ngram_jaccard_verify(
     equi-joins on the pair ids, exact n-gram Jaccard per surviving row,
     never an all-pairs product. candidates must carry (id_a, id_b).
 
-    r6: the gram arrays are built ONLY for ids that appear in some
-    candidate pair (semi-join prune — at scale the candidate id set is
-    tiny relative to the corpus by the blocker's contract) and
-    materialized once (localCheckpoint): the previous form re-ran the
-    full-corpus tokenize+gram lineage once per join side. The candidate
-    pairs are checkpointed too — they now feed three consumers (the id
-    set and both joins). Same pairs out: the joins are inner on
-    candidate ids, so grams of non-candidate docs were never used."""
-    # while the pair set is small, broadcast it — the gram side then
-    # streams with no shuffle
-    cand, small = _checkpoint_sized(
-        candidates.select("id_a", "id_b"), 1, KEYED_BROADCAST_MAX_ROWS
-    )
+    The gram arrays are built ONLY for ids that appear in some candidate
+    pair (semi-join prune — at scale the candidate id set is tiny
+    relative to the corpus by the blocker's contract). Both joins key
+    the grams by ``_gid``, so Spark builds their exchange once and the
+    second join reuses it: the full-corpus tokenize+gram lineage runs
+    once. The candidate pairs are materialized once (localCheckpoint) —
+    they feed three consumers (the id set and both joins). Same pairs
+    out: the joins are inner on candidate ids, so grams of non-candidate
+    docs were never used. Result rows are unordered."""
+    cand = candidates.select("id_a", "id_b").localCheckpoint(eager=False)
     ids = (
         cand.select(F.col("id_a").alias("_gid"))
         .union(cand.select(F.col("id_b").alias("_gid")))
         .distinct()
     )
-    ids_b = F.broadcast(ids) if small else ids
-    pruned = docs.join(ids_b, docs[id_col] == ids_b["_gid"], "left_semi")
-    grams = (
-        pruned.select(F.col(id_col).alias("_gid"), _dedup_toks_col(text_col).alias("_dt"))
-        .select(F.col("_gid"), _grams_from_toks(F.col("_dt"), shingle_n).alias("_g"))
-        .localCheckpoint(eager=False)
-    )
-    cand_b = F.broadcast(cand) if small else cand
+    pruned = docs.join(ids, docs[id_col] == ids["_gid"], "left_semi")
+    grams = pruned.select(
+        F.col(id_col).alias("_gid"), _dedup_toks_col(text_col).alias("_dt")
+    ).select(F.col("_gid"), _grams_from_toks(F.col("_dt"), shingle_n).alias("_g"))
     joined = (
-        cand_b.join(grams.withColumnRenamed("_g", "ga"), F.col("id_a") == F.col("_gid"))
+        cand.join(grams.withColumnRenamed("_g", "ga"), F.col("id_a") == F.col("_gid"))
         .drop("_gid")
         .join(grams.withColumnRenamed("_g", "gb"), F.col("id_b") == F.col("_gid"))
         .drop("_gid")
@@ -659,7 +616,7 @@ def connected_components(pairs: DataFrame, src: str, dst: str) -> DataFrame:
     any task retry), no graph depth bounds it, and building the frame
     starts no Spark job. A pair with a null end links nothing. One group
     suffices because the blocker upstream bounds the pair set: 2M random
-    edges (KEYED_BROADCAST_MAX_ROWS) take ~8 s on one core."""
+    edges take ~8 s on one core."""
     node_type = pairs.schema[src].dataType.simpleString()
 
     def components(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -24,10 +24,15 @@ import __spark_entry__ as entry
 SF = "/root/testdata/sf0.001"
 
 CONSTRUCTION_JOBS = {
-    "minhash_candidates": (3, "dedup._checkpoint_sized counts the signature checkpoint"),
-    "simhash_near_dups": (3, "dedup._checkpoint_sized counts the fingerprint checkpoint"),
-    "dedup_pipeline": (12, "the minhash checkpoint count plus ngram_jaccard_verify's checkpoints"),
-    "dedup_clusters": (12, "the minhash and verify checkpoint counts; connected_components starts none"),
+    # localCheckpoint(eager=False) under AQE runs the query stages below
+    # it when called: a signature checkpoint runs the spread
+    # repartition's shuffle stage (over the plain reader it starts none),
+    # and verify's candidate checkpoint runs those of the MinHash
+    # candidate plan
+    "minhash_candidates": (1, "the signature checkpoint runs the spread repartition's shuffle stage"),
+    "simhash_near_dups": (1, "the fingerprint checkpoint runs the spread repartition's shuffle stage"),
+    "dedup_pipeline": (5, "the signature checkpoint, then the candidate plan under verify's checkpoint"),
+    "dedup_clusters": (5, "as dedup_pipeline; connected_components starts none"),
     "cms_heavy_hitters": (4, "cms_estimate's depth/width probe aggregates the sketch"),
     "knn_topk": (1, "fetches the query vector"),
     "ivf_knn": (3, "fetches the query vector, then collects train_ivf_centroids' sample"),

@@ -165,11 +165,12 @@ def test_dedup_pipeline_never_goes_quadratic(spark):
 def test_simhash_plan_shape(spark):
     """r6 pins: the blocked self-join must (a) read ONE materialized
     signature table on both sides (no second MapInPandas lineage), (b)
-    stay a broadcast join (skewed group keys make a shuffled join
-    quadratic on one task), (c) carry no distinct aggregate (the
-    canonical-group filter dedups), and (d) keep an exchange between the
-    join and the final sort (range sampling must not re-execute the
-    join)."""
+    plan as a broadcast join on these inputs, whose build-side estimate
+    sits far under the auto-broadcast threshold (a shuffled join of
+    skewed group keys is quadratic on one task), (c) carry no distinct
+    aggregate (the canonical-group filter dedups), and (d) keep an
+    exchange between the join and the final sort (range sampling must
+    not re-execute the join)."""
     from readability_scanner_spark.operators.dedup import simhash_near_dups
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
@@ -187,8 +188,9 @@ def test_simhash_plan_shape(spark):
 
 def test_minhash_plan_shape(spark):
     """The banded self-join reads ONE materialized signature table on
-    both sides (no second MapInPandas lineage) and broadcasts its build
-    side while under the cap."""
+    both sides (no second MapInPandas lineage), and the planner
+    broadcasts its build side on these inputs, whose estimate sits far
+    under the auto-broadcast threshold."""
     from readability_scanner_spark.operators.dedup import minhash_lsh_candidates
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
@@ -198,35 +200,29 @@ def test_minhash_plan_shape(spark):
 
 
 @pytest.mark.parametrize("op", ["minhash", "simhash", "jaccard_verify"])
-def test_over_cap_falls_back_to_shuffled_join(spark, monkeypatch, op):
-    """Past its broadcast cap each near-dup join must plan without a
-    broadcast build side and still return the broadcast path's pairs.
-    The planner's own auto-broadcast is switched off for the capped run:
-    its estimate of a checkpoint comes from the origin plan's compressed
-    source bytes, which sit under the threshold on these tiny inputs."""
+def test_shuffled_join_returns_the_broadcast_pairs(spark, op):
+    """With the planner's auto-broadcast switched off, as for a build
+    side above its threshold, each near-dup join must plan without a
+    broadcast build side and still return the broadcast plan's pairs."""
     from readability_scanner_spark.operators import dedup
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     if op == "minhash":
-        cap = "KEYED_BROADCAST_MAX_ROWS"
         build = lambda: dedup.minhash_lsh_candidates(docs, "doc_id", "text")
     elif op == "simhash":
-        cap = "SIMHASH_BROADCAST_MAX_ROWS"
         build = lambda: dedup.simhash_near_dups(docs, "doc_id", "text", max_hamming=6)
     else:
-        cap = "KEYED_BROADCAST_MAX_ROWS"
         cand = dedup.minhash_lsh_candidates(docs, "doc_id", "text").localCheckpoint()
         build = lambda: dedup.ngram_jaccard_verify(cand, docs, "doc_id", "text", 0.5)
     broadcast = build()
     assert "BroadcastHashJoin" in _plan(broadcast)
-    expected = broadcast.collect()
-    monkeypatch.setattr(dedup, cap, 0)
+    expected = sorted(broadcast.collect())
     threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         shuffled = build()
         plan = _plan(shuffled)
-        got = shuffled.collect()
+        got = sorted(shuffled.collect())
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
     assert "BroadcastHashJoin" not in plan and "SortMergeJoin" in plan
