@@ -3,9 +3,10 @@ extraction + readability analytics engine.
 
 Re-expresses the capabilities of the reference system
 (pixelmixer/readability-scanner, surveyed in SURVEY.md) as idiomatic
-Spark: DataFrame transforms, Arrow-vectorized pandas UDFs for the DOM
-work, pure Column expressions for every formula, and explicit
-partitioning/skew handling for 100 TB-scale runs.
+Spark: DataFrame transforms, one Arrow-vectorized pandas pass for the
+per-document DOM work, stats and scores, Column expressions for the
+SQL-side analytics, and explicit partitioning/skew handling for
+100 TB-scale runs.
 
 Layout:
     dom.py                  minimal DOM, one-pass regex tokenizer

@@ -53,6 +53,12 @@ def build_session(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         # reuse python workers across tasks (fork cost dominates small tasks)
         .config("spark.python.worker.reuse", "true")
+        # PySpark 4 records each Column / F.* call site for DataFrame error
+        # contexts: 4-5 extra Py4J calls, a stack walk and a failed
+        # `import IPython` per call, which doubled extract_and_score's
+        # construction time. Lost with it: the Python call site in a
+        # DataFrame error's context (the JVM message is unchanged)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")

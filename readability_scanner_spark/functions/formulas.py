@@ -5,11 +5,20 @@ Exact constants and guards from the reference
 sentences==0 or words==0 (Coleman-Liau only requires words>0, SMOG only
 sentences>0) and clamped >= 0; Flesch additionally clamped <= 100.
 
-Two bindings:
-  * pure-Python (golden generation + unit tests)
+Two bindings of one formula set:
+  * pure-Python — the production scorer. The fused pass
+    (functions/udfs.py::extract_stats_partition) appends the nine score
+    columns from each row's floored stats, so the flagship plan carries
+    no formula projection above its MapInPandas; goldens and the
+    single-document API use the same functions.
   * native Spark Column expressions (`with_readability_scores`) — the
-    production path: stats come out of the Arrow UDF once, every formula
-    stays JVM-side inside whole-stage codegen. No Python in the hot loop.
+    JVM reference the parity tests compare the Python scorer against,
+    and the binding for stats that already live in Spark columns.
+
+The Python forms keep the Column binding's operation order (left-assoc
+products, `greatest(raw, 0.0)` argument order, Dale–Chall's `+ 0.0`
+arm), so both bindings return bit-identical doubles
+(tests/test_formulas.py pins it).
 """
 
 from __future__ import annotations
@@ -21,36 +30,34 @@ from pyspark.sql import functions as F
 
 from readability_scanner_spark.functions.textstats import TextStatistics
 
-# --- pure-Python (goldens) -------------------------------------------------
+# --- pure-Python (production scorer, goldens, API) -------------------------
 
 
 def flesch_reading_ease(s: TextStatistics) -> float:
-    if s.sentences == 0 or s.words == 0:
+    if s.sentences <= 0 or s.words <= 0:
         return 0.0
-    score = 206.835 - 1.015 * (s.words / s.sentences) - 84.6 * (s.syllables / s.words)
-    return max(0.0, min(100.0, score))
+    raw = 206.835 - 1.015 * (s.words / s.sentences) - 84.6 * (s.syllables / s.words)
+    return min(max(raw, 0.0), 100.0)
 
 
 def flesch_kincaid_grade(s: TextStatistics) -> float:
-    if s.sentences == 0 or s.words == 0:
+    if s.sentences <= 0 or s.words <= 0:
         return 0.0
-    return max(0.0, 0.39 * (s.words / s.sentences) + 11.8 * (s.syllables / s.words) - 15.59)
+    return max(0.39 * (s.words / s.sentences) + 11.8 * (s.syllables / s.words) - 15.59, 0.0)
 
 
 def smog_index(s: TextStatistics) -> float:
-    if s.sentences == 0:
+    if s.sentences <= 0:
         return 0.0
-    return max(0.0, 1.0430 * math.sqrt(s.complex_polysyllabic_words * (30 / s.sentences)) + 3.1291)
+    return max(1.0430 * math.sqrt(s.complex_polysyllabic_words * (30.0 / s.sentences)) + 3.1291, 0.0)
 
 
 def dale_chall(s: TextStatistics) -> float:
-    if s.sentences == 0 or s.words == 0:
+    if s.sentences <= 0 or s.words <= 0:
         return 0.0
     pdw = (s.complex_polysyllabic_words / s.words) * 100
-    score = 0.1579 * pdw + 0.0496 * (s.words / s.sentences)
-    if pdw > 5:
-        score += 3.6365
-    return max(0.0, score)
+    raw = 0.1579 * pdw + 0.0496 * (s.words / s.sentences)
+    return max(raw + (3.6365 if pdw > 5 else 0.0), 0.0)
 
 
 def dale_chall_grade(score: float) -> str:
@@ -70,40 +77,42 @@ def dale_chall_grade(score: float) -> str:
 
 
 def coleman_liau(s: TextStatistics) -> float:
-    if s.words == 0:
+    if s.words <= 0:
         return 0.0
-    l = (s.characters / s.words) * 100
-    sp = (s.sentences / s.words) * 100
-    return max(0.0, 0.0588 * l - 0.296 * sp - 15.8)
+    raw = (
+        0.0588 * (s.characters / s.words) * 100
+        - 0.296 * (s.sentences / s.words) * 100
+        - 15.8
+    )
+    return max(raw, 0.0)
 
 
 def gunning_fog(s: TextStatistics) -> float:
-    if s.sentences == 0 or s.words == 0:
+    if s.sentences <= 0 or s.words <= 0:
         return 0.0
-    return max(
-        0.0,
-        0.4 * ((s.words / s.sentences) + (s.complex_polysyllabic_words / s.words) * 100),
-    )
+    return max(0.4 * ((s.words / s.sentences) + (s.complex_polysyllabic_words / s.words) * 100), 0.0)
 
 
 def spache(s: TextStatistics) -> float:
-    if s.sentences == 0 or s.words == 0:
+    if s.sentences <= 0 or s.words <= 0:
         return 0.0
-    return max(
-        0.0,
+    raw = (
         0.141 * (s.words / s.sentences)
         + 0.086 * (s.complex_polysyllabic_words / s.words) * 100
-        + 0.839,
+        + 0.839
     )
+    return max(raw, 0.0)
 
 
 def automated_readability(s: TextStatistics) -> float:
-    if s.sentences == 0 or s.words == 0:
+    if s.sentences <= 0 or s.words <= 0:
         return 0.0
-    return max(0.0, 4.71 * (s.characters / s.words) + 0.5 * (s.words / s.sentences) - 21.43)
+    return max(4.71 * (s.characters / s.words) + 0.5 * (s.words / s.sentences) - 21.43, 0.0)
 
 
 def all_scores(s: TextStatistics) -> dict[str, float | str]:
+    """The nine score fields, in the order of ``with_readability_scores``
+    and udfs.SCORES_SCHEMA."""
     dc = dale_chall(s)
     return {
         "flesch": flesch_reading_ease(s),
@@ -118,9 +127,9 @@ def all_scores(s: TextStatistics) -> dict[str, float | str]:
     }
 
 
-# --- Spark Column expressions ----------------------------------------------
-# All JVM-side; inputs are the stat columns produced by the stats UDF (or
-# by the pure-SQL columns in functions/columns.py).
+# --- Spark Column expressions (JVM reference) ------------------------------
+# All JVM-side; inputs are stat columns, e.g. the fused pass's stats or the
+# pure-SQL columns in functions/columns.py.
 
 
 def _guard(words: Column, sentences: Column, expr: Column) -> Column:

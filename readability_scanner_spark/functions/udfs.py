@@ -13,9 +13,15 @@ Fuses the reference's per-article stages into ONE pass
   shared DOM parse (reference round-trips HTTP per article instead,
   news-scanner/scanner/content_extractor.py:54-110), then T1–T7 text
   statistics on the extracted text
-  (news-scanner/readability/text_stats.py:136-201).
-EXTRACT_SCHEMA and STATS_SCHEMA are the one declaration of the pass's
-output columns; plans/pipeline.py builds its output schema from them.
+  (news-scanner/readability/text_stats.py:136-201), then F1–F9 from
+  those floored stats with the pure-Python formulas
+  (functions/formulas.py, bit-identical to their Column binding).
+  Scoring here costs a few µs per turn; the same formulas as Column
+  expressions above the MapInPandas would add a JVM projection and
+  ~1,100 Py4J calls of plan construction to every pass.
+EXTRACT_SCHEMA, STATS_SCHEMA and SCORES_SCHEMA are the one declaration
+of the pass's output columns; plans/pipeline.py builds its output
+schema from them.
 
 Failure policy: a row never throws — parse failures become
 parse_failed=True rows (the reference's 204/no-content path,
@@ -35,7 +41,8 @@ import pandas as pd
 # VERDICT; the modules are same-package pure python, no cycle)
 from readability_scanner_spark.extraction.pdf import extract_pdf, is_pdf
 from readability_scanner_spark.extraction.readability import extract_main_content
-from readability_scanner_spark.functions.textstats import calculate_text_statistics
+from readability_scanner_spark.functions.formulas import all_scores
+from readability_scanner_spark.functions.textstats import TextStatistics, calculate_text_statistics
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -74,9 +81,25 @@ STATS_SCHEMA = StructType(
     ]
 )
 
+# F1–F9 + grade bucket, named as formulas.all_scores keys them
+SCORES_SCHEMA = StructType(
+    [
+        StructField("flesch", DoubleType()),
+        StructField("flesch_kincaid", DoubleType()),
+        StructField("smog", DoubleType()),
+        StructField("dale_chall", DoubleType()),
+        StructField("dale_chall_grade", StringType()),
+        StructField("coleman_liau", DoubleType()),
+        StructField("gunning_fog", DoubleType()),
+        StructField("spache", DoubleType()),
+        StructField("automated_readability", DoubleType()),
+    ]
+)
+
 
 _EXTRACT_COLS = EXTRACT_SCHEMA.fieldNames()
 _STATS_COLS = STATS_SCHEMA.fieldNames()
+_SCORE_COLS = SCORES_SCHEMA.fieldNames()
 
 
 def extract_one(raw: str) -> tuple:
@@ -171,11 +194,15 @@ def stats_one(text: str) -> tuple:
 
 def extract_stats_partition(batches, passthrough: list[str]):
     """mapInPandas body: ONE python pass per partition doing extraction +
-    stats — avoids a second Arrow round trip for the stats stage."""
+    stats + scores — avoids a second Arrow round trip for the stats
+    stage and a JVM projection for the formulas. Output columns: the
+    passthrough ones, then EXTRACT_SCHEMA, STATS_SCHEMA, SCORES_SCHEMA."""
     n_ex, n_st = len(_EXTRACT_COLS), len(_STATS_COLS)
     for pdf in batches:
         ex = [extract_one(raw) for raw in pdf["text"]]
         st = [stats_one(e[1]) for e in ex]
+        # stats_one's tuple is TextStatistics' field order
+        sc = [all_scores(TextStatistics(*t)) for t in st]
         out = pd.DataFrame(
             {c: pdf[c].values for c in passthrough}
         )
@@ -186,5 +213,7 @@ def extract_stats_partition(batches, passthrough: list[str]):
             out[col] = ex_t[i]
         for i, col in enumerate(_STATS_COLS):
             out[col] = st_t[i]
+        for col in _SCORE_COLS:
+            out[col] = [d[col] for d in sc]
         yield out
 

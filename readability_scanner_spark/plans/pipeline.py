@@ -3,10 +3,12 @@
     read transcripts
       → explicit repartition on salted conv_id hash (skew-safe)
       → ONE fused mapInPandas pass (extraction + cleaning + dates +
-        image + T1–T7 stats in a single Arrow round trip — a chained
-        two-UDF plan would pay the Python transfer twice;
-        tests/test_plans.py asserts the single MapInPandas node)
-      → F1–F9 as native Column expressions (JVM, whole-stage codegen)
+        image + T1–T7 stats + F1–F9 scores in a single Arrow round
+        trip — a chained two-UDF plan would pay the Python transfer
+        twice, and Column formulas above the UDF would add a JVM
+        projection and its Py4J construction to every pass;
+        tests/test_plans.py asserts the single MapInPandas node with no
+        formula expression above it)
       → future-date clamp (reference rss_parser.py:166-172)
       → idempotent partition-bucket commit + _meta lineage/metrics row
 
@@ -40,7 +42,7 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark.sql.types import (
@@ -52,9 +54,9 @@ from pyspark.sql.types import (
 )
 
 from readability_scanner_spark.catalog import write_meta
-from readability_scanner_spark.functions.formulas import with_readability_scores
 from readability_scanner_spark.functions.udfs import (
     EXTRACT_SCHEMA,
+    SCORES_SCHEMA,
     STATS_SCHEMA,
     extract_stats_partition,
 )
@@ -64,7 +66,7 @@ SALT_SPAN = 1000  # turns per salt shard within one conversation
 _PASSTHROUGH = ["conv_id", "turn_idx", "role", "tool", "ts"]
 
 # the fused pass's output: the pass-through transcript columns, then the
-# extraction and stats columns in the order extract_stats_partition
+# extraction, stats and score columns in the order extract_stats_partition
 # appends them
 _SCORED_SCHEMA = StructType(
     [
@@ -76,6 +78,7 @@ _SCORED_SCHEMA = StructType(
     ]
     + EXTRACT_SCHEMA.fields
     + STATS_SCHEMA.fields
+    + SCORES_SCHEMA.fields
 )
 
 
@@ -97,10 +100,9 @@ def extract_and_score(df: DataFrame, repartition_to: int | None = None) -> DataF
     """transcripts(conv_id, turn_idx, role, text, tool, ts) → scored docs.
 
     One wide row per turn: extraction fields, stats, 8 scores + grade,
-    with the future-date clamp applied to ts. Extraction + stats run in
-    ONE fused mapInPandas pass (a single Arrow round trip per partition;
-    a chained two-UDF plan pays the Python transfer twice); formulas are
-    JVM Column expressions on top.
+    with the future-date clamp applied to ts. Extraction, stats and
+    scores run in ONE fused mapInPandas pass (a single Arrow round trip
+    per partition); on top of it only the clamps and the column order.
     """
     out = salted_repartition(df, repartition_to) if repartition_to != 0 else df
     out = out.mapInPandas(
@@ -108,18 +110,24 @@ def extract_and_score(df: DataFrame, repartition_to: int | None = None) -> DataF
         schema=_SCORED_SCHEMA,
     )
     now = F.current_timestamp()
-    out = out.withColumns(
-        {
-            # future-date clamps (reference rss_parser.py:166-172) — both
-            # the transcript ts AND the extracted publication date
-            # (dates.py defers this clamp to pipeline level)
-            "ts": F.when(F.col("ts") > now, now).otherwise(F.col("ts")),
-            "publication_date": F.when(
-                F.col("published_ts") > now, now
-            ).otherwise(F.col("published_ts")),
-        }
-    ).withColumnRenamed("text_content", "cleaned_data").drop("published_ts")
-    return with_readability_scores(out)
+
+    def clamp(name: str) -> Column:
+        # future-date clamp (reference rss_parser.py:166-172) — applied to
+        # the transcript ts AND the extracted publication date (dates.py
+        # defers this clamp to pipeline level)
+        return F.when(F.col(name) > now, now).otherwise(F.col(name))
+
+    return out.select(
+        *(clamp(c).alias(c) if c == "ts" else c for c in _PASSTHROUGH),
+        *(
+            F.col(c).alias("cleaned_data") if c == "text_content" else c
+            for c in EXTRACT_SCHEMA.fieldNames()
+            if c != "published_ts"
+        ),
+        *STATS_SCHEMA.fieldNames(),
+        clamp("published_ts").alias("publication_date"),
+        *SCORES_SCHEMA.fieldNames(),
+    )
 
 
 # ---------------------------------------------------------------------------

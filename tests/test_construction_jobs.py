@@ -98,3 +98,9 @@ def test_table_reader_keeps_ntz_apart_from_ltz(spark, tmp_path):
     assert [f.dataType.typeName() for f in got.schema] == ["timestamp_ntz", "timestamp", "array", "short"]
     assert sorted(got.collect()) == sorted(want.collect())
 
+
+def test_session_records_no_python_call_sites(spark):
+    """With DataFrame debugging on, every Column and ``F.*`` call makes
+    4-5 extra Py4J calls to record its Python call site; the session
+    turns it off."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"

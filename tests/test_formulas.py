@@ -3,6 +3,8 @@
 Column-expression binding."""
 
 import math
+import random
+import struct
 
 import pytest
 
@@ -81,24 +83,45 @@ def test_zero_guards():
         assert fn(zero) == 0.0
 
 
+def _stat_grid(n: int, seed: int) -> list[tuple]:
+    """Seeded STATS_SCHEMA tuples over the floored ranges the stats pass
+    emits (words, sentences >= 1), dense around the Dale–Chall pdw > 5
+    step and the grade buckets."""
+    rng = random.Random(seed)
+    rows = []
+    for _ in range(n):
+        words = rng.choice((rng.randint(1, 30), rng.randint(1, 5000)))
+        sentences = rng.randint(1, max(1, words // rng.randint(1, 25)))
+        syllables = rng.randint(words, 3 * words)
+        complex_words = rng.randint(0, rng.choice((words // 10, words)))
+        characters = rng.randint(words, 12 * words)
+        rows.append((words, sentences, 1, characters, syllables, syllables / words, complex_words))
+    return rows
+
+
+def _bits(v):
+    return struct.pack("<d", v) if isinstance(v, float) else v
+
+
 def test_column_binding_matches_python(spark):
+    """The fused pass scores with the Python formulas; the Column binding
+    is the JVM reference. Every double must match bit for bit."""
+    from readability_scanner_spark.functions.udfs import STATS_SCHEMA, stats_one
+
     rows = [
-        (100, 5, 480, 150, 12),
-        (1, 1, 3, 1, 0),
-        (77, 6, 414, 133, 18),
-        (10, 10, 20, 10, 0),
-    ]
-    df = spark.createDataFrame(
-        rows, "words long, sentences long, characters long, syllables long, complex_polysyllabic_words long"
-    )
-    out = formulas.with_readability_scores(df).collect()
+        (100, 5, 3, 480, 150, 1.5, 12),
+        (1, 1, 1, 3, 1, 1.0, 0),
+        (77, 6, 2, 414, 133, 133 / 77, 18),
+        (10, 10, 1, 20, 10, 1.0, 0),
+        (100, 5, 1, 480, 150, 1.5, 5),  # pdw == 5: no Dale–Chall step
+        stats_one(""),  # zero-text row
+        (1, 1, 1, 0, 1, 1.0, 0),  # stats_one's error sentinel
+    ] + _stat_grid(500, seed=15)
+    assert stats_one("") == (0, 0, 0, 0, 0, 0.0, 0)
+    out = formulas.with_readability_scores(spark.createDataFrame(rows, STATS_SCHEMA)).collect()
+    assert len(out) == len(rows)
     for row in out:
-        s = TextStatistics(
-            row.words, row.sentences, 0, row.characters, row.syllables,
-            row.syllables / row.words, row.complex_polysyllabic_words,
-        )
+        s = TextStatistics(*(row[f] for f in STATS_SCHEMA.fieldNames()))
         expected = formulas.all_scores(s)
-        for key in ("flesch", "flesch_kincaid", "smog", "dale_chall", "coleman_liau",
-                    "gunning_fog", "spache", "automated_readability"):
-            assert row[key] == pytest.approx(expected[key]), key
-        assert row.dale_chall_grade == expected["dale_chall_grade"]
+        for key, want in expected.items():
+            assert _bits(row[key]) == _bits(want), (key, s, row[key], want)

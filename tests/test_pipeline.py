@@ -3,11 +3,14 @@ parallelism levels, resumable _meta checkpointing (SURVEY.md §5.2)."""
 
 import json
 import os
+import struct
 
 import pytest
 from pyspark.sql import functions as F
 
 from readability_scanner_spark.extraction.readability import extract_main_content
+from readability_scanner_spark.functions.formulas import with_readability_scores
+from readability_scanner_spark.functions.udfs import SCORES_SCHEMA
 from readability_scanner_spark.operators.textquality import redact_pii_col
 from readability_scanner_spark.plans.pipeline import (
     committed_buckets,
@@ -53,6 +56,10 @@ SCORED_SCHEMA = (
 )
 
 
+def _bits(values) -> list:
+    return [struct.pack("<d", v) if isinstance(v, float) else v for v in values]
+
+
 def test_extract_and_score_end_to_end(spark, small_transcripts):
     out = extract_and_score(small_transcripts).cache()
     try:
@@ -64,6 +71,14 @@ def test_extract_and_score_end_to_end(spark, small_transcripts):
         row = ok.where(F.col("words") > 50).first()
         assert row.flesch >= 0.0 and row.dale_chall_grade
         assert row.cleaned_data and row.spans
+        # the fused pass's Python scores equal the JVM Column binding over
+        # the same stats, bit for bit
+        ref = with_readability_scores(out.drop(*SCORES_SCHEMA.fieldNames()))
+        key = ["conv_id", "turn_idx"]
+        got = {tuple(r[:2]): r[2:] for r in out.select(*key, *SCORES_SCHEMA.fieldNames()).collect()}
+        want = {tuple(r[:2]): r[2:] for r in ref.select(*key, *SCORES_SCHEMA.fieldNames()).collect()}
+        assert len(got) == total and got.keys() == want.keys()
+        assert all(_bits(got[k]) == _bits(want[k]) for k in got)
     finally:
         out.unpersist()
 

@@ -45,8 +45,10 @@ def test_topk_uses_take_ordered(spark):
 
 
 def test_formulas_stay_in_codegen(spark):
-    """F1-F9 must be JVM expressions inside WholeStageCodegen, not
-    python calls."""
+    """The Column binding of F1-F9 (the JVM reference the fused pass's
+    Python scorer is checked against, and the binding for stats already
+    in Spark columns) must be JVM expressions inside WholeStageCodegen,
+    not python calls."""
     from readability_scanner_spark.functions.formulas import with_readability_scores
 
     df = spark.createDataFrame(
@@ -82,6 +84,26 @@ def test_pipeline_single_python_stage(spark):
     # formatted output lists each node twice (tree + detail section)
     assert plan.count("MapInPandas") == 2
     assert "ArrowEvalPython" not in plan
+
+
+def test_pipeline_scores_inside_the_python_pass(spark):
+    """F1-F9 are computed in the fused pass: the optimized plan above the
+    single MapInPandas holds only the date clamps and the column order,
+    no score expression (a formula projection there costs a JVM pass
+    and its Py4J construction on every run)."""
+    from readability_scanner_spark.plans.pipeline import extract_and_score
+
+    src = spark.createDataFrame(
+        [("c", 0, "user", "<p>text</p>", None, None)],
+        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
+    )
+    node = extract_and_score(src, repartition_to=4)._jdf.queryExecution().optimizedPlan()
+    above = []  # every expression, untruncated, of the nodes above the UDF
+    while node.nodeName() != "MapInPandas":
+        above.append(node.expressions().mkString(" ").lower())
+        node = node.child()
+    assert "MapInPandas" not in node.child().treeString()
+    assert above and not any(f in e for e in above for f in ("sqrt", "greatest", "least"))
 
 
 def test_spread_reader_has_one_partition_per_core(spark):
