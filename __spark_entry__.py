@@ -917,13 +917,13 @@ def _scored_documents(spark, sf_dir: str) -> DataFrame:
     side and the materialized side cannot drift apart."""
     from readability_scanner_spark.plans.pipeline import extract_and_score
 
-    # spread=True: single-row-group parquet would otherwise put the whole
-    # per-row extraction ladder on ONE task
-    docs = _t(spark, sf_dir, "documents", spread=True)
+    # no spread=True: extract_and_score's own hash exchange spreads the
+    # one-task scan, so the query shuffles once
+    docs = _t(spark, sf_dir, "documents")
     transcripts = _docs_as_transcripts(
         docs, F.col("source"), F.to_timestamp(F.lit("2025-06-01 00:00:00"))
     )
-    return extract_and_score(transcripts, repartition_to=0)
+    return extract_and_score(transcripts)
 
 
 def _sidecar_version() -> str:

@@ -1,7 +1,7 @@
 """The flagship extraction pipeline (SURVEY.md §3.1 Spark shape).
 
     read transcripts
-      → explicit repartition on salted conv_id hash (skew-safe)
+      → repartition to one hash partition per core on (conv_id, turn_idx)
       → ONE fused mapInPandas pass (extraction + cleaning + dates +
         image + T1–T7 stats + F1–F9 scores in a single Arrow round
         trip — a chained two-UDF plan would pay the Python transfer
@@ -19,13 +19,13 @@ semaphore / stagger machinery disappears: there are no network calls
 inside the job.
 
 Scale design (north_rule):
-  * conv_id is the natural shuffle key; mega-conversations are salted
-    with turn_idx ranges so no single task owns a 10^7-turn conversation:
-    salt = turn_idx // SALT_SPAN → repartition(hash(conv_id, salt)).
-    Extraction is per-row, so salting changes no results — it only
-    flattens task sizes. Downstream per-conv aggregations re-aggregate
-    partials across salts (two-stage agg), which is cheap because
-    partials are tiny.
+  * extraction is per row, so the pass needs no co-location: it hashes
+    the unique (conv_id, turn_idx) key into an explicit partition count.
+    Rows spread evenly whatever the conversation sizes (a
+    10^7-turn conversation owns no task), the hash is deterministic
+    under retry, and an explicit count is never coalesced (AQE shrinks
+    an un-numbered repartition by shuffle bytes, down to one Python task
+    on a small input).
   * checkpoint/resume: the work unit is a deterministic conv bucket
     (pmod(hash(conv_id), n_buckets)). Each bucket commits its output
     under bucket=K/ and appends a _meta row (turns, parse failures, mean
@@ -61,8 +61,6 @@ from readability_scanner_spark.functions.udfs import (
     extract_stats_partition,
 )
 
-SALT_SPAN = 1000  # turns per salt shard within one conversation
-
 _PASSTHROUGH = ["conv_id", "turn_idx", "role", "tool", "ts"]
 
 # the fused pass's output: the pass-through transcript columns, then the
@@ -82,20 +80,6 @@ _SCORED_SCHEMA = StructType(
 )
 
 
-def salted_repartition(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """Explicit repartition on (conv_id, turn_idx // SALT_SPAN).
-
-    hash-partitioning on conv_id alone sends a mega-conversation's 10^7
-    turns to one task; the salt bounds any task's share of a single
-    conversation to SALT_SPAN turns while keeping normal conversations
-    (< SALT_SPAN turns) on a single partition.
-    """
-    salt = (F.col("turn_idx") / SALT_SPAN).cast("int").alias("_salt")
-    if num_partitions:
-        return df.repartition(num_partitions, F.col("conv_id"), salt)
-    return df.repartition(F.col("conv_id"), salt)
-
-
 def extract_and_score(df: DataFrame, repartition_to: int | None = None) -> DataFrame:
     """transcripts(conv_id, turn_idx, role, text, tool, ts) → scored docs.
 
@@ -103,9 +87,17 @@ def extract_and_score(df: DataFrame, repartition_to: int | None = None) -> DataF
     with the future-date clamp applied to ts. Extraction, stats and
     scores run in ONE fused mapInPandas pass (a single Arrow round trip
     per partition); on top of it only the clamps and the column order.
+
+    The input is hash-repartitioned on (conv_id, turn_idx) into
+    ``repartition_to`` partitions, by default one per core
+    (``defaultParallelism``): a Python task has a fixed cost, so more
+    tasks than cores only add it.
     """
-    out = salted_repartition(df, repartition_to) if repartition_to != 0 else df
-    out = out.mapInPandas(
+    out = df.repartition(
+        repartition_to or df.sparkSession.sparkContext.defaultParallelism,
+        F.col("conv_id"),
+        F.col("turn_idx"),
+    ).mapInPandas(
         lambda batches: extract_stats_partition(batches, _PASSTHROUGH),
         schema=_SCORED_SCHEMA,
     )

@@ -10,8 +10,8 @@ Scale-minded generation (FIXTURES.md §1 requirements):
     never collected on the driver, so the same generator works at
     sf0.001 for tests and (on a real cluster) at 10^9 conversations.
   * heavy conversation-size skew: ~97% of convs draw 2–20 turns,
-    ~3% draw 100–400 turns ("mega-conversations") — exercises the
-    salting path in plans/pipeline.py.
+    ~3% draw 100–400 turns ("mega-conversations") — plans/pipeline.py's
+    per-turn hash repartition must spread them evenly.
   * ts monotone per conversation; ~1% future-dated rows (tests the
     future-date clamp, reference news-scanner/scanner/rss_parser.py:166-172).
 """

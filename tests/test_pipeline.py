@@ -95,7 +95,7 @@ def test_udf_matches_pure_python_goldens(spark):
     df = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
     )
-    out = extract_and_score(df, repartition_to=0).orderBy("turn_idx").collect()
+    out = extract_and_score(df).orderBy("turn_idx").collect()
     for got, g in zip(out, goldens):
         assert got.cleaned_data == g["text_content"], (g["cls"], g["seed"])
         assert got.parse_failed == g["parse_failed"]
@@ -130,7 +130,7 @@ def test_future_ts_clamped(spark):
         [("c", 0, "user", "<p>Hello world, text here.</p>", None, "2099-01-01 00:00:00")],
         "conv_id string, turn_idx int, role string, text string, tool string, ts string",
     ).withColumn("ts", F.col("ts").cast("timestamp"))
-    row = extract_and_score(df, repartition_to=0).first()
+    row = extract_and_score(df).first()
     assert row.ts.year < 2099
 
 
@@ -166,22 +166,26 @@ def test_meta_metrics_recorded(spark, small_transcripts, tmp_path):
         assert m["committed_at"]
 
 
-def test_salted_repartition_splits_mega_conversations(spark):
-    """A mega-conversation must spread across multiple partitions
-    (SALT_SPAN-bounded tasks), while salting never changes results."""
-    from readability_scanner_spark.plans.pipeline import salted_repartition
-
-    rows = [("mega", i, "user", "<p>x</p>", None, None) for i in range(5000)]
+@pytest.mark.parametrize("mega", [[5000], [2500, 2500]], ids=["one_key", "two_keys"])
+def test_mega_conversations_spread_evenly(spark, mega):
+    """One or two mega-conversations beside 40 five-turn ones: the pass's
+    per-turn hash gives every core one partition of an even share of the
+    rows, whatever the conversation sizes (a conv_id hash puts a mega
+    conversation on one task; an un-numbered repartition is coalesced by
+    AQE to one task at this input size)."""
+    rows = [
+        (f"mega{k}", i, "user", "<p>x</p>", None, None) for k, n in enumerate(mega) for i in range(n)
+    ] + [(f"c{c}", i, "user", "<p>x</p>", None, None) for c in range(40) for i in range(5)]
     df = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
     )
-    parts = (
-        salted_repartition(df, 32)
-        .select(F.spark_partition_id().alias("pid"))
-        .distinct()
-        .count()
-    )
-    assert parts >= 4  # 5000 turns / SALT_SPAN=1000 -> 5 salt shards
+    counts = [
+        r["count"]
+        for r in extract_and_score(df).groupBy(F.spark_partition_id().alias("pid")).count().collect()
+    ]
+    assert len(counts) == spark.sparkContext.defaultParallelism
+    assert sum(counts) == len(rows)
+    assert max(counts) <= 1.1 * len(rows) / len(counts)
 
 
 def test_pipeline_optional_pii_redaction(spark):
@@ -195,7 +199,7 @@ def test_pipeline_optional_pii_redaction(spark):
     df = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
     )
-    scored = extract_and_score(df, repartition_to=0)
+    scored = extract_and_score(df)
     clean = scored.withColumn(
         "cleaned_data", redact_pii_col(F.col("cleaned_data"))
     ).first()

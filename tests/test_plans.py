@@ -3,6 +3,8 @@ actually appear in the plan (predicate pushdown, column pruning,
 broadcast joins, top-k without full sort, whole-stage codegen).
 A plan regression here is a scale bug even when results stay correct."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -73,17 +75,31 @@ def test_sql_text_stats_has_no_python(spark):
 def test_pipeline_single_python_stage(spark):
     """The fused pipeline must contain exactly one python eval node
     (FlatMapGroupsInPandas/MapInPandas) — a second one means the
-    extract/stats fusion regressed."""
+    extract/stats fusion regressed. Its input is hash-partitioned on the
+    per-turn key into one partition per core, not into
+    spark.sql.shuffle.partitions (8 in the test session, 4 cores), and
+    the flagship query reaches it through that one exchange alone: a
+    round-robin spread of the scan below it would be a second shuffle."""
+    import __spark_entry__ as entry
     from readability_scanner_spark.plans.pipeline import extract_and_score
 
     src = spark.createDataFrame(
         [("c", 0, "user", "<p>text</p>", None, None)],
         "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
     )
-    plan = _plan(extract_and_score(src, repartition_to=4))
+    plan = _plan(extract_and_score(src))
     # formatted output lists each node twice (tree + detail section)
     assert plan.count("MapInPandas") == 2
     assert "ArrowEvalPython" not in plan
+    cores = spark.sparkContext.defaultParallelism
+    assert cores != int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert re.search(rf"hashpartitioning\(conv_id#\d+, turn_idx#\d+, {cores}\)", plan)
+
+    flagship = _plan(entry.q_flagship_extract(spark, SF))
+    tree = flagship.split("\n\n")[0]
+    below_udf = tree[tree.index("MapInPandas"):]
+    assert below_udf.count("Exchange") == 1
+    assert "RoundRobinPartitioning" not in flagship
 
 
 def test_pipeline_scores_inside_the_python_pass(spark):
